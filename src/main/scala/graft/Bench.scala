@@ -31,12 +31,7 @@ object Bench {
       // conf is scale-neutral: AQE coalesces toward
       // advisoryPartitionSizeInBytes, so TB-scale caches keep their
       // parallelism; only near-empty partitions collapse.
-      // SPARK_GRAFT_CACHE_AQE: measurement knob for A/B probes ONLY
-      // (r19, VERDICT r18 item 7 — quantify this conf at g1). Unset =
-      // "true" = the shipped r18 behavior; the driver sets nothing,
-      // so its runs are byte-identical to r18's.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // SPARK_GRAFT_EXTRA_SQLCONF="k=v;k=v": measurement passthrough
       // for conf A/B probes (r19) — applied at builder time so static
       // confs work too. Unset (the driver sets nothing) = zero effect.

@@ -28,9 +28,11 @@ object SparkEntry {
     * ~15% of the round-1 bench while the pure-DataFrame banding variant
     * produces an oracle-checked superset of the signal at ~1/6 the cost
     * (round-1 verdict, perf item 1). It remains recall-asserted in
-    * OperatorSuite. q_sim_ivfpq_ann builds the persisted IvfPqIndex
-    * inline — its time is the index BUILD (a maintenance job, not a
-    * query); the probe path and recall are suite-pinned (IvfPqSuite).
+    * OperatorSuite. q_sim_ivfpq_ann builds the persisted IvfIndex
+    * (Pq cell encoding; the index has one lifecycle for its Flat and
+    * Pq encodings) inline — its time is the index BUILD (a maintenance
+    * job, not a query); the probe path and recall are suite-pinned
+    * (IvfIndexSuite).
     * q_sim_graph_ann (r13) is the same class: it builds the whole
     * NN-descent neighbor graph inline (LSH seeding + refinement +
     * eager checkpoints) before searching — an offline index job;

@@ -25,7 +25,7 @@ object Tables {
     * inference — guide §6). Keyed by path + the two session confs
     * that change what a timestamp column infers as (Tables.events'
     * nanos/NTZ recipe), so differently-configured sessions can never
-    * alias. Capped like dfGuardMemo; assumes fixture paths are
+    * alias. Capped at 256 entries; assumes fixture paths are
     * immutable within a JVM (regenerating data under the SAME path
     * needs a new JVM — same documented staleness class as the file
     * status cache itself). */
@@ -34,11 +34,6 @@ object Tables {
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // SPARK_GRAFT_NO_SCHEMA_MEMO: measurement knob for A/B probes ONLY
-    // (r19, VERDICT r18 item 7 — quantify the memo at g1). Unset =
-    // memo on = the shipped r18 behavior.
-    if (sys.env.contains("SPARK_GRAFT_NO_SCHEMA_MEMO"))
-      return spark.read.parquet(path)
     val key = path +
       "|" + spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") +
       "|" + spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")

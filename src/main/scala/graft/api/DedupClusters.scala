@@ -91,17 +91,9 @@ object DedupClusters {
       .select(col("src").as("doc_id"),
         least(col("src"), col("_mn")).as("cluster"))
       .localCheckpoint(true)
-    // Per-round instrumentation (VERDICT r14 #2): rounds-vs-scale is
-    // the open question for the 11.0x second-decade ratio — if rounds
-    // grow with data the cost is label convergence, if they stay flat
-    // it's the edge join (≈ linear). GRAFT_CC_LOG=1 emits one stderr
-    // line per round (round index, labels still moving, seconds) so a
-    // probe run can decompose the decade without touching the plan.
-    val ccLog = sys.env.contains("GRAFT_CC_LOG")
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIters) {
-      val tRound = System.nanoTime()
       // min neighbor label per node: one edge-list join + one agg
       val neighborMin = edges
         .join(labels.select(col("doc_id").as("dst"), col("cluster").as("_nc")), "dst")
@@ -130,8 +122,6 @@ object DedupClusters {
       // join + checkpoint job per call at every scale (r18 opt round).
       joined.unpersist()
       iter += 1
-      if (ccLog) System.err.println(
-        f"[cc] round=$iter changed=$changed t=${(System.nanoTime() - tRound) / 1e9}%.2fs")
     }
     edges.unpersist()
     if (changed > 0)

@@ -3,20 +3,20 @@ package graft.api
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Product-quantization ANN index — the memory-bounded encoding that
-  * makes billion-vector search feasible: each d-dim float vector is
-  * stored as `m` BYTE-PACKED codes (one byte per contiguous subspace,
-  * k ≤ 256 centroids each), shrinking d×4 bytes to m bytes — 64-dim
-  * float32 → 8 bytes, a 32× reduction, whether k is 16 or the full
-  * 256 (so k=256's 16× finer codebooks are FREE storage-wise; the
-  * suite pins that its recall dominates k=16). Queries run ADC
-  * (asymmetric distance computation): the query stays exact, each
-  * corpus vector's distance is approximated as the sum of
-  * per-subspace distances between the query sub-vector and the corpus
-  * code's centroid — a table lookup.
+/** Product-quantization encoder behind [[IvfIndex]]'s `Pq` cell
+  * encoding — the memory-bounded representation that makes
+  * billion-vector search feasible: each d-dim float vector is stored
+  * as `m` BYTE-PACKED codes (one byte per contiguous subspace, k ≤ 256
+  * centroids each), shrinking d×4 bytes to m bytes — 64-dim float32 →
+  * 8 bytes, a 32× reduction, whether k is 16 or the full 256 (so
+  * k=256's 16× finer codebooks are FREE storage-wise; the suite pins
+  * that its recall dominates k=16). Queries run ADC (asymmetric
+  * distance computation): the query stays exact, each corpus vector's
+  * distance is approximated as the sum of per-subspace distances
+  * between the query sub-vector and the corpus code's centroid — a
+  * table lookup.
   *
   * Spark-first shape:
   *  - codebooks: m independent KMeans fits on a deterministic
@@ -28,30 +28,12 @@ import org.apache.spark.sql.functions._
   *    millions of corpus rows — is the native codegen
   *    [[graft.functions.PqAdc]] expression (Spark has no HOFs over
   *    binary; unpacking to array<int> at scan time would undo the
-  *    packing), no UDF;
-  *  - shortlist → EXACT re-rank: ADC keeps the top `shortlist`
-  *    candidates per query, which join back to the true vectors for
-  *    an exact cosine re-rank (`fvec_dot`) — the standard PQ
-  *    pipeline. At 100 TB this composes with [[IvfIndex]] (IVF-PQ):
-  *    cell partition pruning picks the lists, PQ codes keep them
-  *    RAM-resident, exact re-rank touches only the shortlist.
+  *    packing), no UDF.
+  *
+  * Codebooks are (subspace, code, center) rows, sorted by
+  * (subspace, code).
   */
 object PqIndex {
-
-  /** Codebooks and codes are one CONSISTENT pair: both live under a
-    * versioned `v<N>` dir committed by [[Versioned]]'s marker file
-    * written after both parquet writes finish. Readers resolve the
-    * highest committed version, so a crashed/in-progress rebuild is
-    * invisible and new codebooks can never be paired with old codes
-    * (ADC against the wrong codebook returns silently wrong
-    * distances — the failure mode this layout exists to prevent).
-    */
-  private def codebooksPath(vdir: String) = s"$vdir/codebooks"
-  private def codesPath(vdir: String) = s"$vdir/codes"
-
-  private def currentVersionDir(spark: SparkSession, indexDir: String): String =
-    Versioned.current(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no committed PQ index under $indexDir"))
 
   /** Train the `m` per-subspace codebooks on `train` (already
     * sample-gated by the caller): `m` small, independent KMeans fits
@@ -98,106 +80,24 @@ object PqIndex {
     * constant subvectors): those code slots are unreferenced by any
     * encoded vector, so any finite filler value is correct.
     */
-  private[api] def lutUdf(books: Map[(Int, Int), Array[Double]],
-      m: Int, k: Int, sub: Int) =
+  private[api] def lutUdf(books: Seq[(Int, Int, Seq[Double])],
+      m: Int, k: Int, sub: Int) = {
+    val byCode = books.map { case (j, c, cen) => (j, c) -> cen.toArray }.toMap
     udf((a: Seq[Float]) =>
       (0 until m).flatMap { j =>
         val v = a.slice(j * sub, (j + 1) * sub).map(_.toDouble).toArray
         (0 until k).map { c =>
-          books.get((j, c)).fold(Double.MaxValue) { cen =>
+          byCode.get((j, c)).fold(Double.MaxValue) { cen =>
             var d = 0.0; var i = 0
             while (i < v.length) { val t = v(i) - cen(i); d += t * t; i += 1 }
             d
           }
         }
       })
+  }
 
-  private[api] def loadBooks(spark: SparkSession, path: String): Map[(Int, Int), Array[Double]] =
+  private[api] def loadBooks(spark: SparkSession, path: String): Seq[(Int, Int, Seq[Double])] =
     spark.read.parquet(path).collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray)).toMap
-
-  /** Train per-subspace codebooks and encode the corpus.
-    * `embeddings` needs (vec_id: long, embedding: array<float>); d
-    * must be divisible by `m`.
-    */
-  def build(spark: SparkSession, embeddings: DataFrame, indexDir: String,
-      m: Int = 8, k: Int = 16, seed: Long = 42L,
-      trainSampleMod: Int = 1): Unit = {
-    require(m > 0 && k > 1 && k <= 256,
-      s"need m > 0, 1 < k <= 256 (byte-packed codes) (got $m, $k)")
-    val sess = spark
-    import sess.implicits._
-    val dim = embeddings.select(size(col("embedding"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val train =
-      if (trainSampleMod == 1) embeddings
-      else embeddings.filter(pmod(hash(col("vec_id")), lit(trainSampleMod)) === 0)
-    val books = trainBooks(train, m, k, sub, seed)
-    val encode = encodeUdf(books, m, sub)
-    Versioned.publish(spark, indexDir) { vdir =>
-      books.toDF("subspace", "code", "center")
-        .repartition(1).write.mode("overwrite").parquet(codebooksPath(vdir))
-      // encode: one linear pass; marker lands AFTER both writes so the
-      // version becomes visible atomically
-      embeddings.select(col("vec_id"), encode(col("embedding")).as("codes"))
-        .write.mode("overwrite").parquet(codesPath(vdir))
-    }
-  }
-
-  /** Top-k cosine neighbors per query via ADC shortlist + exact
-    * re-rank. `queries` needs (qid, embedding); `corpus` must be the
-    * ORIGINAL embeddings table (vec_id, embedding) for the exact
-    * re-rank step. Returns (qid, rn, nid, cos_sim), self-matches
-    * excluded.
-    */
-  /** @param restrictTo optional (vec_id) set limiting the ADC scan —
-    *        the IVF-PQ hook: pass the probed cells' members from an
-    *        [[IvfIndex]] and the linear ADC scan shrinks to the
-    *        inverted lists a query actually probes.
-    */
-  def query(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
-      indexDir: String, topK: Int = 5, shortlist: Int = 50,
-      restrictTo: Option[DataFrame] = None): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
-    graft.functions.PqAdc.register(spark)
-    val vdir = currentVersionDir(spark, indexDir)
-    val books = loadBooks(spark, codebooksPath(vdir))
-    val m = books.keys.map(_._1).max + 1
-    val k = books.keys.map(_._2).max + 1
-    val sub = books((0, 0)).length
-    val q = queries.select(col("qid"), col("embedding").as("qe"))
-      .withColumn("lut", lutUdf(books, m, k, sub)(col("qe")))
-    val codesAll = spark.read.parquet(codesPath(vdir))
-    val codes = restrictTo.fold(codesAll)(ids =>
-      codesAll.join(ids.select(col("vec_id")), Seq("vec_id"), "left_semi"))
-    // ADC hot loop over every (query, corpus) pair: the native codegen
-    // pq_adc expression over the byte-packed codes (k inferred from
-    // |lut|/|codes|). No UDF touches the corpus-sized side. An index
-    // persisted by the pre-byte-packing code stores codes as
-    // array<int> — same values, wider layout — and still answers via
-    // the equivalent HOF fold (same fold order, bit-identical sums);
-    // re-`build` to get the packed layout.
-    val adcExpr = codesAll.schema("codes").dataType match {
-      case org.apache.spark.sql.types.BinaryType => expr("pq_adc(codes, lut)")
-      case _ => expr(
-        s"aggregate(transform(codes, (c, j) -> lut[j * $k + c]), 0D, (acc, x) -> acc + x)")
-    }
-    val adc = codes.crossJoin(broadcast(q))
-      .withColumn("adc_dist", adcExpr)
-      .filter(col("qid") =!= col("vec_id"))
-      .withColumn("_sr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("adc_dist"), col("vec_id"))))
-      .filter(col("_sr") <= shortlist)
-      .select(col("qid"), col("qe"), col("vec_id").as("nid"))
-    // exact re-rank of the shortlist only
-    adc.join(corpus.select(col("vec_id").as("nid"), col("embedding").as("ne")), "nid")
-      .select(col("qid"), col("nid"),
-        round(expr("fvec_dot(qe, ne)"), 6).as("cos_sim"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid"))))
-      .filter(col("rn") <= topK)
-      .select(col("qid"), col("rn"), col("nid"), col("cos_sim"))
-      .orderBy("qid", "rn")
-  }
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
+      .toSeq.sortBy(t => (t._1, t._2))
 }

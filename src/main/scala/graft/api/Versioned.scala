@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   * gate readability. The version BEFORE the new one is retained for
   * in-flight readers; older ones are GC'd at publish.
   *
-  * Shared by [[IvfIndex]] (centroids), [[PqIndex]] (codebooks+codes)
-  * and [[IvfPqIndex]] (centroids+codebooks as one consistent pair).
+  * Shared by [[IvfIndex]] (centroids, codebooks, cell encoding and
+  * cells dir as one consistent meta version) and [[NeighborGraphAnn]]
+  * (edges+vectors).
   */
 private[api] object Versioned {
 

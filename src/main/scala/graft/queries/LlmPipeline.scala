@@ -220,8 +220,9 @@ object LlmPipeline {
 
   // ---- #87 q_sim_ivfpq_ann (no oracle — kmeans codebooks seed-specific) ---
   // The fused IVF-PQ lifecycle as a driver-visible query: build the
-  // persisted index (PQ codes stored INSIDE each IVF cell partition,
-  // graft.api.IvfPqIndex) in a scratch dir, then probe it — the probe
+  // persisted index (graft.api.IvfIndex in its Pq cell encoding — PQ
+  // codes stored INSIDE each IVF cell partition) in a scratch dir,
+  // then probe it — the probe
   // reads only nProbe cells' byte-packed code columns plus the
   // shortlist's embeddings. Seeded → deterministic. benchExcluded:
   // the timing would be dominated by the index BUILD (a maintenance
@@ -230,11 +231,11 @@ object LlmPipeline {
   val qSimIvfpqAnn: Q = (s, dir) => {
     val idx = java.nio.file.Files.createTempDirectory("ivfpq_q")
     val result = try {
-      graft.api.IvfPqIndex.build(s, Tables.embeddings(s, dir), idx.toString,
-        kCells = 16, m = 8, kSub = 16, seed = 42L)
+      graft.api.IvfIndex.build(s, Tables.embeddings(s, dir), idx.toString,
+        kCells = 16, encoding = graft.api.IvfIndex.Pq(m = 8, kSub = 16), seed = 42L)
       val probes = Tables.embeddings(s, dir).filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("embedding"))
-      graft.api.IvfPqIndex.query(s, probes, idx.toString, nProbe = 4, topK = 5)
+      graft.api.IvfIndex.query(s, probes, idx.toString, nProbe = 4, topK = 5)
         .collect() // topK x |probes| rows — tiny; lets the scratch index go
     } finally {
       // the scratch index is corpus-sized — repeated verify runs must

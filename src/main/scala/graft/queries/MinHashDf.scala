@@ -18,9 +18,9 @@ import graft.Tables
   * full oracle. It is also the 100 TB shape: one corpus pass for
   * signatures, band join ~linear in docs, exact distances only on
   * candidates. In particular the banding is df-INDEPENDENT — on a
-  * df-saturated corpus (where [[graft.queries.PipelineExtras.dfCostGuard]]
-  * fires on the exact rows #62/#109), rows #71/#138 here are the
-  * declared scale paths (measured ~linear at 10×, BASELINE.md).
+  * df-saturated corpus (where the exact inverted-index rows #62/#109
+  * are Σ df²-bound), rows #71/#138 here are the declared scale paths
+  * (measured ~linear at 10×, BASELINE.md).
   *
   * Overflow safety (both engines use signed 64-bit): shingles are
   * carried as a 60-bit md5 prefix (15 hex digits, r15 — compact

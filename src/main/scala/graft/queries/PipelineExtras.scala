@@ -15,7 +15,7 @@ import graft.Tables
   * (integer scores) or produced by one deterministic arithmetic step
   * before round().
   */
-object PipelineExtras extends org.apache.spark.internal.Logging {
+object PipelineExtras {
   type Q = (SparkSession, String) => DataFrame
 
   /** Per-word 32-bit hash: first 8 hex digits of md5 — engine-portable
@@ -44,35 +44,16 @@ object PipelineExtras extends org.apache.spark.internal.Logging {
   private def shingleKey = xxhash64(col("sh"))
 
   /** Attaches `df` (document frequency per 64-bit shingle key) to
-    * every posting row. Two value-identical shapes behind an internal
-    * probe conf (`spark.graft.ngram.dfShape`, default the shipped
-    * shape; nothing in Bench/Verify sets it):
-    *  - "window": one count-over-partition window — the full postings
-    *    (shingle string included, the ORDER-BY sites need it) cross
-    *    one shh exchange, and the cached result comes out
-    *    hash-partitioned by shh, which the downstream shh self-joins
-    *    can reuse under cached-plan AQE.
-    *  - "agg": a compact (shh, df) table via groupBy — partial
-    *    map-side aggregation shuffles only distinct keys — joined
-    *    back (broadcast under AQE when the vocabulary fits, the same
-    *    shh-keyed shuffle join as the window beyond that).
-    * Inner join loses no rows (every posting's shh is in the
-    * aggregate by construction); df values are identical counts.
-    * A third probe value, "windownc", keeps the window shape but
-    * skips the cache: AQE's ReuseExchange dedups the identical shh
-    * exchange across the consumers, each of which re-runs only the
-    * post-exchange window compute — no cold-cache race at all.
-    * The helper owns the cache decision, so call sites do not add
-    * their own .cache(). */
+    * every posting row with one count-over-partition window: the full
+    * postings (shingle string included, the ORDER-BY sites need it)
+    * cross one shh exchange, and the cached result comes out
+    * hash-partitioned by shh, which the downstream shh self-joins can
+    * reuse under cached-plan AQE. (A groupBy + join-back shape and an
+    * uncached window were measured and rejected in r19 — see
+    * OPTIMIZATION_r19.md.) The helper owns the cache decision, so call
+    * sites do not add their own .cache(). */
   private def withShingleDf(sh: DataFrame): DataFrame =
-    sh.sparkSession.conf.getOption("spark.graft.ngram.dfShape") match {
-      case Some("agg") =>
-        sh.join(sh.groupBy(col("shh")).agg(count(lit(1)).as("df")), "shh").cache()
-      case Some("windownc") =>
-        sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("shh"))))
-      case _ =>
-        sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("shh")))).cache()
-    }
+    sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("shh")))).cache()
   private val DUCK_WORD_HASH =
     """CAST(list_sum(list_transform(generate_series(1, 8),
       |  i -> (CAST(strpos('0123456789abcdef', substring(md5(word), i, 1)) AS BIGINT) - 1)
@@ -201,81 +182,6 @@ object PipelineExtras extends org.apache.spark.internal.Logging {
     * cap, so the rows stay fully hash-checked. */
   val NGRAM_POSTING_DF_CAP = 200L
 
-  /** Guard threshold for [[dfCostGuard]]: estimated candidate pairs
-    * per unique document above which the exact inverted-index rows
-    * are declared df-saturated. Calibrated against the fixtures: the
-    * driver corpora (zipfian-ish vocabulary, sf0.001–0.1) sit well
-    * under it; the 10× GenScale corpus (trigram vocabulary saturated
-    * — 29,769 of 29,791 shingles hot, where the r13 probe PROVED no
-    * df cap can bind) sits well over. */
-  val DF_GUARD_CAND_PER_DOC = 512L
-
-  /** r14 pre-flight Σ df² cost guard (VERDICT r13 Next-round #5).
-    *
-    * Before the inverted-index joins of [[containmentPairsUnique]] /
-    * [[jaccardPairsUnique]] enumerate candidates, ONE cheap aggregate
-    * over the (already-computed, cached) postings estimates the
-    * candidate-pair volume those joins are about to pay:
-    * Σ_sh c·(c−1)/2 with c = min(df, [[NGRAM_POSTING_DF_CAP]]) — an
-    * upper bound on capped equi-join output. When the estimate
-    * exceeds [[DF_GUARD_CAND_PER_DOC]] × corpus size, the corpus is
-    * df-saturated (generic shingles shared corpus-wide) and the EXACT
-    * rows are the wrong tool: the guard logs a warning routing the
-    * caller to the df-INDEPENDENT banded scale paths —
-    * [[graft.queries.MinHashDf]] rows #71 `q_dedup_minhash_df`
-    * (Jaccard regime) and #138 `q_dedup_contain_minhash` (containment
-    * regime), both measured ~linear at 10×. The guard itself costs
-    * O(postings) — one groupBy on a frame the pipeline shuffles
-    * anyway, reduced to two scalars — never pairs, and it changes no
-    * output (routing advice, not behavior: the exact result is still
-    * computed and still exact).
-    *
-    * Memoized per input (r15, VERDICT r14 #7): the estimate is pure in
-    * the postings frame, so it is cached keyed by the CANONICALIZED
-    * logical plan of `sh` — same corpus path + same shingling ⇒ same
-    * canonical plan ⇒ repeated pipeline runs in a session skip the
-    * two aggregates entirely (the warning still re-logs on every
-    * guarded invocation, so the routing advice cannot go quiet). The
-    * key is the canonicalized plan OBJECT under structural equality
-    * (r16, ADVICE r15 #5 — the earlier hashCode key could silently
-    * return another corpus's estimate on a collision; the full plan
-    * STRING is no better, since a LocalRelation prints only its
-    * schema and two in-memory corpora would alias): LogicalPlan
-    * equality is exact, so collisions are impossible by construction.
-    * The map is capped at 64 entries so a long-lived session scanning
-    * many corpora cannot grow it unboundedly. The memo assumes corpus
-    * paths are immutable within a session: regenerating data under
-    * the SAME path keeps the same canonical plan and returns the
-    * stale estimate (advice only — never output).
-    *
-    * @return (estimated candidate pairs, unique docs, fired) */
-  private val dfGuardMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, (Long, Long, Boolean)]()
-  private[graft] def dfCostGuard(sh: DataFrame, label: String): (Long, Long, Boolean) = {
-    val key = sh.queryExecution.logical.canonicalized
-    val res = dfGuardMemo.get(key) match {
-      case r if r != null => r
-      case _ =>
-        val est = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .agg(sum(expr(
-            s"CAST(least(df, $NGRAM_POSTING_DF_CAP) * (least(df, $NGRAM_POSTING_DF_CAP) - 1) / 2 AS BIGINT)"))
-            .as("cand"))
-          .head.get(0) match { case null => 0L; case v => v.asInstanceOf[Long] }
-        val nDocs = sh.agg(countDistinct(col("doc_id"))).head.getLong(0)
-        val fired = nDocs > 0 && est > DF_GUARD_CAND_PER_DOC * nDocs
-        val r = (est, nDocs, fired)
-        if (dfGuardMemo.size < 64) dfGuardMemo.put(key, r)
-        r
-    }
-    if (res._3) logWarning(
-      s"$label: df-saturated corpus — estimated ~${res._1} candidate pairs over " +
-        s"${res._2} unique docs (> $DF_GUARD_CAND_PER_DOC/doc). The exact " +
-        "inverted-index join is Σ df²-bound here; prefer the df-independent " +
-        "banded scale paths: q_dedup_minhash_df (#71, Jaccard) / " +
-        "q_dedup_contain_minhash (#138, containment).")
-    res
-  }
-
   /** Exact-duplicate collapse: assigns every doc (≥ 3 words — the
     * shingling domain) its cluster's representative `uid` = min
     * doc_id over identical texts. Returns (memb: doc_id → uid, urep:
@@ -298,29 +204,18 @@ object PipelineExtras extends org.apache.spark.internal.Logging {
     val d0 = docs
       .filter(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"), col("text"))
-    val withUid0 = d0
+    val withUid = d0
       .select(col("doc_id"), md5(col("text")).as("_tk"))
       .withColumn("uid", min(col("doc_id")).over(Window.partitionBy(col("_tk"))))
       .select(col("doc_id"), col("uid"))
-    val withUid = if (docs.sparkSession.conf
-        .getOption("spark.graft.ngram.collapseCache").contains("off")) withUid0
-    else withUid0
       // cache(), not localCheckpoint(lazy) (r18 optimization round,
       // reversing the ADVICE-r13 shape): the lazy checkpoint creates a
-      // fresh RDD per invocation, which (a) poisoned dfCostGuard's
-      // canonical-plan memo downstream — every construction of the
-      // jaccard/containment rows re-ran the guard's two aggregate
-      // jobs over the shingle pipeline, measured 2.3 s (jaccard) /
-      // 1.5 s (containment) of per-invocation construction time —
-      // and (b) is invisible to CacheManager dedup. cache() keeps the
-      // logical plan PURE (stable canonicalization ⇒ memo hits) and
-      // repeated invocations REUSE one entry per corpus (CacheManager
-      // dedups by canonical plan — the "ever-growing cache" the r13
-      // advice feared does not occur; the entry is memb-sized, and
-      // sessions that want it gone still get it via clearCache()).
-      // Probe conf spark.graft.ngram.collapseCache=off skips the cache
-      // (ReuseExchange then dedups the md5-window shuffle across the 5
-      // consumers); default is the shipped cached shape.
+      // fresh RDD per invocation, which is invisible to CacheManager
+      // dedup. cache() keeps the logical plan PURE, so repeated
+      // invocations REUSE one entry per corpus (CacheManager dedups by
+      // canonical plan — the "ever-growing cache" the r13 advice
+      // feared does not occur; the entry is memb-sized, and sessions
+      // that want it gone still get it via clearCache()).
       .cache()
     val urep = d0.join(withUid.filter(col("doc_id") === col("uid"))
         .select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -386,7 +281,6 @@ object PipelineExtras extends org.apache.spark.internal.Logging {
     val sh = containShingles(docs)
       .withColumn("shh", shingleKey)
       .cache() // consumed 4× (prefix source, candidate probe, recount both sides)
-    dfCostGuard(sh, "q_dedup_containment") // r14 pre-flight (routing advice only)
     // df per 64-bit key (r19): the window exchange repartitions the
     // postings by an 8-byte long instead of the shingle string; the
     // string column still rides this one exchange because the prefix
@@ -481,7 +375,6 @@ object PipelineExtras extends org.apache.spark.internal.Logging {
       // key on it; the string survives only into the rarest-K ORDER BY
       .withColumn("shh", shingleKey)
       .cache() // consumed 4× (df, postings⋈df, recount both sides)
-    dfCostGuard(sh, "q_dedup_ngram_jaccard") // r14 pre-flight (routing advice only)
     // document frequency as ONE window pass: partitionBy(shh) shuffles
     // the postings once — by an 8-byte long key since r19 — where the
     // old groupBy(sh)+join-back shape shuffled them twice (aggregate,
@@ -1325,12 +1218,12 @@ object PipelineExtras extends org.apache.spark.internal.Logging {
   // Scale routing (r15 cross-link): this funnel's near-dup stage is a
   // winnowing-fingerprint groupBy — deliberately NOT the exact
   // inverted-index shapes. If a caller swaps in the exact pairwise
-  // stages (q_dedup_containment / q_dedup_ngram_jaccard semantics),
-  // the [[dfCostGuard]] pre-flight applies verbatim: on df-saturated
-  // corpora those shapes are Σ df²-bound, and the df-independent
-  // banded rows #71 q_dedup_minhash_df / #138 q_dedup_contain_minhash
-  // are the composition-safe replacements (same pair semantics at
-  // banding recall, measured ~linear across two decades).
+  // stages (q_dedup_containment / q_dedup_ngram_jaccard semantics):
+  // on df-saturated corpora those shapes are Σ df²-bound, and the
+  // df-independent banded rows #71 q_dedup_minhash_df / #138
+  // q_dedup_contain_minhash are the composition-safe replacements
+  // (same pair semantics at banding recall, measured ~linear across
+  // two decades).
   val qCurateFlagship: Q = (s, dir) => {
     val q = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"),

@@ -10,7 +10,7 @@ import graft.api.NeighborGraphAnn
   * the index for a data dir ONCE (timed separately), then times
   * [[NeighborGraphAnn.topKLoaded]] min-of-3 per QUERY-BATCH SIZE —
   * so BASELINE.md can grade the QUERY cost of the graph family apart
-  * from its build, exactly like IvfPqIndex's persisted probes.
+  * from its build, exactly like IvfIndex's persisted probes.
   *
   * r16 (VERDICT r15 Next-round #3) adds the two claims the r15 fix
   * left asserted-not-measured:

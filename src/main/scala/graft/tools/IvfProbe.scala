@@ -3,10 +3,11 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.api.{IvfIndex, IvfPqIndex}
+import graft.api.IvfIndex
 
 /** Scale probe for the IVF family (VERDICT r17 Next-round #1): builds
-  * a persisted [[IvfIndex]] or [[IvfPqIndex]] for a data dir ONCE
+  * a persisted [[IvfIndex]] (family `ivf` = Flat cells, `ivfpq` = Pq
+  * cells) for a data dir ONCE
   * (timed separately), then times `query` min-of-3 per query-batch
   * size and measures planted recall@5 vs brute force — the SAME
   * protocol as GraphAnnProbe ([[AnnRecallKit]]), so BASELINE.md can
@@ -27,7 +28,8 @@ import graft.api.{IvfIndex, IvfPqIndex}
   * [batchSizes e.g. 50,200,800] [recallSample]`
   *
   * Env: `GRAFT_IVF_REUSE=1` probe an existing index without
-  * rebuilding; `GRAFT_IVF_TRAIN_MOD` overrides the quantizer-training
+  * rebuilding (it keeps the encoding it was built with, whatever
+  * `family` says); `GRAFT_IVF_TRAIN_MOD` overrides the quantizer-training
   * sample gate (default: corpus/100k, so training never exceeds
   * ~100k vectors — a coarse quantizer's quality saturates at
   * thousands of vectors per cell); `GRAFT_IVF_SHORTLIST` the IVF-PQ
@@ -42,7 +44,11 @@ object IvfProbe {
     val nProbe = args.lift(4).map(_.toInt).getOrElse(4)
     val batches = args.lift(5).getOrElse("50").split(",").map(_.trim.toInt).toSeq
     val recallSample = args.lift(6).map(_.toInt).getOrElse(0)
-    require(Set("ivf", "ivfpq")(family), s"family must be ivf|ivfpq (got $family)")
+    val encoding = family match {
+      case "ivf" => IvfIndex.Flat
+      case "ivfpq" => IvfIndex.Pq()
+      case _ => throw new IllegalArgumentException(s"family must be ivf|ivfpq (got $family)")
+    }
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -59,28 +65,19 @@ object IvfProbe {
     val trainMod = sys.env.get("GRAFT_IVF_TRAIN_MOD").map(_.toInt)
       .getOrElse(math.max(1L, n / 100000L).toInt)
     val reuse = sys.env.get("GRAFT_IVF_REUSE").contains("1") &&
-      (if (family == "ivfpq") IvfPqIndex.hasIndex(spark, indexDir)
-       else IvfIndex.hasIndex(spark, indexDir))
+      IvfIndex.hasIndex(spark, indexDir)
     val t0 = System.nanoTime()
-    if (!reuse) {
-      if (family == "ivfpq")
-        IvfPqIndex.build(spark, e, indexDir, kCells = kCells,
-          trainSampleMod = trainMod)
-      else
-        IvfIndex.build(spark, e, indexDir, k = kCells,
-          trainSampleMod = trainMod)
-    }
+    if (!reuse)
+      IvfIndex.build(spark, e, indexDir, kCells = kCells, encoding = encoding,
+        trainSampleMod = trainMod)
     val buildSec = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache()
-    val sizes = if (family == "ivfpq") IvfPqIndex.cellSizes(spark, indexDir)
-      else IvfIndex.cellSizes(spark, indexDir)
+    val sizes = IvfIndex.cellSizes(spark, indexDir)
     val kActual = sizes.size
     val maxCell = if (sizes.isEmpty) 0L else sizes.values.max
     def searched(q: org.apache.spark.sql.DataFrame) =
-      if (family == "ivfpq")
-        IvfPqIndex.query(spark, q, indexDir, nProbe = nProbe, topK = 5,
-          shortlist = shortlist)
-      else IvfIndex.query(spark, q, indexDir, nProbe = nProbe, topK = 5)
+      IvfIndex.query(spark, q, indexDir, nProbe = nProbe, topK = 5,
+        shortlist = shortlist)
     println(f"""{"probe":"${family}_build","data":"$dataDir","n_vectors":$n,"k_cells":$kActual,"n_probe":$nProbe,"train_mod":$trainMod,"build_save_sec":$buildSec%.3f,"max_cell":$maxCell,"mean_cell":${n.toDouble / math.max(kActual, 1)}%.0f}""")
     for (nQ <- batches) {
       val q = e.filter(col("vec_id") < nQ)

@@ -25,8 +25,7 @@ object OptProbe {
       .config("spark.ui.enabled", sys.env.getOrElse("GRAFT_UI", "false"))
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_CACHE_AQE", "true"))
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.setEventsReadConfs(spark)
@@ -424,30 +423,6 @@ object OptProbe {
         args.drop(2).foreach { q =>
           measure(q)(graft.SparkEntry.queries(q)(spark, sfDir))
         }
-
-      case "dfagg" =>
-        // r19 session 2: df-per-shingle as window (shipped) vs
-        // groupBy+join-back, interleaved in one JVM so box drift hits
-        // both variants equally
-        for (r <- 1 to reps) {
-          Seq(
-            ("window", "on"), ("windownc", "on"),
-            ("window", "off"), ("windownc", "off"),
-            ("agg", "on")).foreach { case (shape, cc) =>
-            spark.conf.set("spark.graft.ngram.dfShape", shape)
-            spark.conf.set("spark.graft.ngram.collapseCache", cc)
-            Seq(
-              "jaccard" -> "q_dedup_ngram_jaccard",
-              "containment" -> "q_dedup_containment").foreach { case (tag, q) =>
-              val t0 = System.nanoTime()
-              val n = graft.SparkEntry.queries(q)(spark, sfDir).count()
-              println(f"[ab] ${tag}_${shape}_cc$cc%-22s rep=$r ${(System.nanoTime() - t0) / 1e9}%6.3f rows=$n")
-              spark.catalog.clearCache()
-            }
-          }
-        }
-        spark.conf.unset("spark.graft.ngram.dfShape")
-        spark.conf.unset("spark.graft.ngram.collapseCache")
 
       case "curate" =>
         // r19 session 2: keep-from-distinct rewrite vs the old shape

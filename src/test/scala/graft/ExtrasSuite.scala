@@ -326,32 +326,6 @@ class ExtrasSuite extends GraftSuite {
     assert(dupPairs.forall(_._3 >= 0.5), "near-identical docs must score high")
   }
 
-  test("dfCostGuard: fires on a df-saturated corpus, silent on a zipfian one and on the fixture") {
-    val sess = spark; import sess.implicits._
-    // saturated: 300 docs all sharing the SAME 50 shingles — df=300
-    // capped at 200 → est = 50 · 200·199/2 = 995,000 ≈ 3,316/doc,
-    // far over DF_GUARD_CAND_PER_DOC=512
-    val saturated = (for (d <- 0 until 300; s <- 0 until 50)
-      yield (d.toLong, s"shared shingle $s")).toDF("doc_id", "sh")
-    val (estS, nS, firedS) = PipelineExtras.dfCostGuard(saturated, "test-saturated")
-    assert(nS == 300 && firedS,
-      s"guard must fire on the saturated corpus (est=$estS over $nS docs)")
-    assert(estS == 50L * 200L * 199L / 2L, s"capped estimate should be exact, got $estS")
-    // zipfian-ish: 300 docs with 50 PRIVATE shingles each — every
-    // df=1, zero candidate pairs → silent
-    val zipf = (for (d <- 0 until 300; s <- 0 until 50)
-      yield (d.toLong, s"doc$d private shingle $s")).toDF("doc_id", "sh")
-    val (estZ, _, firedZ) = PipelineExtras.dfCostGuard(zipf, "test-zipf")
-    assert(estZ == 0L && !firedZ, s"guard must stay silent on a zipfian corpus (est=$estZ)")
-    // the driver fixture itself (the correctness-gate input) is under
-    // the threshold: the guard is routing advice for saturated
-    // corpora, not noise on every run
-    val fixture = PipelineExtras.containShingles(
-      Tables.documents(spark, sf0001).select(col("doc_id"), col("text")))
-    val (_, _, firedF) = PipelineExtras.dfCostGuard(fixture, "test-fixture")
-    assert(!firedF, "guard must not fire on the sf0.001 driver fixture")
-  }
-
   test("q_dedup_ngram_jaccard: df-cut candidate generation loses NO pair vs brute-force all-pairs") {
     val got = PipelineExtras.qDedupNgramJaccard(spark, sf0001).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")) ->

@@ -119,34 +119,37 @@ class SqlTvfSuite extends GraftSuite {
     } finally spark.catalog.dropTempView("ev_tvf_sess")
   }
 
-  test("graft_ann_topk TVF == IvfPqIndex.query; recall floor holds through SQL") {
-    val dir = java.nio.file.Files.createTempDirectory("ann_tvf_idx").toString
-    graft.api.IvfPqIndex.build(spark, Tables.embeddings(spark, sf0001), dir,
-      kCells = 16, m = 8, kSub = 16, seed = 42L)
+  test("graft_ann_topk TVF == IvfIndex.query in either cell encoding; recall floor holds through SQL") {
+    import graft.api.IvfIndex
     Tables.embeddings(spark, sf0001).filter(col("vec_id") < 50)
       .createOrReplaceTempView("ann_q_tvf")
     try {
-      val got = spark.sql(
-        s"SELECT * FROM graft_ann_topk('ann_q_tvf', '$dir', 5, 4)").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-      // one-implementation rule: SQL surface == the Scala probe path
-      val want = graft.api.IvfPqIndex.query(spark,
-          Tables.embeddings(spark, sf0001).filter(col("vec_id") < 50)
-            .select(col("vec_id").as("qid"), col("embedding")),
-          dir, nProbe = 4, topK = 5).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
-      assert(got == want, "TVF probe rows must equal IvfPqIndex.query")
-      // IvfPqSuite's recall floor, reached from SQL: mean recall@5 vs
-      // the exact cosine top-k oracle row
-      val exact = queries.LlmPipeline.qSimCosineTopk(spark, sf0001).collect()
-        .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nid")))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      val ann = got.map(t => (t._1, t._3))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      val recalls = exact.map { case (q, w) =>
-        ann.get(q).map(g => g.intersect(w).size.toDouble / w.size).getOrElse(0.0) }
-      val mean = recalls.sum / recalls.size
-      assert(mean >= 0.4, f"SQL ANN mean recall@5 $mean%.2f below the 0.40 floor")
+      // the IvfIndexSuite recall floors at 4/16 cells, reached from SQL
+      Seq(IvfIndex.Pq(m = 8, kSub = 16) -> 0.4, IvfIndex.Flat -> 0.5).foreach { case (enc, floor) =>
+        val dir = java.nio.file.Files.createTempDirectory("ann_tvf_idx").toString
+        IvfIndex.build(spark, Tables.embeddings(spark, sf0001), dir,
+          kCells = 16, encoding = enc, seed = 42L)
+        val got = spark.sql(
+          s"SELECT * FROM graft_ann_topk('ann_q_tvf', '$dir', 5, 4)").collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+        // one-implementation rule: SQL surface == the Scala probe path
+        val want = IvfIndex.query(spark,
+            Tables.embeddings(spark, sf0001).filter(col("vec_id") < 50)
+              .select(col("vec_id").as("qid"), col("embedding")),
+            dir, nProbe = 4, topK = 5).collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+        assert(got == want, s"TVF probe rows must equal IvfIndex.query ($enc)")
+        // mean recall@5 vs the exact cosine top-k oracle row
+        val exact = queries.LlmPipeline.qSimCosineTopk(spark, sf0001).collect()
+          .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nid")))
+          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+        val ann = got.map(t => (t._1, t._3))
+          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+        val recalls = exact.map { case (q, w) =>
+          ann.get(q).map(g => g.intersect(w).size.toDouble / w.size).getOrElse(0.0) }
+        val mean = recalls.sum / recalls.size
+        assert(mean >= floor, f"SQL ANN ($enc) mean recall@5 $mean%.2f below the $floor%.2f floor")
+      }
     } finally spark.catalog.dropTempView("ann_q_tvf")
   }
 
