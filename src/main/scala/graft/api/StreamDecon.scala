@@ -126,83 +126,85 @@ object StreamDecon {
     // both writes consume the batch (flag() shingles it, the clean
     // side anti-joins it) — cache so the source is read once per batch
     val b = batch.cache()
-    val flagged = filter.flag(b)
-      .cache() // consumed by its own write + the clean anti-join
-    flagged.write.mode("overwrite").parquet(s"$outPath/flagged/batch=$batchId")
-    val flaggedIds = flagged.select(col("train_doc").as("doc_id")).distinct()
-    val clean = b.join(flaggedIds, Seq("doc_id"), "left_anti")
-      // = filter.clean(b), reusing the cached flags
-    cleanTable match {
-      case Some(table) =>
-        // Stream rows carry no intra-batch order, so a doc_id delivered
-        // twice in ONE batch has no "later" revision — pre-reduce to one
-        // row per key with a content-hash tiebreak over the WHOLE row
-        // (two revisions with identical text but different ride-through
-        // columns must not tie): deterministic, so a checkpoint replay
-        // of the batch picks the SAME winner.
-        val rowHash = md5(to_json(struct(clean.columns.map(col): _*)))
-        val oneRev = clean
-          .withColumn("_rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-              .orderBy(rowHash)))
-          .filter(col("_rn") === 1).drop("_rn")
-        // A flagged doc must LEAVE the table, not linger at its last
-        // clean revision: ship its id as a tombstone, so a doc whose
-        // re-delivered revision is contaminated is removed (op=D rows
-        // drop their key in the merge). If any revision of a doc in
-        // this batch is flagged, the whole doc gates out.
-        val tombs = b.join(flaggedIds, Seq("doc_id"), "left_semi")
-          .dropDuplicates("doc_id")
-          .withColumn("_op", lit("D"))
-        StreamzOps.upsertBatch(
-          oneRev.withColumn("_op", lit(null).cast("string")).unionByName(tombs)
-            .withColumn("_ingest_batch", lit(ord)),
-          table, keys = Seq("doc_id"), orderCol = "_ingest_batch",
-          batchId = batchId, opCol = Some("_op"),
-          numBuckets = cleanTableBuckets)
-      case None =>
-        clean.write.mode("overwrite").parquet(s"$outPath/clean/batch=$batchId")
-    }
-    flaggedScd2.foreach { table =>
-      // Verdict version per delivered doc: the batch's flagged pairs
-      // aggregate to ONE deterministic row per doc (the SCD2 version
-      // identity is (doc_id, _ingest_batch) — pair-level detail stays
-      // in the batch-dir log).
-      val verdicts = flagged.groupBy(col("train_doc").as("doc_id"))
-        .agg(count(lit(1)).as("eval_hits"),
-          sort_array(collect_set(col("eval_doc"))).as("eval_docs"),
-          max(col("n_shared")).as("max_shared"))
-        .withColumn("_op", lit(null).cast("string"))
-      // Flip-to-clean: a doc delivered in THIS batch, clean now, but
-      // with an OPEN flagged interval in the history, closes it via a
-      // tombstone version. The open set is read from the last committed
-      // snapshot — small by construction (contamination is the rare
-      // case), and bucket-local like every history row. On a replay the
-      // already-written tombstone makes the doc non-current, so the
-      // flip regenerates as a no-op union against the stored version —
-      // state converges (suite pins the restart).
-      val openFlagged =
-        try readFlaggedHistory(spark, table)
-          .filter(col("is_current") === 1).select("doc_id")
-        catch { case _: IllegalStateException => // table not created yet
-          b.select("doc_id").limit(0)
+    // a throwing write must not leave either frame cached
+    try {
+      val flagged = filter.flag(b)
+        .cache() // consumed by its own write + the clean anti-join
+      try {
+        flagged.write.mode("overwrite").parquet(s"$outPath/flagged/batch=$batchId")
+        val flaggedIds = flagged.select(col("train_doc").as("doc_id")).distinct()
+        val clean = b.join(flaggedIds, Seq("doc_id"), "left_anti")
+          // = filter.clean(b), reusing the cached flags
+        cleanTable match {
+          case Some(table) =>
+            // Stream rows carry no intra-batch order, so a doc_id delivered
+            // twice in ONE batch has no "later" revision — pre-reduce to one
+            // row per key with a content-hash tiebreak over the WHOLE row
+            // (two revisions with identical text but different ride-through
+            // columns must not tie): deterministic, so a checkpoint replay
+            // of the batch picks the SAME winner.
+            val rowHash = md5(to_json(struct(clean.columns.map(col): _*)))
+            val oneRev = clean
+              .withColumn("_rn", row_number().over(
+                org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
+                  .orderBy(rowHash)))
+              .filter(col("_rn") === 1).drop("_rn")
+            // A flagged doc must LEAVE the table, not linger at its last
+            // clean revision: ship its id as a tombstone, so a doc whose
+            // re-delivered revision is contaminated is removed (op=D rows
+            // drop their key in the merge). If any revision of a doc in
+            // this batch is flagged, the whole doc gates out.
+            val tombs = b.join(flaggedIds, Seq("doc_id"), "left_semi")
+              .dropDuplicates("doc_id")
+              .withColumn("_op", lit("D"))
+            StreamzOps.upsertBatch(
+              oneRev.withColumn("_op", lit(null).cast("string")).unionByName(tombs)
+                .withColumn("_ingest_batch", lit(ord)),
+              table, keys = Seq("doc_id"), orderCol = "_ingest_batch",
+              batchId = batchId, opCol = Some("_op"),
+              numBuckets = cleanTableBuckets)
+          case None =>
+            clean.write.mode("overwrite").parquet(s"$outPath/clean/batch=$batchId")
         }
-      val flips = openFlagged
-        .join(b.select("doc_id").distinct(), Seq("doc_id"))
-        .join(flaggedIds, Seq("doc_id"), "left_anti")
-        .withColumn("eval_hits", lit(null).cast("long"))
-        .withColumn("eval_docs", lit(null).cast("array<bigint>"))
-        .withColumn("max_shared", lit(null).cast("long"))
-        .withColumn("_op", lit("D"))
-      StreamzOps.scd2Batch(
-        verdicts.unionByName(flips).withColumn("_ingest_batch", lit(ord)),
-        table, keys = Seq("doc_id"), orderCol = "_ingest_batch",
-        batchId = batchId, opCol = Some("_op"),
-        numBuckets = cleanTableBuckets)
-    }
-    flagged.unpersist()
-    b.unpersist()
-    ()
+        flaggedScd2.foreach { table =>
+          // Verdict version per delivered doc: the batch's flagged pairs
+          // aggregate to ONE deterministic row per doc (the SCD2 version
+          // identity is (doc_id, _ingest_batch) — pair-level detail stays
+          // in the batch-dir log).
+          val verdicts = flagged.groupBy(col("train_doc").as("doc_id"))
+            .agg(count(lit(1)).as("eval_hits"),
+              sort_array(collect_set(col("eval_doc"))).as("eval_docs"),
+              max(col("n_shared")).as("max_shared"))
+            .withColumn("_op", lit(null).cast("string"))
+          // Flip-to-clean: a doc delivered in THIS batch, clean now, but
+          // with an OPEN flagged interval in the history, closes it via a
+          // tombstone version. The open set is read from the last committed
+          // snapshot — small by construction (contamination is the rare
+          // case), and bucket-local like every history row. On a replay the
+          // already-written tombstone makes the doc non-current, so the
+          // flip regenerates as a no-op union against the stored version —
+          // state converges (suite pins the restart).
+          val openFlagged =
+            try readFlaggedHistory(spark, table)
+              .filter(col("is_current") === 1).select("doc_id")
+            catch { case _: IllegalStateException => // table not created yet
+              b.select("doc_id").limit(0)
+            }
+          val flips = openFlagged
+            .join(b.select("doc_id").distinct(), Seq("doc_id"))
+            .join(flaggedIds, Seq("doc_id"), "left_anti")
+            .withColumn("eval_hits", lit(null).cast("long"))
+            .withColumn("eval_docs", lit(null).cast("array<bigint>"))
+            .withColumn("max_shared", lit(null).cast("long"))
+            .withColumn("_op", lit("D"))
+          StreamzOps.scd2Batch(
+            verdicts.unionByName(flips).withColumn("_ingest_batch", lit(ord)),
+            table, keys = Seq("doc_id"), orderCol = "_ingest_batch",
+            batchId = batchId, opCol = Some("_op"),
+            numBuckets = cleanTableBuckets)
+        }
+      } finally flagged.unpersist()
+    } finally b.unpersist()
   }
 
   /** Resolve the upsert-order epoch base for this (tables, checkpoint)

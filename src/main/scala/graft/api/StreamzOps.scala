@@ -225,13 +225,16 @@ object StreamzOps {
 
     /** CDC table-replication sink (SURVEY.md §2A row 3): maintain
       * `tablePath` as the LATEST row per key from a streaming
-      * changelog. Per micro-batch: keep the max-`orderCol` row per
-      * key (orderCol must be unique per key — a CDC seq), merge with
-      * the existing table keeping the overall max, and — when `opCol`
-      * is given — remove keys whose winning row is a `deleteOp`
-      * tombstone. Idempotent under batch replay (a replayed batch
-      * merges to the same state), so exactly-once table state composes
-      * with the source's checkpoint WAL.
+      * changelog. Per micro-batch: union the batch with the stored
+      * rows of the buckets it touches, keep the max-`orderCol` row per
+      * key over both (orderCol must be unique per key — a CDC seq),
+      * and — when `opCol` is given — remove keys whose winning row is
+      * a `deleteOp` tombstone. The batch is evaluated once: it is
+      * persisted, one narrow pass over it finds the dirty buckets and
+      * fills the cache, and the merge write reads the cached rows.
+      * Idempotent under batch replay (a replayed batch merges to the
+      * same state), so exactly-once table state composes with the
+      * source's checkpoint WAL.
       *
       * Storage layout — a minimal snapshot-manifest table format,
       * built for the two properties a 100 TB replication target needs:
@@ -405,13 +408,14 @@ object StreamzOps {
     * clean side) can compose an upsert table into their per-batch
     * work instead of standing up a second streaming query.
     *
-    * Semantics are sinkUpsert's: the batch pre-reduces to its latest
-    * row per key; the merge keeps the overall latest and drops
-    * tombstoned keys. Dropping tombstones at write is safe under
-    * Structured Streaming recovery: only the in-flight batch ever
-    * replays, so no earlier-committed row can resurrect a deleted
-    * key. A source with broader re-delivery (Kafka earliest reset)
-    * needs retained tombstones + a retention window instead.
+    * Semantics are sinkUpsert's: one window over (stored rows of the
+    * dirty buckets ∪ batch — which may carry several rows per key)
+    * keeps the latest row per key, then tombstoned keys are dropped.
+    * Dropping tombstones at write is safe under Structured Streaming
+    * recovery: only the in-flight batch ever replays, so no
+    * earlier-committed row can resurrect a deleted key. A source
+    * with broader re-delivery (Kafka earliest reset) needs retained
+    * tombstones + a retention window instead.
     * Null-safe inequality: rows with a NULL op are live, not
     * silently dropped. Idempotent under batch replay (a replayed
     * batchId recomputes the same manifest number and data).
@@ -426,9 +430,7 @@ object StreamzOps {
       s"retainManifests must be >= 0 (got $retainManifests)")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(orderCol).desc)
-    val latest = batch.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-    commitBucketedSnapshot(latest, tablePath, keys, numBuckets,
+    commitBucketedSnapshot(batch, tablePath, keys, numBuckets,
       retainManifests, batchId, failpoint,
       priorHasDerivedColumns = false) { merged0 =>
       val reduced = merged0.withColumn("_rn", row_number().over(w))
@@ -486,6 +488,7 @@ object StreamzOps {
     * the key-hash bucket column, read the prior state of the dirty
     * buckets, apply the sink-specific `merge` to (prior ∪ batch), and
     * publish atomically (fresh data dirs → manifest rename → GC).
+    * `batchRows` is evaluated exactly once per call.
     * See [[StreamzDataFrame.sinkUpsert]] for the format's invariants.
     */
   private def commitBucketedSnapshot(batchRows: DataFrame, tablePath: String,
@@ -497,53 +500,61 @@ object StreamzOps {
     // Hadoop FS, not java.io.File: tablePath may be hdfs://s3a://
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(sess.sparkContext.hadoopConfiguration)
+    // persisted so the batch is evaluated once: the dirty-bucket pass
+    // below fills the cache and the merge write reads it back
     val bucketed = batchRows.withColumn(BucketCol,
-      pmod(hash(keys.map(col): _*), lit(numBuckets)))
-    // dirty buckets: ≤ numBuckets values — planning-scale collect
-    val dirty = bucketed.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSet
-    if (dirty.nonEmpty) {
-      val cur = currentManifest(fs, tablePath)
-      cur.foreach { case (nb, _, _) => require(nb == numBuckets,
-        s"table was created with numBuckets=$nb, called with $numBuckets") }
-      val priorDirty = cur.toSeq.flatMap(_._3.toSeq)
-        .collect { case (b, dir) if dirty(b) => s"$tablePath/$dir" }
-      // allowMissingColumns ONLY when the sink stores derived columns
-      // (sinkScd2's valid_to_ord/is_current) that batches legitimately
-      // lack; for sinkUpsert the strict union is a schema-drift guard
-      // — a batch silently missing a column must fail fast, not
-      // null-fill the stored values
-      val merged0 =
-        if (priorDirty.isEmpty) bucketed
-        else sess.read.parquet(priorDirty: _*).unionByName(bucketed,
-          allowMissingColumns = priorHasDerivedColumns)
-      val toStore = merge(merged0)
-      val n = cur.map(_._2 + 1).getOrElse(1L)
-      val dataRel = s"data/m$n"
-      // _bp duplicates _gb_bucket because partitionBy consumes its
-      // column into the dir name; keeping the value as data too
-      // lets a single-dir read recover the bucket without
-      // basePath inference
-      toStore.withColumn("_bp", col(BucketCol))
-        .write.mode("overwrite").partitionBy("_bp")
-        .parquet(s"$tablePath/$dataRel")
-      failpoint("data-written", batchId)
-      // buckets that survived with rows = the _bp dirs written
-      // (a fully-tombstoned bucket writes no dir and drops out)
-      val written = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$tablePath/$dataRel"))
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .collect { case s if s.startsWith("_bp=") =>
-          s.stripPrefix("_bp=").toInt }
-        .toSet
-      val entries =
-        cur.toSeq.flatMap(_._3.toSeq).filterNot { case (b, _) => dirty(b) } ++
-        written.toSeq.sorted.map(b => b -> s"$dataRel/_bp=$b")
-      failpoint("pre-commit", batchId)
-      commitManifest(fs, tablePath, n, numBuckets, entries)
-      failpoint("post-commit", batchId)
-      gcSuperseded(fs, tablePath, n, retainManifests)
-    }
+      pmod(hash(keys.map(col): _*), lit(numBuckets))).persist()
+    // a throw anywhere below (failpoint, schema guard, write) must not
+    // leave the batch cached
+    try {
+      // dirty buckets: one narrow pass (no exchange) — each partition
+      // returns the set of its own ≤ numBuckets bucket ids
+      val dirty = bucketed.select(BucketCol).queryExecution.toRdd
+        .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
+        .collect().foldLeft(Set.empty[Int])(_ ++ _)
+      if (dirty.nonEmpty) {
+        val cur = currentManifest(fs, tablePath)
+        cur.foreach { case (nb, _, _) => require(nb == numBuckets,
+          s"table was created with numBuckets=$nb, called with $numBuckets") }
+        val priorDirty = cur.toSeq.flatMap(_._3.toSeq)
+          .collect { case (b, dir) if dirty(b) => s"$tablePath/$dir" }
+        // allowMissingColumns ONLY when the sink stores derived columns
+        // (sinkScd2's valid_to_ord/is_current) that batches legitimately
+        // lack; for sinkUpsert the strict union is a schema-drift guard
+        // — a batch silently missing a column must fail fast, not
+        // null-fill the stored values
+        val merged0 =
+          if (priorDirty.isEmpty) bucketed
+          else sess.read.parquet(priorDirty: _*).unionByName(bucketed,
+            allowMissingColumns = priorHasDerivedColumns)
+        val toStore = merge(merged0)
+        val n = cur.map(_._2 + 1).getOrElse(1L)
+        val dataRel = s"data/m$n"
+        // _bp duplicates _gb_bucket because partitionBy consumes its
+        // column into the dir name; keeping the value as data too
+        // lets a single-dir read recover the bucket without
+        // basePath inference
+        toStore.withColumn("_bp", col(BucketCol))
+          .write.mode("overwrite").partitionBy("_bp")
+          .parquet(s"$tablePath/$dataRel")
+        failpoint("data-written", batchId)
+        // buckets that survived with rows = the _bp dirs written
+        // (a fully-tombstoned bucket writes no dir and drops out)
+        val written = fs.listStatus(
+            new org.apache.hadoop.fs.Path(s"$tablePath/$dataRel"))
+          .filter(_.isDirectory).map(_.getPath.getName)
+          .collect { case s if s.startsWith("_bp=") =>
+            s.stripPrefix("_bp=").toInt }
+          .toSet
+        val entries =
+          cur.toSeq.flatMap(_._3.toSeq).filterNot { case (b, _) => dirty(b) } ++
+          written.toSeq.sorted.map(b => b -> s"$dataRel/_bp=$b")
+        failpoint("pre-commit", batchId)
+        commitManifest(fs, tablePath, n, numBuckets, entries)
+        failpoint("post-commit", batchId)
+        gcSuperseded(fs, tablePath, n, retainManifests)
+      }
+    } finally bucketed.unpersist()
   }
 
   /** Maintenance compaction for a [[StreamzDataFrame.sinkUpsert]] /

@@ -405,13 +405,17 @@ class ChangelogReaderFactory(conf: SerializableConfiguration)
   * predicate server-side.
   *
   * The slice's predicates are PUSHED INTO the parquet read as
-  * `FilterPredicate`s (row-group statistics skip whole groups on a
-  * seq-sorted changelog; record-level filtering drops the rest before
-  * materialization) and each pass projects only the columns it needs:
+  * `FilterPredicate`s (row-group statistics skip whole groups only
+  * when the changelog's row groups are clustered by seq; record-level
+  * filtering drops the rest before materialization) and each pass
+  * projects only the columns it needs:
   *
   *  1. output pass — rows with seq ∈ (start, end], all columns: the
-  *     only full-width read, and it touches only row groups
-  *     overlapping the slice, not the whole log;
+  *     only full-width read. On a seq-clustered changelog it touches
+  *     only row groups overlapping the slice; on one whose groups
+  *     span the whole seq range (a single row group, or rows stored
+  *     out of seq order) no group is skipped, and every reader
+  *     decodes the whole log on every poll;
   *  2. history — which of this partition's keys appeared before the
   *     slice (op = I on a key's global first change). Resolved from
   *     this partition's bucket of the stream's first-seen key index
@@ -425,9 +429,11 @@ class ChangelogReaderFactory(conf: SerializableConfiguration)
   *     recover each deleted key's final timestamp.
   *
   * vs the pre-round-6 reader (full-log scan, all columns, per slice,
-  * per micro-batch): a narrow poll now reads its own row groups plus
-  * a two-column prefix — the per-batch O(full log × width) cost is
-  * gone.
+  * per micro-batch): on a seq-clustered changelog a narrow poll reads
+  * its own row groups plus a two-column prefix instead of the full
+  * log. On an unclustered one the output pass still decodes every row
+  * group per reader and per poll (filtering then drops the rows before
+  * materialization), so the O(full log) decode cost remains there.
   */
 class ChangelogReader(slice: ChangelogSlice, hadoopConf: Configuration)
     extends PartitionReader[InternalRow] {

@@ -53,9 +53,16 @@ object CdcDrive {
       .load()
       .sinkUpsert(s"$base/state", Seq("key"), "seq", s"$base/cp", opCol = Some("op"))
     up.awaitTermination(120000)
-    val state = spark.read.parquet(s"$base/state")
+    up.exception.foreach(e => throw e)
+    // the table dir is a manifest-managed layout (manifest/,
+    // data/m<N>/_bp=<K>): read it through its manifest, never as a
+    // plain parquet dir
+    val state = readUpsertTable(spark, s"$base/state")
+    val survivors = state.filter("key % 10 = 7").count()
     println(s"[cdc-drive] replicated table: ${state.count()} live keys " +
-      s"(tombstoned keys dropped: ${state.filter("key % 10 = 7").count()} remain)")
+      s"(tombstoned keys dropped: $survivors remain)")
+    if (survivors != 0)
+      throw new IllegalStateException(s"$survivors tombstoned keys survived the upsert")
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -230,6 +231,54 @@ class CdcSourceSuite extends GraftSuite {
     val got = readUpsertTable(spark, table).collect()
       .map(r => r.getAs[Long]("key") -> r.getAs[Long]("seq")).toMap
     assert(got == ((2L to 40L).map(k => k -> k).toMap + (1L -> 1000L)))
+  }
+
+  test("bucketed sink commit evaluates each micro-batch exactly once") {
+    import graft.api.StreamzOps._
+    val sess = spark
+    import sess.implicits._
+    implicit val sqlCtx = sess.sqlContext
+    // every evaluation of an input row passes this UDF once, so the
+    // accumulator counts how often the commit reads its batch
+    val evals = spark.sparkContext.longAccumulator("sink_batch_evals")
+    val seen = udf { (k: Long) => evals.add(1L); k }.asNondeterministic()
+    // two commits per sink: the first creates the table, the second
+    // also merges stored rows of the buckets it touches
+    val batches = Seq(1L to 40L, 30L to 60L)
+    def rows(ks: Seq[Long], batchId: Long) = spark.range(ks.head, ks.last + 1)
+      .select(seen(col("id")).as("key"),
+        (col("id") * 100 + batchId).as("seq"), (col("id") % 3).as("dn"))
+    def base(name: String) =
+      java.nio.file.Files.createTempDirectory(name).toString
+    val sinks: Seq[(String, (DataFrame, String, Long) => Unit)] = Seq(
+      "upsertBatch" -> ((df, t, id) => upsertBatch(df, t, Seq("key"), "seq", id)),
+      "scd2Batch" -> ((df, t, id) => scd2Batch(df, t, Seq("key"), "seq", id)),
+      "aggMaintainBatch" -> ((df, t, id) => aggMaintainBatch(
+        df.select(col("key").cast("string").as("grp"), col("dn"),
+          col("seq").as("dv")), t, Seq("grp"), id)))
+    for ((name, commit) <- sinks) {
+      val table = s"${base(name)}/state"
+      for ((ks, id) <- batches.zipWithIndex) {
+        evals.reset()
+        commit(rows(ks, id.toLong), table, id.toLong)
+        assert(evals.value == ks.size,
+          s"$name batch $id: ${evals.value} row evaluations for ${ks.size} rows")
+      }
+    }
+    // the streaming sink runs the same commit from foreachBatch
+    val dir = base("sink_once")
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long)]
+    val q = ms.toDF().select(seen(col("_1")).as("key"), col("_2").as("seq"))
+      .sinkUpsert(s"$dir/state", Seq("key"), "seq", s"$dir/cp",
+        trigger = Trigger.ProcessingTime(0))
+    try for ((ks, id) <- batches.zipWithIndex) {
+      evals.reset()
+      ms.addData(ks.map(k => (k, k * 100 + id)): _*)
+      q.processAllAvailable()
+      assert(evals.value == ks.size,
+        s"sinkUpsert: ${evals.value} row evaluations for ${ks.size} rows")
+    } finally q.stop()
   }
 
   test("predicate pushdown: a narrow slice of a multi-row-group changelog materializes far less than the log") {

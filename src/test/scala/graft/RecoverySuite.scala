@@ -98,11 +98,15 @@ class RecoverySuite extends GraftSuite {
         .option("numPartitions", "4")
         .load()
         .sinkUpsert(table, Seq("key"), "seq", cp, failpoint = fp)
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.size
       val q1 = start((p, b) => if (p == crashAt && b == 1L)
         throw new RuntimeException(s"injected crash at $p"))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q1.awaitTermination(120000)
       }
+      // the commit persists its batch; a crash must release it
+      assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
+        s"$crashAt: the crashed commit left its batch cached")
       // the table must still read as a complete committed snapshot:
       // exactly the changelog fold up to its own max seq (prefix-
       // consistent), and when the crash hit before the commit that
@@ -139,11 +143,15 @@ class RecoverySuite extends GraftSuite {
         .option("batchSize", "100").option("snapshotSeq", "99")
         .option("numPartitions", "4").load()
         .sinkScd2(table, Seq("key"), "seq", cp, failpoint = fp)
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.size
       val q1 = start((p, b) => if (p == crashAt && b == 1L)
         throw new RuntimeException(s"injected crash at $p"))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q1.awaitTermination(120000)
       }
+      // the commit persists its batch; a crash must release it
+      assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
+        s"$crashAt: the crashed commit left its batch cached")
       // surviving snapshot must be the complete history of SOME seq
       // prefix (batch 0 alone unless the commit landed)
       def histTo(maxSeq: Long) = spark.read.format("pg-cdc-sim")
