@@ -20,43 +20,17 @@ object Analytics {
   // ---- #104 q_funnel -----------------------------------------------------
   // Ordered-step funnel: users whose first view is followed by a
   // click within 24 h, then a purchase within 24 h of that click —
-  // strict temporal order, per-step windows. Each step is one
-  // filtered aggregation plus an equi-join on user_id to the previous
-  // step's frontier (the step table only SHRINKS, so later joins get
-  // cheaper); the final stage counts are three 1-row aggregates
-  // crossed together. At 100 TB: no window functions, no self-join of
-  // the raw stream against itself without a key — every join is
-  // user-keyed and every aggregation partial-merges map-side. This is
-  // the MATCH_RECOGNIZE-lite pattern every event warehouse needs.
-  val qFunnel: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    // s1/s2 are each consumed twice (next step's join + own count);
-    // cached — they are per-user frontiers (users-sized, tiny), and
-    // without the cache the events scan re-executes per consumer
-    // subtree (exchange reuse doesn't fire across them under AQE —
-    // same recipe as q_text_bm25/q_text_tfidf)
-    val s1 = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("us")).as("t1"))
-      .cache()
-    val s2 = ev.filter(col("event_type") === "click")
-      .join(s1, "user_id")
-      .filter(col("us") > col("t1") && col("us") <= col("t1") + DAY_US)
-      .groupBy(col("user_id")).agg(min(col("us")).as("t2"))
-      .cache()
-    val s3 = ev.filter(col("event_type") === "purchase")
-      .join(s2, "user_id")
-      .filter(col("us") > col("t2") && col("us") <= col("t2") + DAY_US)
-      .groupBy(col("user_id")).agg(min(col("us")).as("t3"))
-    // the final answer is three scalar counts — materialize them
-    // through the caches NOW, then unpersist, so repeated calls in a
-    // long-lived session don't accumulate cached frontier plans
-    // (previously relied on the caller's catalog.clearCache())
-    val (n1, n2, n3) = (s1.count(), s2.count(), s3.count())
-    s1.unpersist(); s2.unpersist()
-    import s.implicits._
-    Seq((n1, n2, n3)).toDF("n_view", "n_view_click", "n_view_click_purchase")
-  }
+  // strict temporal order, per-step windows. The reference SQL below
+  // chains user-keyed joins of per-step frontiers; this row delegates
+  // to the graft_funnel builder (api/EventAnalytics.funnelDf), which
+  // answers the same chain in one lazy pass — one user-keyed
+  // aggregation, no join, no cache, no job before the caller's
+  // action — so the SQL surface and this oracled row share one
+  // implementation. This is the MATCH_RECOGNIZE-lite pattern every
+  // event warehouse needs.
+  val qFunnel: Q = (s, dir) =>
+    graft.api.EventAnalytics.funnelDf(Tables.events(s, dir), "user_id",
+      "event_type", "ts", Seq("view", "click", "purchase"), DAY_US)
 
   val qFunnelSql: String = EV +
     """, s1 AS (

@@ -509,4 +509,60 @@ class PlanSuite extends GraftSuite {
     assert(n >= 1 && n <= 3,
       s"expected <= 3 executed lineitem scans (self-join sides + 1 AQE-broadcast dup), got $n:\n$p")
   }
+
+  test("q_funnel (#104): builds with zero Spark jobs; one user-keyed exchange, no join, no cache") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the events schema memo's one-time footer job belongs to the
+    // reader, not to the query builder
+    Tables.events(spark, sf0001)
+    val sc = spark.sparkContext
+    val (build, sync) = ("plansuite-funnel-build", "plansuite-funnel-sync")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = groups.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    val df = try {
+      sc.setJobGroup(build, "build q_funnel")
+      val built = try queries.Analytics.qFunnel(spark, sf0001) finally sc.clearJobGroup()
+      // the listener bus is FIFO: once the sync job's start arrives,
+      // every job the builder started has been delivered too
+      sc.setJobGroup(sync, "listener sync")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!groups.contains(sync) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      built
+    } finally sc.removeSparkListener(listener)
+    assert(groups.contains(sync), "the listener bus never delivered the sync job")
+    val buildJobs = groups.asScala.count(_ == build)
+    assert(buildJobs == 0, s"building q_funnel must start no Spark job, started $buildJobs")
+
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val all = nodes(df.queryExecution.executedPlan)
+    val p = df.queryExecution.executedPlan.toString
+    assert(!all.exists(_.isInstanceOf[BaseJoinExec]), s"no join allowed:\n$p")
+    assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]), s"no cache allowed:\n$p")
+    val exchanges = all.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    val userKeyed = exchanges.count {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "_u"
+      case _ => false
+    }
+    assert(userKeyed == 1 && exchanges.count(_ == SinglePartition) == 1 &&
+      exchanges.size == 2,
+      s"expected one user-keyed exchange plus the single-partition final one:\n$p")
+  }
 }

@@ -30,6 +30,87 @@ class SqlTvfSuite extends GraftSuite {
     }
   }
 
+  private val DayUs = 86400000000L
+
+  /** In-memory funnel fold over collected events, independent of
+    * funnelDf: per user, t1 = min step-1 time, then t_k = min step-k
+    * time in (t_{k-1}, t_{k-1} + h]; returns the number of users
+    * reaching each step. */
+  private def funnelRef(evs: Seq[(Long, String, Long)], steps: Seq[String],
+      h: Long): Seq[Long] = {
+    val reached = evs.groupBy(_._1).values.toSeq.map { es =>
+      def times(step: String) = es.collect { case (_, t, us) if t == step => us }
+      steps.tail.scanLeft(times(steps.head).minOption) { (prev, step) =>
+        prev.flatMap(p => times(step).filter(x => x > p && x <= p + h).minOption)
+      }.map(t => if (t.isDefined) 1L else 0L)
+    }
+    steps.indices.map(k => reached.map(_(k)).sum)
+  }
+
+  private def funnelRow(events: org.apache.spark.sql.DataFrame, steps: Seq[String],
+      h: Long = DayUs): Seq[Long] = {
+    val rows = graft.api.EventAnalytics
+      .funnelDf(events, "user_id", "event_type", "ts", steps, h).collect()
+    assert(rows.length == 1, s"a funnel is one row, got ${rows.length}")
+    rows.head.toSeq.map(_.asInstanceOf[Long])
+  }
+
+  test("funnelDf == an in-memory fold over the collected events, for 1-4 steps and a repeated step") {
+    val events = Tables.events(spark, sf0001)
+    val evs = events.select(col("user_id"), col("event_type"), unix_micros(col("ts")))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    Seq(Seq("view"), Seq("view", "click"), Seq("view", "click", "purchase"),
+        Seq("view", "click", "view", "purchase")).foreach { steps =>
+      val want = funnelRef(evs, steps, DayUs)
+      assert(funnelRow(events, steps) == want, s"steps $steps")
+      assert(want.last > 0, s"fixture must reach the last of $steps")
+    }
+    val cols = graft.api.EventAnalytics.funnelDf(events, "user_id", "event_type",
+      "ts", Seq("view", "click", "view"), DayUs).columns.toSeq
+    assert(cols == Seq("n_view", "n_view_click", "n_view_click_view"))
+  }
+
+  test("funnelDf boundaries: equal time excluded, exactly +H included, no step-1 counts nowhere; empty input is one row of zeros") {
+    val h = 1000L
+    val evs = Seq(
+      (1L, "a", 100L), (1L, "b", 100L),            // equal to t1: excluded
+      (2L, "a", 100L), (2L, "b", 1100L),           // exactly t1 + H: included
+      (2L, "c", 1100L), (2L, "c", 2101L),          //   equal t2 and t2 + H + 1: excluded
+      (3L, "a", 100L), (3L, "b", 1101L),           // past t1 + H: excluded
+      (4L, "b", 200L), (4L, "c", 300L),            // no step-1 event at all
+      (5L, "a", 500L), (5L, "a", 100L),            // t1 is the MIN step-1 time
+      (5L, "b", 1050L), (5L, "b", 300L),           //   and t2 the min qualifying one:
+      (5L, "c", 400L), (5L, "c", 2500L))           //   only t2 = 300 admits c@400
+    val sess = spark; import sess.implicits._
+    val df = evs.toDF("user_id", "event_type", "us")
+      .select(col("user_id"), col("event_type"), timestamp_micros(col("us")).as("ts"))
+    val steps = Seq("a", "b", "c")
+    assert(funnelRef(evs, steps, h) == Seq(4L, 2L, 1L))
+    assert(funnelRow(df, steps, h) == Seq(4L, 2L, 1L))
+    // a null user key is one step-1 group and stops there, as in the
+    // join-based reference SQL
+    val withNull = df.unionByName(Seq((Option.empty[Long], "a", 100L),
+        (Option.empty[Long], "b", 200L)).toDF("user_id", "event_type", "us")
+      .select(col("user_id"), col("event_type"), timestamp_micros(col("us")).as("ts")))
+    assert(funnelRow(withNull, steps, h) == Seq(5L, 2L, 1L))
+    assert(funnelRow(df.limit(0), steps, h) == Seq(0L, 0L, 0L),
+      "an empty input must still give one row of zeros")
+  }
+
+  test("funnelDf scales exactly: 3 user-disjoint copies of the events give 3x every count") {
+    val events = Tables.events(spark, sf0001)
+    val shift = events.agg(max(col("user_id"))).head().getLong(0) + 1
+    val tripled = (1 to 2).foldLeft(events) { (acc, i) =>
+      acc.unionByName(events.withColumn("user_id", col("user_id") + shift * i))
+    }
+    Seq(Seq("view", "click", "purchase"), Seq("view", "click", "view", "purchase"))
+      .foreach { steps =>
+        val base = funnelRow(events, steps)
+        assert(base.last > 0)
+        assert(funnelRow(tripled, steps) == base.map(_ * 3), s"steps $steps")
+      }
+  }
+
   test("graft_cohort_retention TVF == q_cohort_retention; non-default offset changes the column name") {
     withEventsView("ev_tvf") {
       val got = spark.sql(
@@ -226,6 +307,19 @@ class SqlTvfSuite extends GraftSuite {
       }
       assert(badSteps.getMessage.contains("steps_array"),
         s"got: ${badSteps.getMessage}")
+      // 4294967303 = 2^32 + 7: an Int narrowing would run it as day 7
+      val wideScalar = intercept[Exception] {
+        spark.sql("SELECT * FROM graft_cohort_retention('ev_tvf3', 'user_id', " +
+          "'event_type', 'ts', 'purchase', 4294967303)").collect()
+      }
+      assert(wideScalar.getMessage.contains("day_offset") &&
+        wideScalar.getMessage.contains("Int range"), s"got: ${wideScalar.getMessage}")
+      val wideArray = intercept[Exception] {
+        spark.sql("SELECT * FROM graft_cohort_matrix('ev_tvf3', 'user_id', " +
+          "'event_type', 'ts', 'purchase', array(1, 4294967303))").collect()
+      }
+      assert(wideArray.getMessage.contains("day_offsets_array") &&
+        wideArray.getMessage.contains("Int range"), s"got: ${wideArray.getMessage}")
     }
   }
 
