@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   uniqueBy/collectAll use global or non-time windows that
   *   Structured Streaming rejects — they are BATCH-ONLY here.
   *   Streaming equivalents: StreamzStateOps.accumulateStream /
-  *   slidingWindowStream (flatMapGroupsWithState, per-key state);
+  *   slidingWindowStream (transformWithState, per-key state);
   *   watermarked window aggs; as-of via stream-stream interval join;
   *   dropDuplicatesWithinWatermark.
   * - No collect(), no driver loops: all ops stay in the plan.

@@ -2,14 +2,23 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** STREAMING analogs of the StreamzOps ops that are batch-only there
   * (accumulate / sliding_window use global or non-time windows that
-  * Structured Streaming rejects — see StreamzOps's scaladoc). Here the
-  * same per-key semantics run on an unbounded stream via
-  * `flatMapGroupsWithState`: state is the fold accumulator (or the
-  * last-n ring), keyed by the stream key, checkpointed with the query.
+  * Structured Streaming rejects — see StreamzOps's scaladoc), plus the
+  * stateful live forms of batch rows (top-k, twap, cohort, funnel,
+  * gapfill, retraction). Every operator here is a per-key fold on
+  * Spark 4's arbitrary-state API: `transformWithState` with a
+  * `StatefulProcessor` whose state lives in NAMED, individually-typed
+  * slots (ValueState / ListState / MapState, each with its own TTL)
+  * plus registered event-time timers, keyed by the stream key and
+  * checkpointed with the query.
+  *
+  * State store: Spark runs `transformWithState` only on the RocksDB
+  * provider, so set `spark.sql.streaming.stateStore.providerClass` to
+  * `org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
+  * before starting any query built from this object.
   *
   * Ordering contract: within one micro-batch, rows of a key are folded
   * in ascending `ord` order (sorted here — group iterators carry no
@@ -19,11 +28,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * seq-sorted — PgCdcSimSource) and any replication protocol provides.
   * Out-of-order delivery across batches folds in arrival order, the
   * same behavior as the push-based reference.
-  *
-  * At scale: state is per-key O(1) (accumulate) or O(n) (sliding
-  * ring); keys distribute across executors by the groupByKey shuffle;
-  * use RocksDB state store for large key spaces (RecoverySuite proves
-  * the provider works).
   *
   * Shapes are pinned to (key: Long, ord: Long, value: Double) — the
   * CDC envelope's natural projection. A production library would
@@ -43,45 +47,6 @@ object StreamzStateOps {
     * valueCol), castable to (long, long, double).
     */
   def accumulateStream(df: DataFrame, keyCol: String, ordCol: String,
-      valueCol: String): DataFrame = {
-    implicit val kovEnc = Encoders.product[KOV]
-    implicit val outEnc = Encoders.product[AccOut]
-    implicit val stateEnc = Encoders.scalaDouble
-    implicit val keyEnc = Encoders.scalaLong
-    val typed: Dataset[KOV] = df.select(
-      col(keyCol).cast("long").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(valueCol).cast("double").as("value")).as[KOV]
-    typed.groupByKey(_.key)
-      .flatMapGroupsWithState[Double, AccOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[KOV], state: GroupState[Double]) =>
-          var acc = state.getOption.getOrElse(0.0)
-          val out = rows.toSeq.sortBy(_.ord).map { r =>
-            acc += r.value
-            AccOut(key, r.ord, r.value, acc)
-          }
-          state.update(acc)
-          out.iterator
-      }
-      .toDF("key", "ord", "value", "acc")
-  }
-
-  /** [[accumulateStream]] re-expressed on Spark 4's arbitrary-state
-    * API (`transformWithState` + [[RunningSumProcessor]]) — the
-    * designed successor of flatMapGroupsWithState. The fold semantics
-    * are IDENTICAL (same per-batch ord sort, same running sum; the
-    * suite pins output equality between the two), so this is the
-    * migration seam: what the new API buys at scale is state held in
-    * NAMED, individually-typed slots (ValueState/ListState/MapState,
-    * each with its own TTL) instead of one opaque case-class blob —
-    * adding a state field no longer breaks checkpoint compatibility —
-    * plus multiple registered timers where the old API had a single
-    * timeout. Spark requires the RocksDB state store provider for
-    * this operator (set `spark.sql.streaming.stateStore.providerClass`
-    * before starting the query).
-    */
-  def accumulateStreamTws(df: DataFrame, keyCol: String, ordCol: String,
       valueCol: String): DataFrame = {
     implicit val kovEnc = Encoders.product[KOV]
     implicit val outEnc = Encoders.product[AccOut]
@@ -123,11 +88,11 @@ object StreamzStateOps {
   case class TopKOut(group: String, rank: Int, item: String, cnt: Long)
 
   /** STREAMING grouped frequent-items: q_text_topk_words' Misra–Gries
-    * sketch (functions.FrequentItems) held as `flatMapGroupsWithState`
-    * state. Each trigger folds the batch's items into the group's
-    * sketch with the SAME `reduce` the batch Aggregator uses, then
-    * re-emits that group's current top-`k` (Update semantics — only
-    * groups touched by the batch emit).
+    * sketch (functions.FrequentItems) held as per-group state. Each
+    * trigger folds the batch's items into the group's sketch with the
+    * SAME `reduce` the batch Aggregator uses, then re-emits that
+    * group's current top-`k` (Update semantics — only groups touched
+    * by the batch emit).
     *
     * Inherited MG guarantees, now per UNBOUNDED stream key: state
     * bounded at `capacity` counters per group whatever the vocabulary;
@@ -138,44 +103,6 @@ object StreamzStateOps {
     * (StreamingSuite proves both).
     */
   def topKStream(df: DataFrame, k: Int, capacity: Int, groupCol: String,
-      itemCol: String): DataFrame = {
-    require(k > 0 && capacity > 0, s"need k > 0, capacity > 0 (got $k, $capacity)")
-    val mg = new graft.functions.FrequentItems(capacity)
-    implicit val inEnc = Encoders.product[GroupedItem]
-    implicit val outEnc = Encoders.product[TopKOut]
-    implicit val stateEnc =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-    implicit val keyEnc = Encoders.STRING
-    val typed: Dataset[GroupedItem] = df.select(
-      col(groupCol).cast("string").as("group"),
-      col(itemCol).cast("string").as("item")).as[GroupedItem]
-    typed.groupByKey(_.group)
-      .flatMapGroupsWithState[Map[String, Long], TopKOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (group: String, rows: Iterator[GroupedItem], state: GroupState[Map[String, Long]]) =>
-          val sketch = rows.foldLeft(state.getOption.getOrElse(mg.zero)) {
-            (buf, r) => mg.reduce(buf, r.item)
-          }
-          state.update(sketch)
-          sketch.toSeq.sortBy { case (w, c) => (-c, w) }.take(k)
-            .zipWithIndex.map { case ((w, c), i) => TopKOut(group, i + 1, w, c) }
-            .iterator
-      }
-      .toDF("group", "rank", "item", "cnt")
-  }
-
-  /** [[topKStream]] on the arbitrary-state API. Semantics identical
-    * (same MG fold, same Update-mode re-emission of a touched group's
-    * top-k; the suite pins output equality across a restart). The
-    * migration win here is the state LAYOUT: the sketch lives in a
-    * named `MapState[String, Long]` slot — one store ENTRY per
-    * counter instead of one opaque Map blob — so a trigger that
-    * touches 3 of `capacity` counters rewrites 3 entries, not the
-    * whole sketch, and adding another slot later (e.g. a per-group
-    * item total) is checkpoint-compatible where the old API's
-    * state-class change was a breaking rewrite.
-    */
-  def topKStreamTws(df: DataFrame, k: Int, capacity: Int, groupCol: String,
       itemCol: String): DataFrame = {
     require(k > 0 && capacity > 0, s"need k > 0, capacity > 0 (got $k, $capacity)")
     implicit val inEnc = Encoders.product[GroupedItem]
@@ -190,12 +117,13 @@ object StreamzStateOps {
       .toDF("group", "rank", "item", "cnt")
   }
 
-  /** MG sketch in a named MapState slot; emits the group's current
-    * top-`k` per trigger. [[TopKExpiringProcessor]] repeats this fold
-    * over its own timestamped input type, adding timer-driven
-    * eviction. */
-  class TopKProcessor(k: Int, capacity: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, GroupedItem, TopKOut] {
+  /** The MG sketch in a named `MapState[String, Long]` slot — one
+    * store ENTRY per counter, so a trigger that touches 3 of
+    * `capacity` counters rewrites 3 entries, not the whole sketch.
+    * [[TopKProcessor]] and [[TopKExpiringProcessor]] differ only in
+    * their input row type and what they do around [[foldAndEmit]]. */
+  abstract class SketchProcessor[I](k: Int, capacity: Int)
+      extends org.apache.spark.sql.streaming.StatefulProcessor[String, I, TopKOut] {
     @transient protected var sketch:
       org.apache.spark.sql.streaming.MapState[String, Long] = _
     private val mg = new graft.functions.FrequentItems(capacity)
@@ -219,6 +147,10 @@ object StreamzStateOps {
         .zipWithIndex.map { case ((w, c), i) => TopKOut(group, i + 1, w, c) }
         .iterator
     }
+  }
+
+  class TopKProcessor(k: Int, capacity: Int)
+      extends SketchProcessor[GroupedItem](k, capacity) {
     override def handleInputRows(group: String, rows: Iterator[GroupedItem],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[TopKOut] =
       foldAndEmit(group, rows.map(_.item))
@@ -241,62 +173,6 @@ object StreamzStateOps {
       ttlMs: Long): DataFrame = {
     require(k > 0 && capacity > 0 && ttlMs > 0,
       s"need k, capacity, ttlMs > 0 (got $k, $capacity, $ttlMs)")
-    val mg = new graft.functions.FrequentItems(capacity)
-    implicit val inEnc = Encoders.product[GroupedItemTs]
-    implicit val outEnc = Encoders.product[TopKOut]
-    // state carries the group's all-time max event ts alongside the
-    // sketch: a late (but watermark-admissible) out-of-order event
-    // must NOT move the eviction deadline backwards
-    implicit val stateEnc =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Map[String, Long])]()
-    implicit val keyEnc = Encoders.STRING
-    val typed: Dataset[GroupedItemTs] = df.select(
-      col(groupCol).cast("string").as("group"),
-      col(itemCol).cast("string").as("item"),
-      // no cast: a cast would mint a fresh attribute WITHOUT the
-      // upstream watermark tag, and EventTimeTimeout requires it
-      col(tsCol).as("ts")).as[GroupedItemTs]
-    typed.groupByKey(_.group)
-      .flatMapGroupsWithState[(Long, Map[String, Long]), TopKOut](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (group: String, rows: Iterator[GroupedItemTs],
-            state: GroupState[(Long, Map[String, Long])]) =>
-          if (state.hasTimedOut) {
-            state.remove() // sketch evicted; a returning group restarts cold
-            Iterator.empty
-          } else {
-            val rs = rows.toSeq
-            val (prevMaxTs, prevSketch) =
-              state.getOption.getOrElse((Long.MinValue, mg.zero))
-            val sketch = rs.foldLeft(prevSketch)((buf, r) => mg.reduce(buf, r.item))
-            val maxTs = math.max(prevMaxTs, rs.map(_.ts.getTime).max)
-            state.update((maxTs, sketch))
-            state.setTimeoutTimestamp(maxTs + ttlMs)
-            sketch.toSeq.sortBy { case (w, c) => (-c, w) }.take(k)
-              .zipWithIndex.map { case ((w, c), i) => TopKOut(group, i + 1, w, c) }
-              .iterator
-          }
-      }
-      .toDF("group", "rank", "item", "cnt")
-  }
-
-  /** [[topKStreamExpiring]] on the arbitrary-state API: the
-    * hand-rolled eviction — max-ts packed into the state tuple +
-    * `setTimeoutTimestamp` — becomes two NAMED slots (`sketch`
-    * MapState, `maxTs` ValueState) and a registered EVENT-TIME timer.
-    * `handleExpiredTimer` replaces the in-band `state.hasTimedOut`
-    * branch; because a newer batch deletes the group's previous timer
-    * before registering the new deadline, an out-of-order (but
-    * admissible) event still cannot pull eviction backwards — the
-    * deadline only ever derives from the all-time max event ts, same
-    * as the old variant (suite pins both behaviors).
-    * `df` must be watermarked on `tsCol` upstream.
-    */
-  def topKStreamExpiringTws(df: DataFrame, k: Int, capacity: Int,
-      groupCol: String, itemCol: String, tsCol: String,
-      ttlMs: Long): DataFrame = {
-    require(k > 0 && capacity > 0 && ttlMs > 0,
-      s"need k, capacity, ttlMs > 0 (got $k, $capacity, $ttlMs)")
     implicit val inEnc = Encoders.product[GroupedItemTs]
     implicit val outEnc = Encoders.product[TopKOut]
     implicit val keyEnc = Encoders.STRING
@@ -312,34 +188,22 @@ object StreamzStateOps {
       .toDF("group", "rank", "item", "cnt")
   }
 
-  /** [[TopKProcessor]]'s fold plus event-time TTL: `maxTs` rides its
-    * own ValueState slot (per-slot typing is the named-state win — it
-    * no longer shares an encoder with the sketch), and eviction is a
-    * registered timer at maxTs + ttl, re-armed per batch. */
+  /** [[SketchProcessor]]'s fold plus event-time TTL: `maxTs` rides its
+    * own ValueState slot, and eviction is a registered timer at
+    * maxTs + ttl, re-armed per batch. */
   class TopKExpiringProcessor(k: Int, capacity: Int, ttlMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, GroupedItemTs, TopKOut] {
-    @transient private var sketch:
-      org.apache.spark.sql.streaming.MapState[String, Long] = _
+      extends SketchProcessor[GroupedItemTs](k, capacity) {
     @transient private var maxTs:
       org.apache.spark.sql.streaming.ValueState[Long] = _
-    private val mg = new graft.functions.FrequentItems(capacity)
     override def init(outputMode: OutputMode,
         timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      sketch = getHandle.getMapState[String, Long]("sketch",
-        Encoders.STRING, Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+      super.init(outputMode, timeMode)
       maxTs = getHandle.getValueState[Long]("maxTs", Encoders.scalaLong,
         org.apache.spark.sql.streaming.TTLConfig.NONE)
     }
     override def handleInputRows(group: String, rows: Iterator[GroupedItemTs],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[TopKOut] = {
       val rs = rows.toSeq
-      val before = sketch.iterator().toMap
-      val after = rs.foldLeft(before)((buf, r) => mg.reduce(buf, r.item))
-      (before.keySet -- after.keySet).foreach(sketch.removeKey)
-      after.foreach { case (w, c) =>
-        if (!before.get(w).contains(c)) sketch.updateValue(w, c)
-      }
       // deadline = all-time max event ts + ttl: an admissible
       // out-of-order row must not move it backwards. One live timer
       // per group — delete the previous deadline before re-arming.
@@ -351,9 +215,7 @@ object StreamzStateOps {
         getHandle.registerTimer(newMax + ttlMs)
         maxTs.update(newMax)
       }
-      after.toSeq.sortBy { case (w, c) => (-c, w) }.take(k)
-        .zipWithIndex.map { case ((w, c), i) => TopKOut(group, i + 1, w, c) }
-        .iterator
+      foldAndEmit(group, rs.iterator.map(_.item))
     }
     override def handleExpiredTimer(group: String,
         tv: org.apache.spark.sql.streaming.TimerValues,
@@ -370,39 +232,6 @@ object StreamzStateOps {
     * last n values.
     */
   def slidingWindowStream(df: DataFrame, n: Int, keyCol: String,
-      ordCol: String, valueCol: String): DataFrame = {
-    require(n > 0, s"sliding window size must be > 0 (got $n)")
-    implicit val kovEnc = Encoders.product[KOV]
-    implicit val outEnc = Encoders.product[WinOut]
-    implicit val stateEnc = Encoders.kryo[List[Double]]
-    implicit val keyEnc = Encoders.scalaLong
-    val typed: Dataset[KOV] = df.select(
-      col(keyCol).cast("long").as("key"),
-      col(ordCol).cast("long").as("ord"),
-      col(valueCol).cast("double").as("value")).as[KOV]
-    typed.groupByKey(_.key)
-      .flatMapGroupsWithState[List[Double], WinOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[KOV], state: GroupState[List[Double]]) =>
-          var ring = state.getOption.getOrElse(Nil)
-          val out = rows.toSeq.sortBy(_.ord).map { r =>
-            ring = (ring :+ r.value).takeRight(n)
-            WinOut(key, r.ord, r.value, ring)
-          }
-          state.update(ring)
-          out.iterator
-      }
-      .toDF("key", "ord", "value", "win")
-  }
-
-  /** [[slidingWindowStream]] on the arbitrary-state API: the ring is
-    * a named `ListState[Double]` slot — element-typed storage instead
-    * of the old kryo-blobbed `List[Double]` (the kryo encoder was the
-    * exact state-evolution trap TWS removes: any List re-shape broke
-    * the checkpoint). Warm-up (< n) and eviction semantics identical;
-    * the suite pins equality against the fMGWS ring across a restart.
-    */
-  def slidingWindowStreamTws(df: DataFrame, n: Int, keyCol: String,
       ordCol: String, valueCol: String): DataFrame = {
     require(n > 0, s"sliding window size must be > 0 (got $n)")
     implicit val kovEnc = Encoders.product[KOV]

@@ -322,7 +322,8 @@ object PipelineExtras {
     // candidates are near-dups with near-equal sizes, so
     // Σ min ≈ Σ sza and there is no volume to save. The idea only
     // pays on corpora with size-skewed containment pairs (true
-    // small⊂big); OptProbe `containo` keeps the measured variant.
+    // small⊂big); OPTIMIZATION_r19.md (batch 7) records the measured
+    // variant.
     val inter = cand
       .join(sh.select(col("doc_id").as("doc_a"), col("shh")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("shh")), Seq("doc_b", "shh"))
@@ -1237,8 +1238,8 @@ object PipelineExtras {
     // let keep share the decon legs' distinct subtree) — Catalyst's
     // RemoveRedundantAggregates rewrites that shape straight back to
     // this one (plans byte-identical, timing identical, outputs
-    // identical; OptProbe `curate`). The raw-sh aggregate is the
-    // optimizer's own normal form.
+    // identical; OPTIMIZATION_r19.md batch 5, item 4). The raw-sh
+    // aggregate is the optimizer's own normal form.
     val keep = sh.groupBy(col("doc_id")).agg(min(md5(col("sh"))).as("fingerprint"))
       .groupBy(col("fingerprint")).agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")

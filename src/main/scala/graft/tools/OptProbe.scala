@@ -424,52 +424,6 @@ object OptProbe {
           measure(q)(graft.SparkEntry.queries(q)(spark, sfDir))
         }
 
-      case "curate" =>
-        // r19 session 2: keep-from-distinct rewrite vs the old shape
-        // (keep aggregated from the raw explode — 3 explode passes)
-        def oldCurate: DataFrame = {
-          val q = graft.Tables.documents(spark, sfDir)
-            .select(col("doc_id"), col("lang"), col("n_chars"), split(col("text"), " ").as("ws"))
-            .filter(size(col("ws")) >= 40)
-          val sh = q.select(col("doc_id"), explode(expr(
-            "transform(sequence(0, size(ws) - 5), i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2], ws[i+3], ws[i+4]))"))
-            .as("sh"))
-          val keep = sh.groupBy(col("doc_id")).agg(min(md5(col("sh"))).as("fingerprint"))
-            .groupBy(col("fingerprint")).agg(min(col("doc_id")).as("doc_id"))
-            .select("doc_id")
-          val shd = sh.distinct()
-          val flagged = shd.filter(col("doc_id") >= 20)
-            .join(broadcast(shd.filter(col("doc_id") < 20)
-              .select(col("doc_id").as("ev"), col("sh"))), "sh")
-            .groupBy(col("doc_id"), col("ev")).agg(count(lit(1)).as("n_shared"))
-            .filter(col("n_shared") >= graft.queries.PipelineExtras.DECON_MIN_SHARED)
-            .select("doc_id").distinct()
-          q.join(keep, "doc_id")
-            .filter(col("doc_id") >= 20)
-            .join(flagged, Seq("doc_id"), "left_anti")
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).as("n_docs"),
-              sum(size(col("ws"))).cast("bigint").as("n_tokens"),
-              round(avg(col("n_chars").cast("double")), 6).as("avg_chars"))
-            .orderBy("lang")
-        }
-        // one-time output identity check, then interleaved timing
-        val shippedRows = graft.SparkEntry.queries("q_curate_flagship")(spark, sfDir)
-          .collect().map(_.toString).sorted.toSeq
-        val oldRows = oldCurate.collect().map(_.toString).sorted.toSeq
-        println(s"[ab] curate identity: ${if (shippedRows == oldRows) "IDENTICAL" else "DIFFER"} " +
-          s"(${shippedRows.size} rows)")
-        spark.catalog.clearCache()
-        for (r <- 1 to reps) {
-          Seq("curate_shipped" -> (() => graft.SparkEntry.queries("q_curate_flagship")(spark, sfDir)),
-              "curate_old" -> (() => oldCurate)).foreach { case (n, mk) =>
-            val t0 = System.nanoTime()
-            val c = mk().count()
-            println(f"[ab] $n%-16s rep=$r ${(System.nanoTime() - t0) / 1e9}%6.3f rows=$c")
-            spark.catalog.clearCache()
-          }
-        }
-
       case "pagerank" =>
         // r19 session 2: node-sized pre-divide (shipped) vs the old
         // edge-granularity deg join, interleaved
@@ -508,57 +462,6 @@ object OptProbe {
             val t0 = System.nanoTime()
             val c = mk().count()
             println(f"[ab] $n%-18s rep=$r ${(System.nanoTime() - t0) / 1e9}%6.3f rows=$c")
-            spark.catalog.clearCache()
-          }
-        }
-
-      case "containo" =>
-        // r19 session 2: size-oriented recount (enumerate the SMALLER
-        // doc's shingles per pair) vs the shipped least-id-side
-        // recount, interleaved; identity check first. Measured and
-        // REJECTED: −0.5 s at sf0.1, within noise at g1 (this
-        // corpus's containment candidates are size-similar, so
-        // Σ min(sa,sb) ≈ Σ sza). Kept here as the reproducible record.
-        def orientedContainment: DataFrame = {
-          val docs = graft.Tables.documents(spark, sfDir)
-          val (memb, urep) = graft.queries.PipelineExtras.collapseExact(docs)
-          val st = graft.queries.PipelineExtras.containmentStagesUnique(urep)
-          val sizes = st.sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-          val candO = st.cand
-            .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sa")), "doc_a")
-            .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sb")), "doc_b")
-            .select(
-              when(col("sa") <= col("sb"), col("doc_a")).otherwise(col("doc_b")).as("dS"),
-              when(col("sa") <= col("sb"), col("doc_b")).otherwise(col("doc_a")).as("dB"))
-          val interO = candO
-            .join(st.sh.select(col("doc_id").as("dS"), col("shh")), "dS")
-            .join(st.sh.select(col("doc_id").as("dB"), col("shh")), Seq("dB", "shh"))
-            .groupBy(col("dS"), col("dB")).agg(count(lit(1)).as("inter"))
-            .select(least(col("dS"), col("dB")).as("doc_a"),
-              greatest(col("dS"), col("dB")).as("doc_b"), col("inter"))
-          val res = interO
-            .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sa")), "doc_a")
-            .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sb")), "doc_b")
-            .select(col("doc_a"), col("doc_b"),
-              round(col("inter").cast("double") /
-                least(col("sa"), col("sb")).cast("double"), 6).as("containment"))
-            .filter(col("containment") >= graft.queries.PipelineExtras.NGRAM_CONTAIN_MIN)
-          graft.queries.PipelineExtras.sameClusterPairs(memb, "containment")
-            .unionByName(graft.queries.PipelineExtras.expandPairs(res, memb, "containment"))
-            .orderBy("doc_a", "doc_b")
-        }
-        val newC = graft.SparkEntry.queries("q_dedup_containment")(spark, sfDir)
-          .collect().map(_.toString).toSeq
-        val oldC = orientedContainment.collect().map(_.toString).toSeq
-        println(s"[ab] containment identity: ${if (newC == oldC) "IDENTICAL" else "DIFFER"} " +
-          s"(${newC.size} rows)")
-        spark.catalog.clearCache()
-        for (r <- 1 to reps) {
-          Seq("containment_shipped" -> (() => graft.SparkEntry.queries("q_dedup_containment")(spark, sfDir)),
-              "containment_oriented" -> (() => orientedContainment)).foreach { case (n, mk) =>
-            val t0 = System.nanoTime()
-            val c = mk().count()
-            println(f"[ab] $n%-20s rep=$r ${(System.nanoTime() - t0) / 1e9}%6.3f rows=$c")
             spark.catalog.clearCache()
           }
         }

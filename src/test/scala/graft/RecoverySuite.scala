@@ -188,11 +188,7 @@ class RecoverySuite extends GraftSuite {
     // (state store rolls back to the pre-batch version, the replayed
     // batch re-emits the same matches, the upsert dedups by key).
     import graft.api.StreamzOps._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val base = java.nio.file.Files.createTempDirectory("neardup_e2e").toString
       val docsDir = s"$base/docs"; val table = s"$base/pairs"; val cp = s"$base/cp"
       // replayable file source, one id-ordered chunk per micro-batch
@@ -234,21 +230,15 @@ class RecoverySuite extends GraftSuite {
       assert(got == want,
         s"post-recovery pair table must equal the batch dual; " +
           s"missing=${(want diff got).take(5)} extra=${(got diff want).take(5)}")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("stateful aggregation runs on the RocksDB state store provider") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // §4.3: changelog checkpointing — upload per-batch deltas instead
-    // of full RocksDB snapshots
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    try {
+    withRocksDb {
+      // §4.3: changelog checkpointing — upload per-batch deltas instead
+      // of full RocksDB snapshots
+      spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       import java.sql.Timestamp
       val sess = spark
       import sess.implicits._
@@ -267,11 +257,6 @@ class RecoverySuite extends GraftSuite {
       q.stop()
       val n = sess.table("rocksdb_t").collect().map(_.getLong(2)).max
       assert(n == 3L, s"incremental state across batches via RocksDB, got $n")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -284,11 +269,7 @@ class RecoverySuite extends GraftSuite {
     // naive replay would apply it TWICE (the per-bucket batchId guard
     // is what this pins).
     import graft.api.StreamzOps._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val want = queries.Linkage.qCdcAggMaintain(spark, sf0001).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       assert(want.nonEmpty)
@@ -327,9 +308,6 @@ class RecoverySuite extends GraftSuite {
           s"$crashAt: maintained table must equal the batch row after recovery; " +
             s"missing=${(want diff got).take(5)} extra=${(got diff want).take(5)}")
       }
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -31,4 +31,18 @@ object SparkTestBase {
 abstract class GraftSuite extends AnyFunSuite {
   def spark: SparkSession = SparkTestBase.spark
   def sf0001: String = SparkTestBase.sf0001
+
+  /** Run `body` with the RocksDB state store provider, then restore
+    * the session's previous provider. Spark requires RocksDB for
+    * `transformWithState`, so every StreamzStateOps query runs here. */
+  protected def withRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -378,147 +378,153 @@ class StreamingSuite extends GraftSuite {
   }
 
   test("topKStream: streaming MG top-k == batch q_text_topk_words, across a mid-stream restart") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx = sess.sqlContext
-    // identical input to the batch query: (lang, word) pairs from the
-    // documents fixture, split in two chunks on doc_id for the restart
-    val words = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("lang"),
-        explode(split(col("text"), " ")).as("word"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val (chunk1, chunk2) = words.partition(_._1 % 2 == 0)
-    val cp = java.nio.file.Files.createTempDirectory("topk_cp").toString
-    // Update-mode emissions re-emit a touched group's FULL top-k, so
-    // last-emission-per-group is the stream's current answer
-    val latest = scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, String, Long)]]
-    val ms = MemoryStream[(String, String)]
-    def start() = graft.api.StreamzStateOps
-      .topKStream(ms.toDF().toDF("lang", "word"), k = 5,
-        capacity = graft.queries.PipelineExtras.TOPK_WORDS_CAPACITY,
-        groupCol = "lang", itemCol = "word")
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.collect().groupBy(_.getString(0)).foreach { case (g, rows) =>
-          latest(g) = rows.toSeq.map(r => (r.getInt(1), r.getString(2), r.getLong(3))).sorted
-        }
-        ()
-      }.start()
-    val q1 = start()
-    ms.addData(chunk1.map(w => (w._2, w._3)).toSeq: _*)
-    q1.processAllAvailable()
-    q1.stop() // mid-stream kill: the sketch survives only via the state store
-    val q2 = start()
-    ms.addData(chunk2.map(w => (w._2, w._3)).toSeq: _*)
-    q2.processAllAvailable()
-    q2.stop()
-    val got = latest.toSeq.flatMap { case (g, rows) =>
-      rows.map { case (rank, w, c) => (g, rank, w, c) } }.toSet
-    val want = graft.queries.PipelineExtras.qTextTopkWords(spark, sf0001)
-      .collect().map(r =>
-        (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
-    assert(got == want,
-      s"stream top-k after restart must equal batch; diff=${(got diff want).take(5)} / ${(want diff got).take(5)}")
+    withRocksDb {
+      val sess = spark
+      import sess.implicits._
+      implicit val sqlCtx = sess.sqlContext
+      // identical input to the batch query: (lang, word) pairs from the
+      // documents fixture, split in two chunks on doc_id for the restart
+      val words = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("lang"),
+          explode(split(col("text"), " ")).as("word"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      val (chunk1, chunk2) = words.partition(_._1 % 2 == 0)
+      val cp = java.nio.file.Files.createTempDirectory("topk_cp").toString
+      // Update-mode emissions re-emit a touched group's FULL top-k, so
+      // last-emission-per-group is the stream's current answer
+      val latest = scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, String, Long)]]
+      val ms = MemoryStream[(String, String)]
+      def start() = graft.api.StreamzStateOps
+        .topKStream(ms.toDF().toDF("lang", "word"), k = 5,
+          capacity = graft.queries.PipelineExtras.TOPK_WORDS_CAPACITY,
+          groupCol = "lang", itemCol = "word")
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", cp)
+        .trigger(Trigger.ProcessingTime(0))
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.collect().groupBy(_.getString(0)).foreach { case (g, rows) =>
+            latest(g) = rows.toSeq.map(r => (r.getInt(1), r.getString(2), r.getLong(3))).sorted
+          }
+          ()
+        }.start()
+      val q1 = start()
+      ms.addData(chunk1.map(w => (w._2, w._3)).toSeq: _*)
+      q1.processAllAvailable()
+      q1.stop() // mid-stream kill: the sketch survives only via the state store
+      val q2 = start()
+      ms.addData(chunk2.map(w => (w._2, w._3)).toSeq: _*)
+      q2.processAllAvailable()
+      q2.stop()
+      val got = latest.toSeq.flatMap { case (g, rows) =>
+        rows.map { case (rank, w, c) => (g, rank, w, c) } }.toSet
+      val want = graft.queries.PipelineExtras.qTextTopkWords(spark, sf0001)
+        .collect().map(r =>
+          (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
+      assert(got == want,
+        s"stream top-k after restart must equal batch; diff=${(got diff want).take(5)} / ${(want diff got).take(5)}")
 
-    // bounded state: capacity 8 < vocabulary — emissions stay ≤ 8 rows
-    // per group and never overcount the true frequency
-    val truth = words.groupBy(w => (w._2, w._3)).map { case (k, v) => k -> v.length.toLong }
-    val latest8 = scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, String, Long)]]
-    val ms8 = MemoryStream[(String, String)]
-    val q8 = graft.api.StreamzStateOps
-      .topKStream(ms8.toDF().toDF("lang", "word"), k = 8, capacity = 8,
-        groupCol = "lang", itemCol = "word")
-      .writeStream.outputMode("update").trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.collect().groupBy(_.getString(0)).foreach { case (g, rows) =>
-          latest8(g) = rows.toSeq.map(r => (r.getInt(1), r.getString(2), r.getLong(3))).sorted
+      // bounded state: capacity 8 < vocabulary — emissions stay ≤ 8 rows
+      // per group and never overcount the true frequency
+      val truth = words.groupBy(w => (w._2, w._3)).map { case (k, v) => k -> v.length.toLong }
+      val latest8 = scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, String, Long)]]
+      val ms8 = MemoryStream[(String, String)]
+      val q8 = graft.api.StreamzStateOps
+        .topKStream(ms8.toDF().toDF("lang", "word"), k = 8, capacity = 8,
+          groupCol = "lang", itemCol = "word")
+        .writeStream.outputMode("update").trigger(Trigger.ProcessingTime(0))
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.collect().groupBy(_.getString(0)).foreach { case (g, rows) =>
+            latest8(g) = rows.toSeq.map(r => (r.getInt(1), r.getString(2), r.getLong(3))).sorted
+          }
+          ()
+        }.start()
+      ms8.addData(words.map(w => (w._2, w._3)).toSeq: _*)
+      q8.processAllAvailable()
+      q8.stop()
+      latest8.foreach { case (g, rows) =>
+        assert(rows.size <= 8, s"group $g emitted ${rows.size} > capacity rows")
+        rows.foreach { case (_, w, c) =>
+          assert(c <= truth((g, w)), s"MG must never overcount: $g/$w est=$c true=${truth((g, w))}")
         }
-        ()
-      }.start()
-    ms8.addData(words.map(w => (w._2, w._3)).toSeq: _*)
-    q8.processAllAvailable()
-    q8.stop()
-    latest8.foreach { case (g, rows) =>
-      assert(rows.size <= 8, s"group $g emitted ${rows.size} > capacity rows")
-      rows.foreach { case (_, w, c) =>
-        assert(c <= truth((g, w)), s"MG must never overcount: $g/$w est=$c true=${truth((g, w))}")
       }
     }
   }
 
   test("topKStreamExpiring: idle group's sketch is evicted at the event-time TTL, active groups keep counting") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx = sess.sqlContext
-    val ms = MemoryStream[(Timestamp, String, String)]
-    val out = graft.api.StreamzStateOps.topKStreamExpiring(
-      ms.toDF().toDF("ts", "grp", "item").withWatermark("ts", "0 seconds"),
-      k = 3, capacity = 8, groupCol = "grp", itemCol = "item",
-      tsCol = "ts", ttlMs = 60000L) // 1 minute TTL
-    val q = out.writeStream.format("memory").queryName("topk_ttl")
-      .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-    def emitted() = spark.table("topk_ttl").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)))
-    try {
-      ms.addData((ts("2024-01-01 00:00:00"), "A", "x"),
-        (ts("2024-01-01 00:00:01"), "A", "x"),
-        (ts("2024-01-01 00:00:02"), "A", "y"))
-      q.processAllAvailable()
-      assert(emitted().count(_._1 == "A") == 2) // x@2, y@1
-      // push the watermark past A's TTL with another group's events
-      ms.addData((ts("2024-01-01 00:05:00"), "B", "z"))
-      q.processAllAvailable()
-      ms.addData((ts("2024-01-01 00:05:01"), "B", "z")) // timeout fires this batch
-      q.processAllAvailable()
-      // A returns AFTER eviction: its sketch restarts cold — x counts
-      // from 1 again, not 3 (the observable proof state was removed)
-      ms.addData((ts("2024-01-01 00:05:30"), "A", "x"))
-      q.processAllAvailable()
-      val aRows = emitted().filter(t => t._1 == "A" && t._3 == "x").map(_._4)
-      assert(aRows.contains(2L) && aRows.contains(1L) && !aRows.contains(3L),
-        s"post-eviction count must restart at 1 (saw x-counts ${aRows.toSeq.sorted})")
-      // B unaffected throughout
-      assert(emitted().filter(_._1 == "B").map(_._4).max == 2L)
-    } finally q.stop()
+    withRocksDb {
+      val sess = spark
+      import sess.implicits._
+      implicit val sqlCtx = sess.sqlContext
+      val ms = MemoryStream[(Timestamp, String, String)]
+      val out = graft.api.StreamzStateOps.topKStreamExpiring(
+        ms.toDF().toDF("ts", "grp", "item").withWatermark("ts", "0 seconds"),
+        k = 3, capacity = 8, groupCol = "grp", itemCol = "item",
+        tsCol = "ts", ttlMs = 60000L) // 1 minute TTL
+      val q = out.writeStream.format("memory").queryName("topk_ttl")
+        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
+      def emitted() = spark.table("topk_ttl").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)))
+      try {
+        ms.addData((ts("2024-01-01 00:00:00"), "A", "x"),
+          (ts("2024-01-01 00:00:01"), "A", "x"),
+          (ts("2024-01-01 00:00:02"), "A", "y"))
+        q.processAllAvailable()
+        assert(emitted().count(_._1 == "A") == 2) // x@2, y@1
+        // push the watermark past A's TTL with another group's events
+        ms.addData((ts("2024-01-01 00:05:00"), "B", "z"))
+        q.processAllAvailable()
+        ms.addData((ts("2024-01-01 00:05:01"), "B", "z")) // timeout fires this batch
+        q.processAllAvailable()
+        // A returns AFTER eviction: its sketch restarts cold — x counts
+        // from 1 again, not 3 (the observable proof state was removed)
+        ms.addData((ts("2024-01-01 00:05:30"), "A", "x"))
+        q.processAllAvailable()
+        val aRows = emitted().filter(t => t._1 == "A" && t._3 == "x").map(_._4)
+        assert(aRows.contains(2L) && aRows.contains(1L) && !aRows.contains(3L),
+          s"post-eviction count must restart at 1 (saw x-counts ${aRows.toSeq.sorted})")
+        // B unaffected throughout
+        assert(emitted().filter(_._1 == "B").map(_._4).max == 2L)
+      } finally q.stop()
+    }
   }
 
   test("topKStreamExpiring: an out-of-order event must NOT pull the eviction deadline backwards") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx = sess.sqlContext
-    val ms = MemoryStream[(Timestamp, String, String)]
-    val out = graft.api.StreamzStateOps.topKStreamExpiring(
-      ms.toDF().toDF("ts", "grp", "item").withWatermark("ts", "2 minutes"),
-      k = 3, capacity = 8, groupCol = "grp", itemCol = "item",
-      tsCol = "ts", ttlMs = 60000L)
-    val q = out.writeStream.format("memory").queryName("topk_ttl_ooo")
-      .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // A's newest event 10:00:00 -> deadline 10:01:00
-      ms.addData((ts("2024-01-01 10:00:00"), "A", "x"))
-      q.processAllAvailable()
-      // admissible OUT-OF-ORDER A event (09:59:30 > watermark 09:58:00).
-      // A deadline derived from THIS event alone would be 10:00:30 —
-      // 30 s early; the state's all-time max ts must keep 10:01:00.
-      ms.addData((ts("2024-01-01 09:59:30"), "A", "x"))
-      q.processAllAvailable()
-      // advance the watermark to 10:00:31/10:00:32: past the WRONG
-      // deadline, before the RIGHT one
-      ms.addData((ts("2024-01-01 10:02:31"), "B", "z"))
-      q.processAllAvailable()
-      ms.addData((ts("2024-01-01 10:02:32"), "B", "z"))
-      q.processAllAvailable()
-      // A must still be alive: its x-count continues 2 -> 3
-      ms.addData((ts("2024-01-01 10:02:00"), "A", "x"))
-      q.processAllAvailable()
-      val xCounts = spark.table("topk_ttl_ooo").collect()
-        .filter(r => r.getString(0) == "A" && r.getString(2) == "x")
-        .map(_.getLong(3))
-      assert(xCounts.max == 3L,
-        s"sketch evicted early on out-of-order input (x-counts ${xCounts.toSeq.sorted})")
-    } finally q.stop()
+    withRocksDb {
+      val sess = spark
+      import sess.implicits._
+      implicit val sqlCtx = sess.sqlContext
+      val ms = MemoryStream[(Timestamp, String, String)]
+      val out = graft.api.StreamzStateOps.topKStreamExpiring(
+        ms.toDF().toDF("ts", "grp", "item").withWatermark("ts", "2 minutes"),
+        k = 3, capacity = 8, groupCol = "grp", itemCol = "item",
+        tsCol = "ts", ttlMs = 60000L)
+      val q = out.writeStream.format("memory").queryName("topk_ttl_ooo")
+        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        // A's newest event 10:00:00 -> deadline 10:01:00
+        ms.addData((ts("2024-01-01 10:00:00"), "A", "x"))
+        q.processAllAvailable()
+        // admissible OUT-OF-ORDER A event (09:59:30 > watermark 09:58:00).
+        // A deadline derived from THIS event alone would be 10:00:30 —
+        // 30 s early; the state's all-time max ts must keep 10:01:00.
+        ms.addData((ts("2024-01-01 09:59:30"), "A", "x"))
+        q.processAllAvailable()
+        // advance the watermark to 10:00:31/10:00:32: past the WRONG
+        // deadline, before the RIGHT one
+        ms.addData((ts("2024-01-01 10:02:31"), "B", "z"))
+        q.processAllAvailable()
+        ms.addData((ts("2024-01-01 10:02:32"), "B", "z"))
+        q.processAllAvailable()
+        // A must still be alive: its x-count continues 2 -> 3
+        ms.addData((ts("2024-01-01 10:02:00"), "A", "x"))
+        q.processAllAvailable()
+        val xCounts = spark.table("topk_ttl_ooo").collect()
+          .filter(r => r.getString(0) == "A" && r.getString(2) == "x")
+          .map(_.getLong(3))
+        assert(xCounts.max == 3L,
+          s"sketch evicted early on out-of-order input (x-counts ${xCounts.toSeq.sorted})")
+      } finally q.stop()
+    }
   }
 
   test("stream-stream joins (#88/#92) on the RocksDB state store: identical output, watermark-bounded state") {
@@ -526,11 +532,7 @@ class StreamingSuite extends GraftSuite {
     // ~ |window| × input rate per side — too big for the default
     // HDFS-backed heap store at 100 TB). Same queries, same answers,
     // and the state metric must shrink when the watermark evicts.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       // (a) INNER #88: file-stream replay == declared batch join,
       // byte-identical to the default-provider test above
       Tables.setEventsReadConfs(spark)
@@ -608,28 +610,11 @@ class StreamingSuite extends GraftSuite {
           s"state must stay watermark-bounded (peak $peak, now $after): " +
           "old-window rows evicted, only the fresh window retained")
       } finally ql.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
-  // ---- transformWithState migrations (Spark 4 arbitrary state) ----
-  // Same semantics as the fMGWS ops above, proven by the same
-  // equivalences; Spark enforces RocksDB for transformWithState.
-
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
+  // ---- transformWithState operators (Spark 4 arbitrary state) ----
+  // Spark enforces RocksDB for transformWithState.
 
   test("q_stream_neardup (#124): band-bucket ListState matcher == declared batch dual, across batches") {
     withRocksDb {
@@ -889,124 +874,6 @@ class StreamingSuite extends GraftSuite {
           s"missing=${(want diff acc.keySet).take(5)} extra=${(acc.keySet diff want).take(5)}")
       assert(acc.keySet.exists(p => p._1 >= 250L && p._2 < 250L),
         "a post-restart doc must match a pre-restart doc from recovered state")
-    }
-  }
-
-  test("topKStreamTws: MapState-slot MG top-k == batch q_text_topk_words, across a mid-stream restart") {
-    withRocksDb {
-      val sess = spark
-      import sess.implicits._
-      implicit val sqlCtx = sess.sqlContext
-      val words = Tables.documents(spark, sf0001)
-        .select(col("doc_id"), col("lang"),
-          explode(split(col("text"), " ")).as("word"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      val (chunk1, chunk2) = words.partition(_._1 % 2 == 0)
-      val cp = java.nio.file.Files.createTempDirectory("topk_tws_cp").toString
-      val latest = scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, String, Long)]]
-      val ms = MemoryStream[(String, String)]
-      def start() = graft.api.StreamzStateOps
-        .topKStreamTws(ms.toDF().toDF("lang", "word"), k = 5,
-          capacity = graft.queries.PipelineExtras.TOPK_WORDS_CAPACITY,
-          groupCol = "lang", itemCol = "word")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.ProcessingTime(0))
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          df.collect().groupBy(_.getString(0)).foreach { case (g, rows) =>
-            latest(g) = rows.toSeq.map(r => (r.getInt(1), r.getString(2), r.getLong(3))).sorted
-          }
-          ()
-        }.start()
-      val q1 = start()
-      ms.addData(chunk1.map(w => (w._2, w._3)).toSeq: _*)
-      q1.processAllAvailable()
-      q1.stop() // the per-entry sketch survives only via RocksDB + checkpoint
-      val q2 = start()
-      ms.addData(chunk2.map(w => (w._2, w._3)).toSeq: _*)
-      q2.processAllAvailable()
-      q2.stop()
-      val got = latest.toSeq.flatMap { case (g, rows) =>
-        rows.map { case (rank, w, c) => (g, rank, w, c) } }.toSet
-      val want = graft.queries.PipelineExtras.qTextTopkWords(spark, sf0001)
-        .collect().map(r =>
-          (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
-      assert(got == want,
-        s"TWS top-k after restart must equal batch; diff=${(got diff want).take(5)} / ${(want diff got).take(5)}")
-    }
-  }
-
-  test("topKStreamExpiringTws: event-time timer evicts the idle group's sketch, active groups keep counting") {
-    withRocksDb {
-      val sess = spark
-      import sess.implicits._
-      implicit val sqlCtx = sess.sqlContext
-      val ms = MemoryStream[(Timestamp, String, String)]
-      val out = graft.api.StreamzStateOps.topKStreamExpiringTws(
-        ms.toDF().toDF("ts", "grp", "item").withWatermark("ts", "0 seconds"),
-        k = 3, capacity = 8, groupCol = "grp", itemCol = "item",
-        tsCol = "ts", ttlMs = 60000L)
-      val q = out.writeStream.format("memory").queryName("topk_tws_ttl")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      def emitted() = spark.table("topk_tws_ttl").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)))
-      try {
-        ms.addData((ts("2024-01-01 00:00:00"), "A", "x"),
-          (ts("2024-01-01 00:00:01"), "A", "x"),
-          (ts("2024-01-01 00:00:02"), "A", "y"))
-        q.processAllAvailable()
-        assert(emitted().count(_._1 == "A") == 2) // x@2, y@1
-        ms.addData((ts("2024-01-01 00:05:00"), "B", "z"))
-        q.processAllAvailable()
-        ms.addData((ts("2024-01-01 00:05:01"), "B", "z")) // timer fires this batch
-        q.processAllAvailable()
-        // A returns AFTER eviction: both slots were cleared, so x
-        // restarts at 1 — the observable proof of handleExpiredTimer
-        ms.addData((ts("2024-01-01 00:05:30"), "A", "x"))
-        q.processAllAvailable()
-        val aRows = emitted().filter(t => t._1 == "A" && t._3 == "x").map(_._4)
-        assert(aRows.contains(2L) && aRows.contains(1L) && !aRows.contains(3L),
-          s"post-eviction count must restart at 1 (saw x-counts ${aRows.toSeq.sorted})")
-        assert(emitted().filter(_._1 == "B").map(_._4).max == 2L)
-      } finally q.stop()
-    }
-  }
-
-  test("topKStreamExpiringTws: an out-of-order event must NOT pull the timer deadline backwards") {
-    withRocksDb {
-      val sess = spark
-      import sess.implicits._
-      implicit val sqlCtx = sess.sqlContext
-      val ms = MemoryStream[(Timestamp, String, String)]
-      val out = graft.api.StreamzStateOps.topKStreamExpiringTws(
-        ms.toDF().toDF("ts", "grp", "item").withWatermark("ts", "2 minutes"),
-        k = 3, capacity = 8, groupCol = "grp", itemCol = "item",
-        tsCol = "ts", ttlMs = 60000L)
-      val q = out.writeStream.format("memory").queryName("topk_tws_ttl_ooo")
-        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-      try {
-        // A's newest event 10:00:00 -> timer armed at 10:01:00
-        ms.addData((ts("2024-01-01 10:00:00"), "A", "x"))
-        q.processAllAvailable()
-        // admissible OUT-OF-ORDER A event: a deadline from THIS event
-        // alone would be 10:00:30 — the maxTs slot must keep 10:01:00
-        // (the processor must not delete+re-arm on a smaller max)
-        ms.addData((ts("2024-01-01 09:59:30"), "A", "x"))
-        q.processAllAvailable()
-        // advance the watermark past the WRONG deadline, before the RIGHT one
-        ms.addData((ts("2024-01-01 10:02:31"), "B", "z"))
-        q.processAllAvailable()
-        ms.addData((ts("2024-01-01 10:02:32"), "B", "z"))
-        q.processAllAvailable()
-        // A must still be alive: its x-count continues 2 -> 3
-        ms.addData((ts("2024-01-01 10:02:00"), "A", "x"))
-        q.processAllAvailable()
-        val xCounts = spark.table("topk_tws_ttl_ooo").collect()
-          .filter(r => r.getString(0) == "A" && r.getString(2) == "x")
-          .map(_.getLong(3))
-        assert(xCounts.max == 3L,
-          s"sketch evicted early on out-of-order input (x-counts ${xCounts.toSeq.sorted})")
-      } finally q.stop()
     }
   }
 

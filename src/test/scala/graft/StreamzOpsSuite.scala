@@ -102,72 +102,16 @@ class StreamzOpsSuite extends GraftSuite {
   }
 
   test("accumulateStream: streaming per-key running fold across micro-batches == batch accumulate") {
-    val sess = spark; import sess.implicits._
-    implicit val sqlCtx = sess.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-    val q = graft.api.StreamzStateOps
-      .accumulateStream(ms.toDF().toDF("k", "seq", "v"), "k", "seq", "v")
-      .writeStream.format("memory").queryName("acc_stream")
-      .outputMode("append").start()
-    // two micro-batches; k=1 spans both (state must carry across),
-    // in-batch rows deliberately out of seq order (must sort)
-    ms.addData((1L, 2L, 10.0), (1L, 1L, 1.0), (2L, 1L, 5.0))
-    q.processAllAvailable()
-    ms.addData((1L, 3L, 100.0), (2L, 2L, 7.0))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("acc_stream")
-      .orderBy("key", "ord").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
-    val batch = Seq((1L, 1L, 1.0), (1L, 2L, 10.0), (1L, 3L, 100.0),
-        (2L, 1L, 5.0), (2L, 2L, 7.0))
-      .toDF("k", "seq", "v")
-      .accumulate(sum($"v"), Seq($"seq"), Seq($"k"))
-      .orderBy("k", "seq").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
-    assert(got == batch, s"stream fold must equal batch fold:\n$got\n$batch")
-  }
-
-  test("accumulateStream state survives on the RocksDB state store provider") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val sess = spark; import sess.implicits._
       implicit val sqlCtx = sess.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-      val q = graft.api.StreamzStateOps
-        .accumulateStream(ms.toDF().toDF("k", "seq", "v"), "k", "seq", "v")
-        .writeStream.format("memory").queryName("acc_rocks")
-        .outputMode("append").start()
-      ms.addData((1L, 1L, 2.0)); q.processAllAvailable()
-      ms.addData((1L, 2L, 3.0)); q.processAllAvailable() // fold carried in RocksDB
-      q.stop()
-      val acc = spark.table("acc_rocks").orderBy("ord").collect().map(_.getDouble(3)).toSeq
-      assert(acc == Seq(2.0, 5.0), s"RocksDB-backed fold, got $acc")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("accumulateStreamTws: transformWithState fold == flatMapGroupsWithState fold, across restart") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    // Spark enforces RocksDB for transformWithState
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sess = spark; import sess.implicits._
-      implicit val sqlCtx = sess.sqlContext
-      val cp = java.nio.file.Files.createTempDirectory("tws_cp").toString
+      val cp = java.nio.file.Files.createTempDirectory("acc_cp").toString
       // memory sink cannot recover from a checkpoint — collect appended
       // rows through foreachBatch instead (the recoverable sink shape)
       val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double)]()
       val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
       def start() = graft.api.StreamzStateOps
-        .accumulateStreamTws(ms.toDF().toDF("k", "seq", "v"), "k", "seq", "v")
+        .accumulateStream(ms.toDF().toDF("k", "seq", "v"), "k", "seq", "v")
         .writeStream
         .option("checkpointLocation", cp)
         .outputMode("append")
@@ -176,158 +120,122 @@ class StreamzOpsSuite extends GraftSuite {
             emitted.add((r.getLong(0), r.getLong(1), r.getDouble(3))))
           ()
         }.start()
+      // two micro-batches; k=1 spans both (state must carry across),
+      // in-batch rows deliberately out of seq order (must sort)
       val q1 = start()
-      // in-batch rows out of seq order (must sort), k=1 spans batches
       ms.addData((1L, 2L, 10.0), (1L, 1L, 1.0), (2L, 1L, 5.0))
       q1.processAllAvailable()
-      q1.stop() // ValueState must rehydrate from the checkpoint
+      q1.stop() // the ValueState must rehydrate from the checkpoint
       val q2 = start()
       ms.addData((1L, 3L, 100.0), (2L, 2L, 7.0))
       q2.processAllAvailable()
       q2.stop()
       val got = emitted.toArray(Array.empty[(Long, Long, Double)])
         .sortBy(t => (t._1, t._2)).toSeq
-      // the old-API op is the semantic oracle
-      val wantDf = Seq((1L, 1L, 1.0), (1L, 2L, 10.0), (1L, 3L, 100.0),
-          (2L, 1L, 5.0), (2L, 2L, 7.0)).toDF("k", "seq", "v")
-      val want = graft.api.StreamzStateOps
-        .accumulateStream(wantDf, "k", "seq", "v")
-        .orderBy("key", "ord").collect()
+      val batch = Seq((1L, 1L, 1.0), (1L, 2L, 10.0), (1L, 3L, 100.0),
+          (2L, 1L, 5.0), (2L, 2L, 7.0))
+        .toDF("k", "seq", "v")
+        .accumulate(sum($"v"), Seq($"seq"), Seq($"k"))
+        .orderBy("k", "seq").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
-      assert(got == want,
-        s"transformWithState fold must equal the fMGWS fold:\n$got\n$want")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      assert(got == batch, s"stream fold must equal batch fold:\n$got\n$batch")
     }
   }
 
   test("slidingWindowStream: last-n ring across micro-batches == batch slidingWindow") {
-    val sess = spark; import sess.implicits._
-    implicit val sqlCtx = sess.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-    val q = graft.api.StreamzStateOps
-      .slidingWindowStream(ms.toDF().toDF("k", "seq", "v"), 3, "k", "seq", "v")
-      .select($"key", $"ord",
-        expr("aggregate(win, CAST(0.0 AS DOUBLE), (a, x) -> a + x)").as("wsum"))
-      .writeStream.format("memory").queryName("win_stream")
-      .outputMode("append").start()
-    ms.addData((1L, 1L, 1.0), (1L, 2L, 2.0))
-    q.processAllAvailable()
-    ms.addData((1L, 3L, 4.0), (1L, 4L, 8.0)) // ring evicts 1.0 at seq 4
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("win_stream").orderBy("key", "ord").collect()
-      .map(r => (r.getLong(1), r.getDouble(2))).toSeq
-    val batch = Seq((1L, 1L, 1.0), (1L, 2L, 2.0), (1L, 3L, 4.0), (1L, 4L, 8.0))
-      .toDF("k", "seq", "v")
-      .slidingWindow(3, sum($"v"), Seq($"seq"), Seq($"k"), as = "wsum")
-      .orderBy("k", "seq").collect()
-      .map(r => (r.getLong(1), r.getDouble(3))).toSeq
-    assert(got == batch, s"stream ring must equal batch window:\n$got\n$batch")
-    assert(got.last._2 == 14.0, "seq 4 window = 2+4+8 after evicting 1")
-  }
-
-  test("streaming seq packing: accumulateStream token fold reproduces batch q_seq_packing exactly") {
-    // #98's pack assignment is a running token sum — so the STREAMING
-    // path needs no new operator: accumulateStream keyed by
-    // (lang, shard) folds tokens in ord order, and pack_id =
-    // floor((acc - value) / budget) per emitted row. Prove the
-    // streamed assignment aggregates to the batch query's packs.
-    val sess = spark; import sess.implicits._
-    implicit val sqlCtx = sess.sqlContext
-    val docs = Tables.documents(spark, SparkTestBase.sf0001)
-      .select(col("doc_id"), col("lang"),
-        floor(col("doc_id") / lit(2000.0)).cast("long").as("shard"),
-        size(split(col("text"), " ")).cast("double").as("n_tokens"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    val langs = docs.map(_._2).distinct.sorted
-    val lidx = langs.zipWithIndex.toMap
-    val keyOf = (d: (Long, String, Long, Double)) => lidx(d._2) * 100000L + d._3
-    // two micro-batches split on ord, honoring the cross-batch
-    // per-key ordering contract (ord non-decreasing per key)
-    val (c1, c2) = docs.partition(_._1 < 250)
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-    val q = graft.api.StreamzStateOps
-      .accumulateStream(ms.toDF().toDF("k", "seq", "v"), "k", "seq", "v")
-      .writeStream.format("memory").queryName("pack_stream")
-      .outputMode("append").start()
-    ms.addData(c1.map(d => (keyOf(d), d._1, d._4)).toSeq: _*)
-    q.processAllAvailable()
-    ms.addData(c2.map(d => (keyOf(d), d._1, d._4)).toSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    // streamed per-doc pack assignment -> per-pack aggregates
-    val streamedPacks = spark.table("pack_stream").collect()
-      .map { r =>
-        val (key, ord, v, acc) = (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))
-        val pack = math.floor((acc - v) / graft.queries.PipelineExtras.PACK_BUDGET).toLong
-        ((langs((key / 100000L).toInt), key % 100000L, pack), (ord, v))
-      }
-      .groupBy(_._1).map { case (k, rows) =>
-        k -> (rows.length.toLong, rows.map(_._2._2).sum.toLong,
-          rows.map(_._2._1).min, rows.map(_._2._1).max)
-      }
-    val batch = graft.queries.PipelineExtras.qSeqPacking(spark, SparkTestBase.sf0001)
-      .collect().map { r =>
-        (r.getString(0), r.getLong(1), r.getLong(2)) ->
-          (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))
-      }.toMap
-    assert(streamedPacks == batch,
-      s"streamed packing must equal the batch query; " +
-      s"onlyStream=${(streamedPacks.keySet diff batch.keySet).take(3)} " +
-      s"onlyBatch=${(batch.keySet diff streamedPacks.keySet).take(3)}")
-  }
-
-  test("slidingWindowStreamTws: ListState ring == fMGWS ring, across a checkpoint restart") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    // Spark enforces RocksDB for transformWithState
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val sess = spark; import sess.implicits._
       implicit val sqlCtx = sess.sqlContext
-      val cp = java.nio.file.Files.createTempDirectory("ring_tws_cp").toString
-      val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Seq[Double])]()
+      val cp = java.nio.file.Files.createTempDirectory("ring_cp").toString
+      val emitted =
+        new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Seq[Double], Double)]()
       val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
       def start() = graft.api.StreamzStateOps
-        .slidingWindowStreamTws(ms.toDF().toDF("k", "seq", "v"), 3, "k", "seq", "v")
+        .slidingWindowStream(ms.toDF().toDF("k", "seq", "v"), 3, "k", "seq", "v")
+        .select($"key", $"ord", $"win",
+          expr("aggregate(win, CAST(0.0 AS DOUBLE), (a, x) -> a + x)").as("wsum"))
         .writeStream
         .option("checkpointLocation", cp)
         .outputMode("append")
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          df.collect().foreach(r =>
-            emitted.add((r.getLong(0), r.getLong(1), r.getSeq[Double](3))))
+          df.collect().foreach(r => emitted.add(
+            (r.getLong(0), r.getLong(1), r.getSeq[Double](2), r.getDouble(3))))
           ()
         }.start()
       val q1 = start()
       ms.addData((1L, 2L, 2.0), (1L, 1L, 1.0), (2L, 1L, 5.0)) // in-batch out of order
       q1.processAllAvailable()
-      q1.stop() // the ring must rehydrate from RocksDB ListState
+      q1.stop() // the ring must rehydrate from the ListState slot
       val q2 = start()
-      ms.addData((1L, 3L, 4.0), (1L, 4L, 8.0), (2L, 2L, 7.0)) // evicts 1.0 at seq 4
+      ms.addData((1L, 3L, 4.0), (1L, 4L, 8.0), (2L, 2L, 7.0)) // ring evicts 1.0 at seq 4
       q2.processAllAvailable()
       q2.stop()
-      val got = emitted.toArray(Array.empty[(Long, Long, Seq[Double])])
+      val got = emitted.toArray(Array.empty[(Long, Long, Seq[Double], Double)])
         .sortBy(t => (t._1, t._2)).toSeq
-      // the old-API op is the semantic oracle
-      val wantDf = Seq((1L, 1L, 1.0), (1L, 2L, 2.0), (1L, 3L, 4.0),
-          (1L, 4L, 8.0), (2L, 1L, 5.0), (2L, 2L, 7.0)).toDF("k", "seq", "v")
-      val want = graft.api.StreamzStateOps
-        .slidingWindowStream(wantDf, 3, "k", "seq", "v")
-        .orderBy("key", "ord").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](3))).toSeq
-      assert(got == want,
-        s"TWS ring must equal the fMGWS ring:\n$got\n$want")
-      assert(got.find(t => t._1 == 1L && t._2 == 4L).get._3 == Seq(2.0, 4.0, 8.0),
-        "seq 4 ring must have evicted the first value")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      val batch = Seq((1L, 1L, 1.0), (1L, 2L, 2.0), (1L, 3L, 4.0),
+          (1L, 4L, 8.0), (2L, 1L, 5.0), (2L, 2L, 7.0))
+        .toDF("k", "seq", "v")
+        .slidingWindow(3, sum($"v"), Seq($"seq"), Seq($"k"), as = "wsum")
+        .slidingWindow(3, collect_list($"v"), Seq($"seq"), Seq($"k"), as = "ring")
+        .orderBy("k", "seq").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](4), r.getDouble(3))).toSeq
+      assert(got == batch, s"stream ring must equal batch window:\n$got\n$batch")
+      val seq4 = got.find(t => t._1 == 1L && t._2 == 4L).get
+      assert(seq4._3 == Seq(2.0, 4.0, 8.0), "seq 4 ring must have evicted the first value")
+      assert(seq4._4 == 14.0, "seq 4 window = 2+4+8 after evicting 1")
+    }
+  }
+
+  test("streaming seq packing: accumulateStream token fold reproduces batch q_seq_packing exactly") {
+    withRocksDb {
+      // #98's pack assignment is a running token sum — so the STREAMING
+      // path needs no new operator: accumulateStream keyed by
+      // (lang, shard) folds tokens in ord order, and pack_id =
+      // floor((acc - value) / budget) per emitted row. Prove the
+      // streamed assignment aggregates to the batch query's packs.
+      val sess = spark; import sess.implicits._
+      implicit val sqlCtx = sess.sqlContext
+      val docs = Tables.documents(spark, SparkTestBase.sf0001)
+        .select(col("doc_id"), col("lang"),
+          floor(col("doc_id") / lit(2000.0)).cast("long").as("shard"),
+          size(split(col("text"), " ")).cast("double").as("n_tokens"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      val langs = docs.map(_._2).distinct.sorted
+      val lidx = langs.zipWithIndex.toMap
+      val keyOf = (d: (Long, String, Long, Double)) => lidx(d._2) * 100000L + d._3
+      // two micro-batches split on ord, honoring the cross-batch
+      // per-key ordering contract (ord non-decreasing per key)
+      val (c1, c2) = docs.partition(_._1 < 250)
+      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
+      val q = graft.api.StreamzStateOps
+        .accumulateStream(ms.toDF().toDF("k", "seq", "v"), "k", "seq", "v")
+        .writeStream.format("memory").queryName("pack_stream")
+        .outputMode("append").start()
+      ms.addData(c1.map(d => (keyOf(d), d._1, d._4)).toSeq: _*)
+      q.processAllAvailable()
+      ms.addData(c2.map(d => (keyOf(d), d._1, d._4)).toSeq: _*)
+      q.processAllAvailable()
+      q.stop()
+      // streamed per-doc pack assignment -> per-pack aggregates
+      val streamedPacks = spark.table("pack_stream").collect()
+        .map { r =>
+          val (key, ord, v, acc) = (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))
+          val pack = math.floor((acc - v) / graft.queries.PipelineExtras.PACK_BUDGET).toLong
+          ((langs((key / 100000L).toInt), key % 100000L, pack), (ord, v))
+        }
+        .groupBy(_._1).map { case (k, rows) =>
+          k -> (rows.length.toLong, rows.map(_._2._2).sum.toLong,
+            rows.map(_._2._1).min, rows.map(_._2._1).max)
+        }
+      val batch = graft.queries.PipelineExtras.qSeqPacking(spark, SparkTestBase.sf0001)
+        .collect().map { r =>
+          (r.getString(0), r.getLong(1), r.getLong(2)) ->
+            (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))
+        }.toMap
+      assert(streamedPacks == batch,
+        s"streamed packing must equal the batch query; " +
+        s"onlyStream=${(streamedPacks.keySet diff batch.keySet).take(3)} " +
+        s"onlyBatch=${(batch.keySet diff streamedPacks.keySet).take(3)}")
     }
   }
 
