@@ -45,8 +45,9 @@ trait CdcChangelog {
   def pollHorizon(): (Long, Long)
 
   /** Predicate-shaped partitions covering seq ∈ (start, end].
-    * Implementations may consult backend-private history indexes for
-    * mid-stream slices (start ≥ 0). */
+    * Implementations may read a backend-private copy of the log
+    * prepared by [[pollHorizon]] (the parquet simulator's
+    * [[ChangelogSidecar]]). */
   def planSlices(start: Long, end: Long): Array[InputPartition]
 
   /** Executor-side reader resolving one planned slice. Built on the
@@ -54,24 +55,26 @@ trait CdcChangelog {
   def readerFactory(): PartitionReaderFactory
 }
 
-/** The parquet simulator as a [[CdcChangelog]] — thin delegation to
-  * the existing slice planner and parquet-hadoop reader, so the
-  * stream machinery consumes ONLY the trait.
+/** The parquet simulator as a [[CdcChangelog]], so the stream
+  * machinery consumes ONLY the trait. `pollHorizon` reuses or builds
+  * the [[ChangelogSidecar]], and every slice is a seq-range read of
+  * its partition's sidecar file.
   *
-  * @param firstSeenIndex lazily-built bucketed first-seen key index
-  *        (simulator-only op-derivation aid; the stream owns the
-  *        checkpoint dir it lives under, hence the thunk). Consulted
-  *        only for mid-stream slices — a snapshot batch needs no
-  *        history pass at all.
+  * @param sidecar where the derived log lives; a stream keeps it under
+  *        its checkpoint. The default, for direct callers, is a fresh
+  *        driver-local temporary directory removed when the JVM exits,
+  *        which only a local session's executors can read.
   */
 final class ParquetChangelog(path: String, numPartitions: Int,
-    deletes: Boolean, firstSeenIndex: () => Option[String] = () => None)
+    deletes: Boolean, sidecar: ChangelogSidecar = ChangelogSidecar.temporary())
     extends CdcChangelog {
-  private lazy val stats: (Long, Long) = PgCdcSim.changelogStats(path, deletes)
-  override def pollHorizon(): (Long, Long) = stats
-  override def planSlices(start: Long, end: Long): Array[InputPartition] =
-    ChangelogSlice.plan(path, start, end, numPartitions, deletes, stats._1,
-      if (start >= 0L) firstSeenIndex() else None)
+  private lazy val horizon: (Long, Long) = sidecar.open(path, numPartitions, deletes)
+  override def pollHorizon(): (Long, Long) = horizon
+  override def planSlices(start: Long, end: Long): Array[InputPartition] = {
+    horizon // a batch recovered from the offset log plans before any poll
+    (0 until numPartitions).map(i =>
+      SidecarSlice(sidecar.partFile(i), start, end): InputPartition).toArray
+  }
   override def readerFactory(): PartitionReaderFactory =
     ChangelogReaderFactory.forSession()
 }

@@ -3,12 +3,7 @@ package graft.sources
 import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
@@ -44,17 +39,25 @@ import org.apache.spark.unsafe.types.UTF8String
   *    single monotonic long → trivially restartable from the
   *    checkpoint WAL).
   *
-  * JDBC-shaped execution (round-2): the driver plans OFFSETS ONLY —
-  * its one data access is a tiny aggregate (max seq / max tombstoned
-  * key), the analog of the reference's `SELECT max(xmin)` poll. Each
-  * `ChangelogSlice` carries a PREDICATE, not rows: (seq range, key-
-  * hash partition id). Executor-side readers pull their own rows
-  * straight from the changelog file via parquet-hadoop — no
-  * driver-side row shipping, no rows inside task binaries. In
-  * production only `ChangelogReader.open` changes: the same predicate
-  * becomes `WHERE seq > ? AND seq <= ? AND hash(key) % n = ?` on a
-  * JDBC connection (or a Kafka topic-partition seek); offsets,
-  * planning, and downstream semantics stay identical.
+  * JDBC-shaped execution: the driver plans OFFSETS ONLY and never
+  * materializes changelog rows. Each slice carries a PREDICATE, not
+  * rows: (seq range, key-hash partition id), resolved executor-side
+  * via parquet-hadoop — no driver-side row shipping, no rows inside
+  * task binaries. In production the same predicate becomes `WHERE seq
+  * > ? AND seq <= ? AND hash(key) % n = ?` on a JDBC connection (or a
+  * Kafka topic-partition seek); offsets, planning, and downstream
+  * semantics stay identical.
+  *
+  * A stream pays the changelog-sized work once: its first
+  * `pollHorizon` reads the data horizon from the changelog's footer
+  * statistics (the `SELECT max(xmin)` analog) and runs one plain
+  * n-task job that writes the derived changelog (op = I/U plus the
+  * tombstones) as one seq-sorted parquet file per key-hash partition
+  * under the checkpoint ([[ChangelogSidecar]]). Every slice after
+  * that, the snapshot included, is one seq-range read of its own
+  * partition's file, so a poll's cost follows the poll, not the log.
+  * The sidecar assumes the changelog is immutable for the life of a
+  * checkpoint, as a replay fixture is.
   *
   * Key-hash partitioning gives each reader the FULL history of its
   * keys, which is what makes op derivation (first-seen = I) and
@@ -108,11 +111,7 @@ object PgCdcSim {
   final case class CdcRow(seq: Long, key: Long, op: String, tsUs: Long,
       eventType: String, value: java.lang.Double) // value nullable per schema
 
-  /** Keys tombstoned when `deletes` is on: deterministic subset.
-    * MOD/REM are the single source of truth — changelogStats' SQL
-    * predicate derives from them too, so the planner's max-seq bound
-    * can never diverge from the readers' tombstone derivation.
-    */
+  /** Keys tombstoned when `deletes` is on: deterministic subset. */
   val DELETED_KEY_MOD = 10L
   val DELETED_KEY_REM = 7L
   def isDeletedKey(key: Long): Boolean = key % DELETED_KEY_MOD == DELETED_KEY_REM
@@ -121,25 +120,6 @@ object PgCdcSim {
     * key order, collision-free because keys are unique.
     */
   def deleteSeq(maxDataSeq: Long, key: Long): Long = maxDataSeq + 1 + key
-
-  /** Driver-side planning stats — the `SELECT max(xmin)` analog. One
-    * tiny aggregate job; NO rows reach the driver.
-    * Returns (max data seq, max overall seq incl. tombstones).
-    */
-  def changelogStats(path: String, deletes: Boolean): (Long, Long) = {
-    val spark = SparkSession.active
-    graft.Tables.setEventsReadConfs(spark)
-    val agg = spark.read.parquet(path).agg(
-      max(col("event_id")).as("max_seq"),
-      max(when(col("user_id") % DELETED_KEY_MOD === DELETED_KEY_REM,
-        col("user_id"))).as("max_del_key"))
-      .collect()(0)
-    val maxSeq = if (agg.isNullAt(0)) -1L else agg.getLong(0)
-    val maxAll =
-      if (!deletes || agg.isNullAt(1)) maxSeq
-      else math.max(maxSeq, deleteSeq(maxSeq, agg.getLong(1)))
-    (maxSeq, maxAll)
-  }
 
   /** Reference implementation of the changelog derivation, driver-side
     * (test oracle; the source itself reads executor-side via
@@ -229,17 +209,19 @@ class PgCdcSimScan(path: String, batchSize: Long, snapshotSeqOpt: Long,
   override def description(): String = s"PgCdcSim(path=$path, batchSize=$batchSize)"
 
   override def toBatch: Batch = new Batch {
-    // the same connector seam the stream uses (sources/CdcChangelog);
-    // the horizon poll is one tiny driver-side aggregate — readers
-    // need the data horizon to place tombstone seqs without scanning
-    // the log themselves
-    private lazy val changelog: CdcChangelog =
-      if (backend == "debezium-json") new DebeziumJsonChangelog(path, keyField, numPartitions)
-      else new ParquetChangelog(path, numPartitions, deletes)
+    // the parquet simulator reads the raw changelog once per
+    // partition, with no sidecar: readers get the data horizon, read
+    // from the footers, to place tombstone seqs without scanning the
+    // log themselves. The Debezium feed goes through its connector seam
+    private lazy val debezium =
+      new DebeziumJsonChangelog(path, keyField, numPartitions)
     override def planInputPartitions(): Array[InputPartition] =
-      changelog.planSlices(Long.MinValue, Long.MaxValue) // full range ⇒ no history pass
+      if (backend == "debezium-json") debezium.planSlices(Long.MinValue, Long.MaxValue)
+      else ChangelogSlice.plan(path, numPartitions, deletes, ChangelogFiles.dataHorizon(
+        path, SparkSession.active.sessionState.newHadoopConf()))
     override def createReaderFactory(): PartitionReaderFactory =
-      changelog.readerFactory()
+      if (backend == "debezium-json") debezium.readerFactory()
+      else ChangelogReaderFactory.forSession()
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
@@ -262,36 +244,17 @@ class PgCdcSimMicroBatchStream(path: String, batchSize: Long,
     if (backend == "debezium-json")
       new DebeziumJsonChangelog(path, keyField, numPartitions)
     else
-      new ParquetChangelog(path, numPartitions, deletes, () => Some(firstSeenDir))
+      // the partition count is in the dir name, so a restart with a
+      // different numPartitions builds its own sidecar; row groups of
+      // about one poll's share per partition let a poll's seq
+      // predicate skip the rest of the file
+      new ParquetChangelog(path, numPartitions, deletes, ChangelogSidecar(
+        s"$checkpointLocation/sources_graft/log_n$numPartitions",
+        math.min(Int.MaxValue.toLong, math.max(1L, batchSize / numPartitions)).toInt))
   private lazy val changelog: CdcChangelog = makeChangelog()
   // planning stats only — the driver never materializes changelog rows
   private lazy val stats: (Long, Long) = changelog.pollHorizon()
   private lazy val maxSeq: Long = stats._2
-
-  /** First-seen key index sidecar, built ONCE per stream (one Spark
-    * job, no rows to the driver) under the checkpoint: (user_id,
-    * first_seq) bucketed by the reader partitioning. Mid-stream
-    * readers resolve "did this key change before my slice?" from
-    * their own bucket — O(keys/partition) — instead of re-scanning a
-    * two-column prefix of the changelog on EVERY micro-batch. Safe to
-    * reuse across restarts (same checkpoint ⇒ same changelog replay
-    * fixture); the bucket count is baked into the dir name so a
-    * restart with different numPartitions rebuilds it.
-    */
-  private lazy val firstSeenDir: String = {
-    val spark = SparkSession.active
-    graft.Tables.setEventsReadConfs(spark)
-    val dir = s"$checkpointLocation/sources_graft/first_seen_n$numPartitions"
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(new Path(s"$dir/_SUCCESS")))
-      spark.read.parquet(path)
-        .groupBy(col("user_id"))
-        .agg(min(col("event_id")).as("first_seq"))
-        .withColumn("part", pmod(col("user_id"), lit(numPartitions.toLong)))
-        .repartition(numPartitions, col("part"))
-        .write.mode("overwrite").partitionBy("part").parquet(dir)
-    dir
-  }
   // clamped to maxSeq on BOTH paths: an out-of-range snapshotSeq or an
   // empty changelog (maxSeq = -1, where -1/2 == 0 in Scala) must not
   // create offsets beyond the data — otherwise latestOffset would
@@ -333,9 +296,6 @@ class PgCdcSimMicroBatchStream(path: String, batchSize: Long,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SeqOffset].seq
     val e = end.asInstanceOf[SeqOffset].seq
-    // the first-seen sidecar only pays off (and is only consulted,
-    // inside ParquetChangelog) for mid-stream slices that would
-    // otherwise scan a history prefix
     changelog.planSlices(s, e)
   }
 
@@ -346,36 +306,33 @@ class PgCdcSimMicroBatchStream(path: String, batchSize: Long,
   override def stop(): Unit = ()
 }
 
-/** Predicate-bearing partition: seq range (start, end] + key-hash
-  * partition (hash(key) % numPartitions == partId). NO rows — the
-  * executor-side reader resolves the predicate against the changelog
-  * itself. This is the exact shape of a JDBC-polling partition
-  * (`WHERE seq > ? AND seq <= ? AND hash(key) % n = ?`) or a Kafka
-  * topic-partition offset range. `maxDataSeq` is the driver-planned
-  * data horizon (max seq in the log, tombstones excluded): readers
-  * place tombstone seqs with it instead of re-deriving it by scanning.
-  * `firstSeenDir`, when set, points at the stream's bucketed
-  * first-seen key index — readers resolve op derivation from their
-  * own bucket instead of scanning the changelog prefix.
+/** Predicate-bearing partition of the WHOLE raw changelog: one
+  * key-hash partition (hash(key) % numPartitions == partId). NO rows
+  * — the executor-side reader resolves the predicate against the
+  * changelog itself, the shape of a JDBC partition (`WHERE hash(key)
+  * % n = ?`). `maxDataSeq` is the driver-planned data horizon (max seq
+  * in the log, tombstones excluded): readers place tombstone seqs with
+  * it instead of re-deriving it by scanning. Serves batch reads and
+  * the [[ChangelogSidecar]] build; a stream's seq-range slices are
+  * [[SidecarSlice]]s.
   */
-final case class ChangelogSlice(path: String, start: Long, end: Long,
-    partId: Int, numPartitions: Int, deletes: Boolean,
-    maxDataSeq: Long, firstSeenDir: Option[String]) extends InputPartition
+final case class ChangelogSlice(path: String, partId: Int,
+    numPartitions: Int, deletes: Boolean, maxDataSeq: Long)
+    extends InputPartition
 
 object ChangelogSlice {
-  def plan(path: String, start: Long, end: Long, numPartitions: Int,
-      deletes: Boolean, maxDataSeq: Long,
-      firstSeenDir: Option[String]): Array[InputPartition] =
+  def plan(path: String, numPartitions: Int, deletes: Boolean,
+      maxDataSeq: Long): Array[InputPartition] =
     (0 until numPartitions).map { i =>
-      ChangelogSlice(path, start, end, i, numPartitions, deletes,
-        maxDataSeq, firstSeenDir): InputPartition
+      ChangelogSlice(path, i, numPartitions, deletes, maxDataSeq): InputPartition
     }.toArray
 }
 
 /** Test-visible read-amplification telemetry: every record a
-  * changelog pass actually MATERIALIZES (i.e. survived parquet
-  * row-group statistics + record-level filtering). CdcSourceSuite
-  * asserts a narrow slice stays far below full-log materialization.
+  * changelog or sidecar read actually MATERIALIZES (i.e. survived
+  * parquet row-group statistics + record-level filtering).
+  * CdcSourceSuite asserts a narrow slice stays far below full-log
+  * materialization.
   */
 object ChangelogReadMetrics {
   val recordsMaterialized = new java.util.concurrent.atomic.LongAdder
@@ -395,73 +352,80 @@ object ChangelogReaderFactory {
 class ChangelogReaderFactory(conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ChangelogReader(partition.asInstanceOf[ChangelogSlice], conf.value)
+    partition match {
+      case s: SidecarSlice => new SidecarReader(s, conf.value)
+      case s: ChangelogSlice => new ChangelogReader(s, conf.value)
+    }
 }
 
-/** Executor-side changelog reader: pulls THIS partition's rows
-  * directly from the parquet changelog via parquet-hadoop (no
-  * SparkSession on executors, no driver shipping). In production
-  * each pass below is a JDBC query / Kafka seek resolving the same
-  * predicate server-side.
+/** The raw changelog's data files and what their footers tell. */
+object ChangelogFiles {
+  /** `path` itself, or a directory's data files (hidden `_`/`.` names
+    * skipped) in name order; empty when `path` does not exist. */
+  def list(path: String, conf: Configuration): Array[Path] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Array.empty
+    else if (!fs.getFileStatus(p).isDirectory) Array(p)
+    else fs.listStatus(p).map(_.getPath)
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .sortBy(_.toString)
+  }
+
+  /** Max `event_id` of the changelog (-1 when empty) from its
+    * column-chunk max statistics: footers only, no data pages and no
+    * Spark job. Falls back to one `max(event_id)` aggregate job when a
+    * non-empty chunk carries no statistics. */
+  def dataHorizon(path: String, conf: Configuration): Long = {
+    import scala.jdk.CollectionConverters._
+    val chunkMaxes = list(path, conf).toSeq.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try r.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == "event_id")
+          .map(_.getStatistics).filter(s => s != null && !s.isEmpty)
+          .map(s => if (s.hasNonNullValue) s.genericGetMax.asInstanceOf[Number].longValue
+                    else -1L) // an all-null chunk holds no seq
+      } finally r.close()
+    }
+    if (chunkMaxes.forall(_.isDefined)) (-1L +: chunkMaxes.flatten).max
+    else {
+      val spark = SparkSession.active
+      graft.Tables.setEventsReadConfs(spark)
+      val agg = spark.read.parquet(path).agg(max(col("event_id"))).collect()(0)
+      if (agg.isNullAt(0)) -1L else agg.getLong(0)
+    }
+  }
+}
+
+/** Executor-side RAW changelog reader: derives THIS partition's whole
+  * history directly from the parquet changelog via parquet-hadoop (no
+  * SparkSession on executors, no driver shipping). In production the
+  * read is a JDBC query / Kafka seek resolving the same predicate
+  * server-side. Batch reads and the [[ChangelogSidecar]] build use
+  * it; a stream reads the sidecar instead.
   *
-  * The slice's predicates are PUSHED INTO the parquet read as
-  * `FilterPredicate`s (row-group statistics skip whole groups only
-  * when the changelog's row groups are clustered by seq; record-level
-  * filtering drops the rest before materialization) and each pass
-  * projects only the columns it needs:
+  * One pass over the changelog's five columns keeps this partition's
+  * rows; sorted by seq, a key's first row is op = I and the rest U.
+  * With `deletes`, each deleted key's tombstone takes its last
+  * timestamp from the same rows, so there is no second pass.
   *
-  *  1. output pass — rows with seq ∈ (start, end], all columns: the
-  *     only full-width read. On a seq-clustered changelog it touches
-  *     only row groups overlapping the slice; on one whose groups
-  *     span the whole seq range (a single row group, or rows stored
-  *     out of seq order) no group is skipped, and every reader
-  *     decodes the whole log on every poll;
-  *  2. history — which of this partition's keys appeared before the
-  *     slice (op = I on a key's global first change). Resolved from
-  *     this partition's bucket of the stream's first-seen key index
-  *     when one exists (built once per stream — O(keys/partition) per
-  *     batch), else a 2-column (event_id, user_id) prefix pass with
-  *     seq ≤ start pushed down. Skipped entirely for the snapshot
-  *     batch (start < 0);
-  *  3. tombstone pass — only when the slice range extends past the
-  *     data horizon: tombstone seqs are maxDataSeq+1+key, so the seq
-  *     range inverts to a KEY range pushed down on (user_id, ts) to
-  *     recover each deleted key's final timestamp.
-  *
-  * vs the pre-round-6 reader (full-log scan, all columns, per slice,
-  * per micro-batch): on a seq-clustered changelog a narrow poll reads
-  * its own row groups plus a two-column prefix instead of the full
-  * log. On an unclustered one the output pass still decodes every row
-  * group per reader and per poll (filtering then drops the rows before
-  * materialization), so the O(full log) decode cost remains there.
+  * Memory: one partition's whole history, buffered once as
+  * [[PgCdcSim.CdcRow]]s to sort it by seq.
   */
 class ChangelogReader(slice: ChangelogSlice, hadoopConf: Configuration)
     extends PartitionReader[InternalRow] {
   import PgCdcSim.CdcRow
 
   /** Footer schema of the changelog (first data file under `path`);
-    * None for an empty directory. Needed to build column projections
-    * that preserve the file's exact physical types/annotations.
-    * Lazy: one directory listing + footer open per READER, not per
-    * pass — three passes re-listing an object store would dominate
-    * small-batch latency.
+    * None for an empty directory. Needed to build the column
+    * projection that preserves the file's exact physical
+    * types/annotations.
     */
-  private lazy val changelogSchema: Option[MessageType] = {
-    val p = new Path(slice.path)
-    val fs = p.getFileSystem(hadoopConf)
-    if (!fs.exists(p)) None
-    else {
-      val dataFiles =
-        if (!fs.getFileStatus(p).isDirectory) Array(p)
-        else fs.listStatus(p).map(_.getPath)
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .sortBy(_.toString)
-      dataFiles.headOption.map { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, hadoopConf))
-        try r.getFooter.getFileMetaData.getSchema finally r.close()
-      }
+  private lazy val changelogSchema: Option[MessageType] =
+    ChangelogFiles.list(slice.path, hadoopConf).headOption.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, hadoopConf))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
     }
-  }
 
   /** ts → µs conversion derived from the footer's logical annotation,
     * NOT hard-coded: the fixture's `ts` has been both TIMESTAMP(NANOS)
@@ -486,143 +450,49 @@ class ChangelogReader(slice: ChangelogSlice, hadoopConf: Configuration)
       .getOrElse((raw: Long) => raw / 1000L)
   }
 
-  /** Spark's DEFAULT parquet timestamp output is INT96 (julian-day +
-    * nanos-of-day, no logical annotation) — any Spark-written
-    * changelog (e.g. the GenScale 10× events set, or a real pipeline
-    * re-materializing the feed) carries it, while the driver fixture
-    * uses annotated INT64. Caught by the r15 streaming scale probe:
-    * `getLong("ts")` on an INT96 column throws ClassCastException in
-    * the executor. Physical type is read from the footer once. */
-  private lazy val tsIsInt96: Boolean = changelogSchema.exists { s =>
-    s.containsField("ts") && {
-      val t = s.getType(s.getFieldIndex("ts"))
-      t.isPrimitive && t.asPrimitiveType().getPrimitiveTypeName ==
-        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96
-    }
-  }
-
-  /** ts of `g` in µs since epoch, handling both physical encodings. */
-  private def tsMicrosOf(g: Group): Long =
-    if (tsIsInt96) {
-      // INT96 layout: 8 bytes nanos-of-day + 4 bytes julian day, both
-      // little-endian (the layout every parquet writer emits and
-      // Spark's own ParquetRowConverter decodes)
-      val buf = java.nio.ByteBuffer.wrap(g.getInt96("ts", 0).getBytes)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val nanosOfDay = buf.getLong
-      val julianDay = buf.getInt
-      (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-    } else tsRawToMicros(g.getLong("ts", 0))
-
-  /** One filtered, column-projected pass over the changelog. */
-  private def scanPass(cols: Seq[String], pred: FilterPredicate)
-      (f: Group => Unit): Unit =
-    changelogSchema.foreach { schema =>
-      val conf = new Configuration(hadoopConf)
-      val projection = new MessageType("graft_changelog_projection",
-        cols.map(c => schema.getType(schema.getFieldIndex(c))): _*)
-      conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new Path(slice.path))
-        .withConf(conf)
-        .withFilter(FilterCompat.get(pred))
-        .build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          ChangelogReadMetrics.recordsMaterialized.increment()
-          f(g)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-
   private def mineKey(key: Long): Boolean =
     math.floorMod(key, slice.numPartitions.toLong) == slice.partId
 
-  private lazy val rows: Array[CdcRow] = {
-    val seqCol = FilterApi.longColumn("event_id")
-    val keyCol = FilterApi.longColumn("user_id")
-
-    // History: which of my keys already changed at or before `start`?
-    // (A key's op depends only on EARLIER seqs, so seq ≤ start is
-    // sufficient history for every row in the slice.) Preferred
-    // source: this partition's bucket of the stream's first-seen key
-    // index — O(keys/partition). Fallback (batch path / no sidecar):
-    // a 2-column prefix pass over the changelog itself.
-    val seenBefore = scala.collection.mutable.HashSet.empty[Long]
-    if (slice.start >= 0L) slice.firstSeenDir match {
-      case Some(idx) =>
-        val bucket = new Path(s"$idx/part=${slice.partId}")
-        if (bucket.getFileSystem(hadoopConf).exists(bucket)) {
-          val reader = ParquetReader
-            .builder(new GroupReadSupport(), bucket)
-            .withConf(new Configuration(hadoopConf))
-            .withFilter(FilterCompat.get(
-              FilterApi.ltEq(FilterApi.longColumn("first_seq"),
-                Long.box(slice.start))))
-            .build()
-          try {
-            var g = reader.read()
-            while (g != null) {
-              ChangelogReadMetrics.recordsMaterialized.increment()
-              seenBefore += g.getLong("user_id", 0)
-              g = reader.read()
-            }
-          } finally reader.close()
+  /** This partition's rows, in seq order. Rows are decoded into one
+    * reused [[ChangelogRecord]], so other partitions' keys allocate
+    * nothing. */
+  private[sources] lazy val rows: Array[CdcRow] = {
+    val mine = scala.collection.mutable.ArrayBuffer.empty[CdcRow]
+    changelogSchema.foreach { schema =>
+      val projection = new MessageType("graft_changelog_projection",
+        Seq("event_id", "user_id", "ts", "event_type", "value")
+          .map(c => schema.getType(schema.getFieldIndex(c))): _*)
+      val reader = ParquetReader
+        .builder(new ChangelogRecordReadSupport(projection, tsRawToMicros), new Path(slice.path))
+        .withConf(hadoopConf)
+        .build()
+      try {
+        var r = reader.read()
+        while (r != null) {
+          ChangelogReadMetrics.recordsMaterialized.increment()
+          if (mineKey(r.key)) mine += CdcRow(r.seq, r.key, null, r.tsUs, r.eventType,
+            if (r.hasValue) java.lang.Double.valueOf(r.value) else null)
+          r = reader.read()
         }
-      case None =>
-        scanPass(Seq("event_id", "user_id"),
-            FilterApi.ltEq(seqCol, Long.box(slice.start))) { g =>
-          val key = g.getLong("user_id", 0)
-          if (mineKey(key)) seenBefore += key
-        }
+      } finally reader.close()
     }
-
-    // full-width output pass, clipped to (start, end] at the scan
-    val mine = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Long, String, java.lang.Double)]
-    scanPass(Seq("event_id", "user_id", "ts", "event_type", "value"),
-        FilterApi.and(FilterApi.gt(seqCol, Long.box(slice.start)),
-          FilterApi.ltEq(seqCol, Long.box(slice.end)))) { g =>
-      val key = g.getLong("user_id", 0)
-      if (mineKey(key)) {
-        val tsUs = tsMicrosOf(g)
-        val et = if (g.getFieldRepetitionCount("event_type") == 0) null
-                 else g.getString("event_type", 0)
-        val v: java.lang.Double =
-          if (g.getFieldRepetitionCount("value") == 0) null
-          else g.getDouble("value", 0)
-        mine += ((g.getLong("event_id", 0), key, tsUs, et, v))
-      }
-    }
+    val data = mine.toArray
+    mine.clear()
+    java.util.Arrays.sort(data, (a: CdcRow, b: CdcRow) => java.lang.Long.compare(a.seq, b.seq))
     val seen = scala.collection.mutable.HashSet.empty[Long]
-    val data = mine.sortBy(_._1).toArray.map { case (seq, key, tsUs, et, v) =>
-      val op = if (!seenBefore.contains(key) && seen.add(key)) "I" else "U"
-      CdcRow(seq, key, op, tsUs, et, v)
-    }
+    // op in place: one buffered copy of the history, not two
+    for (i <- data.indices)
+      data(i) = data(i).copy(op = if (seen.add(data(i).key)) "I" else "U")
 
-    // tombstone pass: seq range (start, end] ∩ (maxDataSeq, ∞) maps
-    // 1:1 to key range (start-maxDataSeq-1, end-maxDataSeq-1] — push
-    // THAT down and read only (user_id, ts) of the affected keys
+    // tombstones at maxDataSeq+1+key, after each deleted key's last change
     val tombs =
-      if (!slice.deletes || slice.maxDataSeq < 0L ||
-          slice.end <= slice.maxDataSeq) Array.empty[CdcRow]
+      if (!slice.deletes || slice.maxDataSeq < 0L) Array.empty[CdcRow]
       else {
-        val kLo = if (slice.start < 0L) -1L
-                  else slice.start - slice.maxDataSeq - 1L // exclusive
-        val kHi = if (slice.end == Long.MaxValue) Long.MaxValue
-                  else slice.end - slice.maxDataSeq - 1L // inclusive
         val maxTsUs = scala.collection.mutable.HashMap.empty[Long, Long]
-        scanPass(Seq("user_id", "ts"),
-            FilterApi.and(FilterApi.gt(keyCol, Long.box(kLo)),
-              FilterApi.ltEq(keyCol, Long.box(kHi)))) { g =>
-          val key = g.getLong("user_id", 0)
-          if (mineKey(key) && PgCdcSim.isDeletedKey(key)) {
-            val tsUs = tsMicrosOf(g)
-            maxTsUs.updateWith(key)(p =>
-              Some(math.max(p.getOrElse(Long.MinValue), tsUs)))
-          }
+        data.foreach { r =>
+          if (PgCdcSim.isDeletedKey(r.key))
+            maxTsUs.updateWith(r.key)(p =>
+              Some(math.max(p.getOrElse(Long.MinValue), r.tsUs)))
         }
         maxTsUs.toArray.map { case (k, t) =>
           CdcRow(PgCdcSim.deleteSeq(slice.maxDataSeq, k), k, "D",
@@ -641,4 +511,101 @@ class ChangelogReader(slice: ChangelogSlice, hadoopConf: Configuration)
       r.value)
   }
   override def close(): Unit = ()
+}
+
+/** One changelog record, overwritten in place by
+  * [[ChangelogRecordReadSupport]] for every record. */
+final class ChangelogRecord {
+  var seq = 0L
+  var key = 0L
+  var op: String = _
+  var tsUs = 0L
+  var eventType: String = _
+  var hasValue = false
+  var value = 0.0
+}
+
+/** Materializes changelog records straight into one reused
+  * [[ChangelogRecord]], with no per-record object assembly, from the
+  * raw changelog's columns (event_id, user_id, ts, event_type, value)
+  * or a [[ChangelogSidecar]]'s, which adds op. `ts` decodes from
+  * either physical encoding: INT64 via `tsRawToMicros`, or INT96 —
+  * Spark's DEFAULT parquet timestamp output (julian day + nanos-of-day,
+  * no annotation), which any Spark-written changelog carries (e.g. the
+  * GenScale 10× events set; caught by the r15 streaming scale probe as
+  * a ClassCastException in the executor). String dictionary pages
+  * decode each distinct value once. Only event_type and value may be
+  * null: a record missing any other projected column fails the read,
+  * naming the column, instead of keeping the previous record's value.
+  */
+final class ChangelogRecordReadSupport(projection: MessageType,
+    tsRawToMicros: Long => Long)
+    extends org.apache.parquet.hadoop.api.ReadSupport[ChangelogRecord] {
+  import org.apache.parquet.column.Dictionary
+  import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+  import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+
+  override def init(context: InitContext): ReadSupport.ReadContext =
+    new ReadSupport.ReadContext(projection)
+
+  override def prepareForRead(conf: Configuration,
+      keyValueMetaData: util.Map[String, String], fileSchema: MessageType,
+      readContext: ReadSupport.ReadContext): RecordMaterializer[ChangelogRecord] = {
+    val rec = new ChangelogRecord
+    val names = (0 until projection.getFieldCount).map(projection.getFieldName)
+    val required = names.indices
+      .filterNot(i => names(i) == "event_type" || names(i) == "value")
+      .foldLeft(0)((mask, i) => mask | 1 << i)
+    var present = 0 // bit i: column i was set in the current record
+    def converter(i: Int): Converter = {
+      def long(set: Long => Unit): Converter = new PrimitiveConverter {
+        override def addLong(v: Long): Unit = { present |= 1 << i; set(v) }
+        override def addInt(v: Int): Unit = addLong(v.toLong)
+      }
+      def string(set: String => Unit): Converter = new PrimitiveConverter {
+        private var dict: Array[String] = Array.empty
+        override def hasDictionarySupport: Boolean = true
+        override def setDictionary(d: Dictionary): Unit =
+          dict = Array.tabulate(d.getMaxId + 1)(d.decodeToBinary(_).toStringUsingUTF8)
+        override def addValueFromDictionary(id: Int): Unit = { present |= 1 << i; set(dict(id)) }
+        override def addBinary(v: Binary): Unit = { present |= 1 << i; set(v.toStringUsingUTF8) }
+      }
+      names(i) match {
+        case "event_id" => long(rec.seq = _)
+        case "user_id" => long(rec.key = _)
+        case "op" => string(rec.op = _)
+        case "ts" => new PrimitiveConverter {
+          override def addLong(v: Long): Unit = { present |= 1 << i; rec.tsUs = tsRawToMicros(v) }
+          // INT96 layout: 8 bytes nanos-of-day + 4 bytes julian day,
+          // both little-endian (the layout every parquet writer emits
+          // and Spark's own ParquetRowConverter decodes)
+          override def addBinary(v: Binary): Unit = {
+            present |= 1 << i
+            val buf = v.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+            val nanosOfDay = buf.getLong
+            val julianDay = buf.getInt
+            rec.tsUs = (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
+          }
+        }
+        case "event_type" => string(rec.eventType = _)
+        case "value" => new PrimitiveConverter {
+          override def addDouble(v: Double): Unit = { rec.hasValue = true; rec.value = v }
+        }
+        case other => throw new IllegalArgumentException(s"unexpected changelog column $other")
+      }
+    }
+    val converters = names.indices.map(converter).toArray
+    val root = new GroupConverter {
+      override def getConverter(i: Int): Converter = converters(i)
+      override def start(): Unit = { present = 0; rec.eventType = null; rec.hasValue = false }
+      override def end(): Unit =
+        if ((present & required) != required) throw new IllegalArgumentException(
+          "changelog record with a null " + names.indices
+            .filter(i => (required & ~present & 1 << i) != 0).map(names).mkString(", "))
+    }
+    new RecordMaterializer[ChangelogRecord] {
+      override def getCurrentRecord: ChangelogRecord = rec
+      override def getRootConverter: GroupConverter = root
+    }
+  }
 }

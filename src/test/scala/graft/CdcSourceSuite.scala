@@ -157,6 +157,20 @@ class CdcSourceSuite extends GraftSuite {
     }
   }
 
+  test("a changelog row with a null key fails the read, naming the column") {
+    val sess = spark; import sess.implicits._
+    val path = java.nio.file.Files.createTempDirectory("cdc_null_key").toString + "/log"
+    Seq((0L, Option(1L)), (1L, Option(2L)), (2L, Option.empty[Long]), (3L, Option(1L)))
+      .map { case (seq, key) => (seq, key, seq * 1000L, "view", 1.0) }
+      .toDF("event_id", "user_id", "ts", "event_type", "value")
+      .coalesce(1).write.parquet(path)
+    val e = intercept[Exception](spark.read.format("pg-cdc-sim")
+      .option("path", path).option("numPartitions", "1").load().collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("user_id")), s"error must name user_id: $messages")
+  }
+
   test("sinkUpsert: CDC stream -> keyed-upsert table == q_cdc_latest_by_key; restart is a no-op") {
     import graft.api.StreamzOps._
     val base = java.nio.file.Files.createTempDirectory("sink_upsert").toString
@@ -282,86 +296,54 @@ class CdcSourceSuite extends GraftSuite {
   }
 
   test("predicate pushdown: a narrow slice of a multi-row-group changelog materializes far less than the log") {
-    import graft.sources.{ChangelogReadMetrics, ChangelogReader, ChangelogSlice}
+    import graft.sources.ChangelogReadMetrics
     val sess = spark; import sess.implicits._
     val base = java.nio.file.Files.createTempDirectory("cdc_push").toString + "/log"
     val n = 40000
-    // seq-sorted changelog written with tiny row groups: the shape a
-    // real appended changelog has (monotone seq across row groups)
     (0 until n).map(i => (i.toLong, (i % 97).toLong,
         i.toLong * 1000000000L, "e" + (i % 3), i / 10.0))
       .toDF("event_id", "user_id", "ts", "event_type", "value")
-      .coalesce(1).sortWithinPartitions("event_id")
-      .write.option("parquet.block.size", 64 * 1024)
-      .option("parquet.page.size", 16 * 1024).parquet(base)
-    val part = new java.io.File(base).listFiles
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+      .coalesce(1).write.parquet(base)
     val hconf = spark.sessionState.newHadoopConf()
-    val inFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(part.getAbsolutePath), hconf)
-    val totalGroups = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(inFile)
-      try r.getRowGroups.size finally r.close()
-    }
-    assert(totalGroups >= 4, s"fixture must be multi-row-group (got $totalGroups)")
 
-    // (a) row-group STATS skip: the reader's seq-range FilterPredicate
-    // prunes non-overlapping groups before any page IO
-    val seqCol = org.apache.parquet.filter2.predicate.FilterApi.longColumn("event_id")
-    val pred = org.apache.parquet.filter2.predicate.FilterApi.and(
-      org.apache.parquet.filter2.predicate.FilterApi.gt(seqCol, Long.box(30000L)),
-      org.apache.parquet.filter2.predicate.FilterApi.ltEq(seqCol, Long.box(30500L)))
-    val survivingGroups = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(inFile,
-        org.apache.parquet.ParquetReadOptions.builder()
-          .withRecordFilter(org.apache.parquet.filter2.compat.FilterCompat.get(pred))
-          .build())
-      try r.getRowGroups.size finally r.close()
-    }
-    assert(survivingGroups < totalGroups && survivingGroups >= 1,
-      s"seq-range predicate must skip row groups: $survivingGroups of $totalGroups survive")
-
-    // (b) reader-level materialization: slice (30000, 30500] with one
-    // partition materializes the 500 output rows (record filter) plus
-    // the 2-column history prefix (seqs 0..30000) — and nothing else.
-    // The pre-pushdown reader materialized all 40000 full-width rows
-    // per slice per pass.
+    // a stream's sidecar: the derived log re-written seq-sorted per
+    // partition in small row groups. A slice is one seq-range read of
+    // its partition's file that skips the groups outside the slice and
+    // materializes exactly the slice's rows, with no history pass
+    val sidecar = graft.sources.ChangelogSidecar(
+      java.nio.file.Files.createTempDirectory("cdc_push_sc").toString + "/log_n1",
+      rowGroupRows = 1000)
+    assert(sidecar.open(base, numPartitions = 1, deletes = false) == ((n - 1L, n - 1L)))
     ChangelogReadMetrics.recordsMaterialized.reset()
-    val rdr = new ChangelogReader(
-      ChangelogSlice(base, 30000L, 30500L, 0, 1, deletes = false,
-        maxDataSeq = n - 1L, firstSeenDir = None), hconf)
-    var cnt = 0
-    val ops = scala.collection.mutable.Set.empty[String]
-    while (rdr.next()) { ops += rdr.get().getString(2); cnt += 1 }
+    val rdr = new graft.sources.SidecarReader(
+      graft.sources.SidecarSlice(sidecar.partFile(0), 30000L, 30500L), hconf)
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    while (rdr.next()) got += ((rdr.get().getLong(0), rdr.get().getString(2)))
     rdr.close()
-    assert(cnt == 500, s"slice rows (got $cnt)")
-    assert(ops == Set("U"), "every key in the slice already appeared in the prefix -> all U")
+    assert(got.map(_._1) == (30001L to 30500L) && got.forall(_._2 == "U"),
+      "every key in the slice already appeared earlier -> all U")
     val mat = ChangelogReadMetrics.recordsMaterialized.sum()
-    assert(mat == 30001 + 500,
-      s"materialized must be history prefix (30001) + in-range rows (500), got $mat")
-
-    // (c) with a first-seen key index, the history prefix pass is
-    // replaced by one bucket read: O(keys) = 97, not O(prefix) = 30001
-    val idx = java.nio.file.Files.createTempDirectory("cdc_push_idx").toString + "/first_seen"
-    spark.read.parquet(base)
-      .groupBy(col("user_id")).agg(min(col("event_id")).as("first_seq"))
-      .withColumn("part", pmod(col("user_id"), lit(1L)))
-      .write.partitionBy("part").parquet(idx)
-    ChangelogReadMetrics.recordsMaterialized.reset()
-    val rdr2 = new ChangelogReader(
-      ChangelogSlice(base, 30000L, 30500L, 0, 1, deletes = false,
-        maxDataSeq = n - 1L, firstSeenDir = Some(idx)), hconf)
-    var cnt2 = 0
-    val ops2 = scala.collection.mutable.Set.empty[String]
-    while (rdr2.next()) { ops2 += rdr2.get().getString(2); cnt2 += 1 }
-    rdr2.close()
-    assert(cnt2 == 500 && ops2 == Set("U"), "index path must agree with the prefix path")
-    val mat2 = ChangelogReadMetrics.recordsMaterialized.sum()
-    assert(mat2 == 97 + 500,
-      s"materialized must be index bucket (97 keys) + in-range rows (500), got $mat2")
+    assert(mat == 500, s"sidecar slice must materialize only its 500 rows, got $mat")
+    val sideFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(sidecar.partFile(0)), hconf)
+    val sidePred = org.apache.parquet.filter2.predicate.FilterApi.and(
+      org.apache.parquet.filter2.predicate.FilterApi.gt(
+        org.apache.parquet.filter2.predicate.FilterApi.longColumn("event_id"), Long.box(30000L)),
+      org.apache.parquet.filter2.predicate.FilterApi.ltEq(
+        org.apache.parquet.filter2.predicate.FilterApi.longColumn("event_id"), Long.box(30500L)))
+    def sideGroups(filtered: Boolean): Int = {
+      val opts = org.apache.parquet.ParquetReadOptions.builder()
+      if (filtered) opts.withRecordFilter(
+        org.apache.parquet.filter2.compat.FilterCompat.get(sidePred))
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(sideFile, opts.build())
+      try r.getRowGroups.size finally r.close()
+    }
+    assert(sideGroups(filtered = false) == n / 1000, "row groups capped at rowGroupRows")
+    assert(sideGroups(filtered = true) < sideGroups(filtered = false),
+      "the slice's seq predicate must skip sidecar row groups")
   }
 
-  test("streaming replay builds the first-seen index under the checkpoint and stays exact") {
+  test("streaming replay builds the changelog sidecar under the checkpoint") {
     val cp = java.nio.file.Files.createTempDirectory("cdc_idx_cp").toString
     val q = readCdc(batchSize = 150, snapshotSeq = 299)
       .writeStream.format("memory").queryName("cdc_idx_replay")
@@ -369,17 +351,127 @@ class CdcSourceSuite extends GraftSuite {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     // Spark scopes the source's checkpoint dir under sources/<i>
-    assert(new java.io.File(s"$cp/sources/0/sources_graft/first_seen_n4/_SUCCESS").exists,
-      "mid-stream batches must have built the bucketed first-seen index")
+    val sidecar = new java.io.File(s"$cp/sources/0/sources_graft/log_n4")
+    assert(new java.io.File(sidecar, "_HORIZON").exists,
+      "the stream must have built its changelog sidecar")
+    assert(sidecar.list().filter(_.endsWith(".parquet")).sorted.toSeq ==
+      (0 until 4).map(i => s"part=$i.parquet"), "one sidecar file per partition")
     val got = spark.table("cdc_idx_replay")
     assert(got.count() == 1000 && got.select("seq").distinct().count() == 1000)
-    // op exactness with index-resolved history: I = each key's global first seq
+    // op exactness with sidecar-resolved ops: I = each key's global first seq
     val collected = got.select("key", "seq", "op").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     val firstSeqPerKey = collected.groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
     val inserts = collected.filter(_._3 == "I")
     assert(inserts.length == firstSeqPerKey.size)
     assert(inserts.forall { case (k, s, _) => firstSeqPerKey(k) == s })
+  }
+
+  test("data horizon: event_id footer statistics, or one aggregate when a chunk has none") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val hconf = spark.sessionState.newHadoopConf()
+    val fixture = s"$sf0001/events.parquet"
+    val want = graft.sources.PgCdcSim.loadChangelog(fixture).map(_.seq).max
+    assert(graft.sources.ChangelogFiles.dataHorizon(fixture, hconf) == want)
+    // a writer that omits statistics: the horizon must still be exact
+    val dir = java.nio.file.Files.createTempDirectory("cdc_nostats").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 user_id; }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"))
+      .withType(schema).withStatisticsEnabled(false).build()
+    val groups = new SimpleGroupFactory(schema)
+    try Seq(5L, 41L, 17L).foreach(s => w.write(groups.newGroup()
+      .append("event_id", s).append("user_id", s % 3)))
+    finally w.close()
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"), hconf))
+    try assert(footer.getFooter.getBlocks.get(0).getColumns.get(0).getStatistics.isEmpty,
+      "fixture must carry no event_id statistics")
+    finally footer.close()
+    assert(graft.sources.ChangelogFiles.dataHorizon(dir, hconf) == 41L)
+    assert(graft.sources.ChangelogFiles.dataHorizon(s"$dir/absent", hconf) == -1L)
+  }
+
+  /** Drains a pg-cdc-sim stream into `rows` (batch id -> its rows);
+    * with `failAt`, that batch's sink throws after recording, so the
+    * query dies with the batch planned but not committed. */
+  private def replayInto(cp: String,
+      rows: scala.collection.concurrent.TrieMap[Long, Set[(Long, Long, String)]],
+      failAt: Long = -1L): Unit = {
+    val q = readCdc(batchSize = 150, snapshotSeq = 299)
+      .writeStream.option("checkpointLocation", cp).trigger(Trigger.AvailableNow())
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        rows(id) = df.select("seq", "key", "op").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+        if (id == failAt) throw new IllegalStateException(s"injected failure in batch $id")
+        ()
+      }.start()
+    try q.awaitTermination(120000)
+    catch { case _: org.apache.spark.sql.streaming.StreamingQueryException if failAt >= 0 => }
+  }
+
+  private lazy val referenceOps: Set[(Long, Long, String)] =
+    graft.sources.PgCdcSim.loadChangelog(s"$sf0001/events.parquet")
+      .map(r => (r.seq, r.key, r.op)).toSet
+
+  /** Name -> modification time of each file of a stream's sidecar. */
+  private def sidecarFiles(cp: String): Map[String, Long] =
+    new java.io.File(s"$cp/sources/0/sources_graft/log_n4").listFiles
+      .filterNot(_.getName.startsWith(".")).map(f => f.getName -> f.lastModified).toMap
+
+  test("a restarted stream reuses its changelog sidecar: no build job") {
+    val cp = java.nio.file.Files.createTempDirectory("cdc_sc_restart").toString
+    val rows = scala.collection.concurrent.TrieMap.empty[Long, Set[(Long, Long, String)]]
+    replayInto(cp, rows, failAt = 1L) // snapshot committed, first poll dies
+    val built = sidecarFiles(cp)
+    assert(built.keySet == (0 until 4).map(i => s"part=$i.parquet").toSet + "_HORIZON")
+    replayInto(cp, rows)
+    assert(sidecarFiles(cp) == built,
+      "the restart must read the sidecar its first run built, not rebuild it")
+    assert(rows.size >= 3, s"snapshot + polls expected, got batches ${rows.keys.toSeq.sorted}")
+    assert(rows.values.flatten.toSet == referenceOps,
+      "crash + restart must replay the reference changelog")
+  }
+
+  test("a sidecar without its _HORIZON marker is rebuilt with the same output") {
+    val cp = java.nio.file.Files.createTempDirectory("cdc_sc_rebuild").toString
+    val rows = scala.collection.concurrent.TrieMap.empty[Long, Set[(Long, Long, String)]]
+    replayInto(cp, rows, failAt = 1L)
+    val dir = new java.io.File(s"$cp/sources/0/sources_graft/log_n4")
+    def contents() = spark.read.parquet(dir.toString).collect().map(_.toSeq).toSet
+    val built = contents()
+    assert(built.size == 1000)
+    // a build torn before its marker: one part file lost, no marker
+    assert(new java.io.File(dir, "_HORIZON").delete() &&
+      new java.io.File(dir, "part=2.parquet").delete())
+    replayInto(cp, rows)
+    assert(sidecarFiles(cp).keySet ==
+      (0 until 4).map(i => s"part=$i.parquet").toSet + "_HORIZON",
+      "a marker-less sidecar must be rebuilt, marker last")
+    assert(contents() == built, "the rebuild must write the same sidecar")
+    assert(rows.values.flatten.toSet == referenceOps)
+  }
+
+  test("a torn _HORIZON marker is rebuilt, not trusted") {
+    assert(spark.sparkContext.isLocal) // materialize the shared session first
+    val sidecar = graft.sources.ChangelogSidecar(
+      java.nio.file.Files.createTempDirectory("cdc_sc_torn").toString + "/log_n4", 100)
+    val path = s"$sf0001/events.parquet"
+    val horizon = sidecar.open(path, 4, deletes = true)
+    val marker = java.nio.file.Paths.get(sidecar.dir, "_HORIZON")
+    val lines = java.nio.file.Files.readAllLines(marker)
+    assert(lines.size == 4)
+    // cut after the identity lines, before the horizons: first with
+    // the stale checksum file beside it, then without one
+    for (dropCrc <- Seq(false, true)) {
+      java.nio.file.Files.write(marker, lines.subList(0, 2))
+      if (dropCrc) java.nio.file.Files.delete(marker.resolveSibling("._HORIZON.crc"))
+      assert(sidecar.open(path, 4, deletes = true) == horizon)
+      assert(java.nio.file.Files.readAllLines(marker) == lines, "the rebuild rewrites the marker")
+    }
   }
 
   test("sinkScd2: CDC stream -> version history == batch lead-over-seq; restart no-op; deletes close validity") {

@@ -234,11 +234,10 @@ class RecoverySuite extends GraftSuite {
   }
 
   test("stateful aggregation runs on the RocksDB state store provider") {
-    withRocksDb {
-      // §4.3: changelog checkpointing — upload per-batch deltas instead
-      // of full RocksDB snapshots
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    // §4.3: changelog checkpointing — upload per-batch deltas instead
+    // of full RocksDB snapshots
+    withConfs(rocksDbProvider,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
       import java.sql.Timestamp
       val sess = spark
       import sess.implicits._

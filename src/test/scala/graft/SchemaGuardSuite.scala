@@ -66,6 +66,20 @@ class SchemaGuardSuite extends GraftSuite {
     (n, u)
   }
 
+  /** The same rows as Spark writes them by default: INT96 `ts`. */
+  private lazy val i96Dir = {
+    val root = java.nio.file.Files.createTempDirectory("schema_guard_i96").toString
+    val sess = spark; import sess.implicits._
+    val df = rowsUs.toDF("event_id", "ts_us", "user_id", "event_type", "value")
+      .select(col("event_id"), expr("timestamp_micros(ts_us)").as("ts"),
+        col("user_id"), col("event_type"), col("value"),
+        concat(lit("{\"k\": "), col("event_id"), lit("}")).as("props"))
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try df.coalesce(1).write.mode("overwrite").parquet(s"$root/events.parquet")
+    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    root
+  }
+
   test("Tables.events yields identical µs timestamps on ns- and µs-typed fixtures") {
     val want = rowsUs.map(_._2)
     def got(dir: String): Seq[Long] =
@@ -108,21 +122,39 @@ class SchemaGuardSuite extends GraftSuite {
     // first time the CDC source met a Spark-WRITTEN changelog (the
     // GenScale 10× events). Pin: a Spark INT96 file round-trips to
     // the identical µs instants through the raw parquet-mr reader.
-    val root = java.nio.file.Files.createTempDirectory("schema_guard_i96").toString
-    val sess = spark; import sess.implicits._
-    val df = rowsUs.toDF("event_id", "ts_us", "user_id", "event_type", "value")
-      .select(col("event_id"), expr("timestamp_micros(ts_us)").as("ts"),
-        col("user_id"), col("event_type"), col("value"),
-        concat(lit("{\"k\": "), col("event_id"), lit("}")).as("props"))
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
-    try df.coalesce(1).write.mode("overwrite").parquet(s"$root/events.parquet")
-    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
     val got = spark.read.format("pg-cdc-sim")
-      .option("path", s"$root/events.parquet").load()
+      .option("path", s"$i96Dir/events.parquet").load()
       .orderBy("seq")
       .select(col("seq"), unix_micros(col("ts")).as("ts_us"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == rowsUs.map(r => (r._1, r._2)),
       "INT96 julian-day+nanos must decode to the same µs instants")
+  }
+
+  test("pg-cdc-sim stream (sidecar) identical on ns, µs and INT96 flavors") {
+    // the stream serves every batch from its sidecar, which stores ts
+    // re-encoded as µs: a unit slip in the build would be the same
+    // silent 1000× error, only behind a checkpoint
+    def streamed(dir: String): Seq[(Long, Long)] = {
+      val got = scala.collection.concurrent.TrieMap.empty[Long, Long]
+      val q = spark.readStream.format("pg-cdc-sim")
+        .option("path", s"$dir/events.parquet")
+        .option("batchSize", "3").option("snapshotSeq", "3")
+        .option("numPartitions", "2").load()
+        .writeStream.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("schema_guard_cp").toString)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.select(col("seq"), unix_micros(col("ts"))).collect()
+            .foreach(r => got(r.getLong(0)) = r.getLong(1))
+          ()
+        }.start()
+      q.awaitTermination(120000)
+      got.toSeq.sorted
+    }
+    val want = rowsUs.map(r => (r._1, r._2))
+    assert(streamed(usDir) == want, "µs fixture: raw micros not preserved")
+    assert(streamed(nsDir) == want, "ns fixture: ns→µs truncation drifted")
+    assert(streamed(i96Dir) == want, "INT96 fixture: julian-day+nanos decode drifted")
   }
 }

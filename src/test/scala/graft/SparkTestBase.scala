@@ -32,17 +32,24 @@ abstract class GraftSuite extends AnyFunSuite {
   def spark: SparkSession = SparkTestBase.spark
   def sf0001: String = SparkTestBase.sf0001
 
+  protected val rocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Run `body` with the RocksDB state store provider, then restore
     * the session's previous provider. Spark requires RocksDB for
     * `transformWithState`, so every StreamzStateOps query runs here. */
-  protected def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
+  protected def withRocksDb[T](body: => T): T = withConfs(rocksDbProvider)(body)
+
+  /** Run `body` with `confs` set on the shared session, then restore
+    * each to its previous value (or unset it), so no test leaks a conf
+    * into the tests that run after it. */
+  protected def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(p)) => spark.conf.set(k, p)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -450,6 +450,37 @@ class StreamingSuite extends GraftSuite {
     }
   }
 
+  test("topKStream: a full sketch's evicted counters leave the state store") {
+    // capacity 4 > k 2: a wave of 4 distinct items fills each group's
+    // sketch; a wave of 5 new ones decrements every old counter to 0
+    // and refills the sketch, so each group's stored counters must
+    // drop back to ≤ capacity — take(k) alone would hide stale ones
+    withRocksDb {
+      val sess = spark
+      import sess.implicits._
+      implicit val sqlCtx = sess.sqlContext
+      val groups = Seq("g1", "g2", "g3")
+      val ms = MemoryStream[(String, String)]
+      val q = graft.api.StreamzStateOps
+        .topKStream(ms.toDF().toDF("grp", "item"), k = 2, capacity = 4,
+          groupCol = "grp", itemCol = "item")
+        .writeStream.format("memory").queryName("topk_evict")
+        .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        def stateRows() = q.recentProgress.filter(_.numInputRows > 0).last
+          .stateOperators.head.numRowsTotal
+        ms.addData(for (g <- groups; w <- Seq("a", "b", "c", "d")) yield (g, w))
+        q.processAllAvailable()
+        assert(stateRows() == 4L * groups.size, "first wave fills every sketch")
+        ms.addData(for (g <- groups; w <- Seq("e", "f", "g", "h", "i")) yield (g, w))
+        q.processAllAvailable()
+        assert(stateRows() <= 4L * groups.size,
+          s"evicted counters must be removed: ${stateRows()} state rows for " +
+            s"${groups.size} groups at capacity 4")
+      } finally q.stop()
+    }
+  }
+
   test("topKStreamExpiring: idle group's sketch is evicted at the event-time TTL, active groups keep counting") {
     withRocksDb {
       val sess = spark
