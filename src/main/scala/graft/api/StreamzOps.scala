@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Operator-vocabulary facade: the reference's streamz operator names
   * (SURVEY.md §2A — public upstream API) expressed over DataFrames,
@@ -239,16 +240,38 @@ object StreamzOps {
       * Storage layout — a minimal snapshot-manifest table format,
       * built for the two properties a 100 TB replication target needs:
       *
-      *   - INCREMENTAL: rows live in `numBuckets` key-hash buckets
-      *     (`pmod(hash(keys), numBuckets)`). A batch reads and
-      *     rewrites ONLY the buckets its keys touch; a 1-key batch
-      *     rewrites 1 bucket, not the table. Per-batch cost is
-      *     O(dirty-bucket bytes + batch), not O(table).
-      *   - ATOMIC: each commit writes its dirty buckets to a fresh
-      *     `data/m<N>/_bp=<K>/` dir, then publishes manifest
-      *     `manifest/m<N>` — a text file mapping every bucket to the
-      *     data dir currently holding it (clean buckets keep their old
-      *     entries) — via write-to-temp-name + rename-to-fresh-name,
+      *   - INCREMENTAL WRITE: rows live in `numBuckets` key-hash
+      *     buckets (`pmod(hash(keys), numBuckets)`). A batch rewrites
+      *     ONLY the buckets its keys touch; a 1-key batch rewrites 1
+      *     bucket's rows, not the table. The prior rows of those
+      *     buckets are read from the dirs the manifest maps them to,
+      *     and a commit dir also holds the other buckets its commit
+      *     rewrote: the bucket filter below drops their rows, but the
+      *     read still scans them. So a batch's read is O(dirty-bucket
+      *     bytes + batch) only while each dirty bucket has a dir of its
+      *     own (after [[StreamzOps.compactTable]]); otherwise it is up
+      *     to the bytes of every dir a dirty bucket maps to — at most
+      *     the stored table, superseded rows included.
+      *   - ONE DIR PER COMMIT: a commit writes all its dirty buckets
+      *     as plain parquet files into one fresh `data/m<N>/` dir, one
+      *     file per write task of the merge (its shuffle partitions),
+      *     not one per bucket. Each row keeps its `_gb_bucket` column.
+      *   - PER-DIR BUCKET FILTER: a commit dir keeps the superseded
+      *     rows of every bucket a later commit rewrote, and stays live
+      *     while any bucket still maps to it. So every read of a table
+      *     dir keeps only `_gb_bucket IN (the buckets the manifest maps
+      *     to that dir)`; no code may read a data dir without it. The
+      *     superseded rows cost space until the last bucket leaves the
+      *     dir (a later commit or [[StreamzOps.compactTable]]).
+      *   - ATOMIC: after the data write, the commit publishes manifest
+      *     `manifest/m<N>` — a text file with `key=value` header lines
+      *     (`numBuckets`, and `schema`: the stored rows' schema as
+      *     JSON, so reads infer nothing) and one `bucket<TAB>dir` line
+      *     per bucket (clean buckets keep their old entries;
+      *     compaction, and sink commits made before commits shared
+      *     one dir, map a bucket to its own `data/m<J>/_bp=<K>` dir,
+      *     read the same way; a manifest without `schema` falls back
+      *     to inferring it) — via write-to-temp-name + rename-to-fresh-name,
       *     which is atomic on HDFS and local FS. Readers resolve the
       *     HIGHEST committed manifest, so a crash anywhere before the
       *     rename leaves the previous snapshot fully intact and merely
@@ -487,7 +510,7 @@ object StreamzOps {
   /** Shared commit path of the bucketed snapshot-manifest sinks: add
     * the key-hash bucket column, read the prior state of the dirty
     * buckets, apply the sink-specific `merge` to (prior ∪ batch), and
-    * publish atomically (fresh data dirs → manifest rename → GC).
+    * publish atomically (one fresh data dir → manifest rename → GC).
     * `batchRows` is evaluated exactly once per call.
     * See [[StreamzDataFrame.sinkUpsert]] for the format's invariants.
     */
@@ -514,43 +537,30 @@ object StreamzOps {
         .collect().foldLeft(Set.empty[Int])(_ ++ _)
       if (dirty.nonEmpty) {
         val cur = currentManifest(fs, tablePath)
-        cur.foreach { case (nb, _, _) => require(nb == numBuckets,
-          s"table was created with numBuckets=$nb, called with $numBuckets") }
-        val priorDirty = cur.toSeq.flatMap(_._3.toSeq)
-          .collect { case (b, dir) if dirty(b) => s"$tablePath/$dir" }
+        cur.foreach(m => require(m.numBuckets == numBuckets,
+          s"table was created with numBuckets=${m.numBuckets}, called with $numBuckets"))
+        val priorEntries = cur.fold(Map.empty[Int, String])(_.entries.filter(e => dirty(e._1)))
         // allowMissingColumns ONLY when the sink stores derived columns
         // (sinkScd2's valid_to_ord/is_current) that batches legitimately
         // lack; for sinkUpsert the strict union is a schema-drift guard
         // — a batch silently missing a column must fail fast, not
         // null-fill the stored values
         val merged0 =
-          if (priorDirty.isEmpty) bucketed
-          else sess.read.parquet(priorDirty: _*).unionByName(bucketed,
-            allowMissingColumns = priorHasDerivedColumns)
+          if (priorEntries.isEmpty) bucketed
+          else readBuckets(sess, tablePath, priorEntries, cur.flatMap(_.schema))
+            .unionByName(bucketed, allowMissingColumns = priorHasDerivedColumns)
         val toStore = merge(merged0)
-        val n = cur.map(_._2 + 1).getOrElse(1L)
+        val n = cur.map(_.n + 1).getOrElse(1L)
         val dataRel = s"data/m$n"
-        // _bp duplicates _gb_bucket because partitionBy consumes its
-        // column into the dir name; keeping the value as data too
-        // lets a single-dir read recover the bucket without
-        // basePath inference
-        toStore.withColumn("_bp", col(BucketCol))
-          .write.mode("overwrite").partitionBy("_bp")
-          .parquet(s"$tablePath/$dataRel")
+        toStore.write.mode("overwrite").parquet(s"$tablePath/$dataRel")
         failpoint("data-written", batchId)
-        // buckets that survived with rows = the _bp dirs written
-        // (a fully-tombstoned bucket writes no dir and drops out)
-        val written = fs.listStatus(
-            new org.apache.hadoop.fs.Path(s"$tablePath/$dataRel"))
-          .filter(_.isDirectory).map(_.getPath.getName)
-          .collect { case s if s.startsWith("_bp=") =>
-            s.stripPrefix("_bp=").toInt }
-          .toSet
+        // every dirty bucket now lives in the fresh dir; a fully
+        // tombstoned bucket simply reads no rows there
         val entries =
-          cur.toSeq.flatMap(_._3.toSeq).filterNot { case (b, _) => dirty(b) } ++
-          written.toSeq.sorted.map(b => b -> s"$dataRel/_bp=$b")
+          cur.toSeq.flatMap(_.entries.toSeq).filterNot { case (b, _) => dirty(b) } ++
+          dirty.toSeq.sorted.map(_ -> dataRel)
         failpoint("pre-commit", batchId)
-        commitManifest(fs, tablePath, n, numBuckets, entries)
+        commitManifest(fs, tablePath, n, numBuckets, toStore.schema, entries)
         failpoint("post-commit", batchId)
         gcSuperseded(fs, tablePath, n, retainManifests)
       }
@@ -559,14 +569,20 @@ object StreamzOps {
 
   /** Maintenance compaction for a [[StreamzDataFrame.sinkUpsert]] /
     * [[StreamzDataFrame.sinkScd2]] table: rewrite every bucket as ONE
-    * file and publish the result as a fresh manifest commit — the
-    * OPTIMIZE step that keeps object-store file counts flat when
-    * micro-batches write many small files per bucket. Runs through
-    * the same atomic manifest rename as the sinks, so it is safe
-    * against crashes and concurrent readers (who keep resolving the
-    * previous committed snapshot until the rename lands); run it from
-    * the single writer between batches, like any table OPTIMIZE.
-    * Returns the number of data files before compaction.
+    * file in its own `data/m<N>/_bp=<K>/` dir and publish the result
+    * as a fresh manifest commit — the OPTIMIZE step that keeps
+    * object-store file counts flat. It is also what frees the space of
+    * partly-live commit dirs: a sink commit dir keeps the superseded
+    * rows of buckets later commits rewrote until no bucket maps to it,
+    * and compaction moves every bucket out (the per-dir bucket filter
+    * of [[StreamzDataFrame.sinkUpsert]] keeps those rows out of the
+    * rewrite). Runs through the same atomic manifest rename as the
+    * sinks, so it is safe against crashes and concurrent readers (who
+    * keep resolving the previous committed snapshot until the rename
+    * lands); run it from the single writer between batches, like any
+    * table OPTIMIZE. Returns the number of data files the snapshot
+    * referenced before compaction (a dir shared by several buckets
+    * counts once).
     *
     * @param zorderBy optional OPTIMIZE ZORDER BY: cluster each
     *        bucket's rewritten file by the Morton order of these
@@ -584,19 +600,16 @@ object StreamzOps {
       zorderBy: Seq[String] = Nil, zorderBits: Int = 8): Long = {
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (numBuckets, n, entries) = currentManifest(fs, tablePath).getOrElse(
+    val m = currentManifest(fs, tablePath).getOrElse(
       throw new IllegalStateException(s"no committed manifest under $tablePath"))
-    if (entries.isEmpty) return 0L // fully-tombstoned table: nothing to rewrite
-    val filesBefore = entries.values.toSeq.map { d =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$tablePath/$d"))
-        .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-    }.sum.toLong
-    val next = n + 1
+    if (m.entries.isEmpty) return 0L // fully-tombstoned table: nothing to rewrite
+    val filesBefore =
+      m.entries.values.toSeq.distinct.map(d => dataFileCount(fs, s"$tablePath/$d")).sum.toLong
+    val next = m.n + 1
     val dataRel = s"data/m$next"
-    val raw = spark.read.parquet(entries.values.map(d => s"$tablePath/$d").toSeq: _*)
+    val raw = readBuckets(spark, tablePath, m.entries, m.schema)
     val base = raw
-      .repartition(numBuckets, col(BucketCol)) // one task -> one file per bucket
+      .repartition(m.numBuckets, col(BucketCol)) // one task -> one file per bucket
       .withColumn("_bp", col(BucketCol))
     val shaped =
       if (zorderBy.isEmpty) base
@@ -616,23 +629,29 @@ object StreamzOps {
     val written = fs.listStatus(new org.apache.hadoop.fs.Path(s"$tablePath/$dataRel"))
       .filter(_.isDirectory).map(_.getPath.getName)
       .collect { case s if s.startsWith("_bp=") => s.stripPrefix("_bp=").toInt }
-    commitManifest(fs, tablePath, next, numBuckets,
+    commitManifest(fs, tablePath, next, m.numBuckets, raw.schema,
       written.sorted.map(b => b -> s"$dataRel/_bp=$b").toSeq)
     gcSuperseded(fs, tablePath, next, retainManifests)
     filesBefore
   }
 
   /** Incremental auto-OPTIMIZE: compact (optionally z-ordering — see
-    * [[compactTable]]) only when some bucket's accumulated file count
-    * exceeds `maxFilesPerBucket`. The check is one metadata listing
-    * of the manifest's bucket dirs — cheap enough to call after
-    * every micro-batch from the single writer (e.g. at the end of a
-    * foreachBatch, or a scheduled maintenance loop); most calls
-    * return false without touching data. Returns whether a
-    * compaction ran. This is the streaming-table answer to small
-    * files: the sink stays append-fast per batch and the table
+    * [[compactTable]]) only when some bucket's read opens more than
+    * `maxFilesPerBucket` files, i.e. the dir the manifest maps it to
+    * holds more data files than that (a commit dir shared by several
+    * buckets counts for each of them). The check is one metadata
+    * listing of each distinct dir the manifest references — cheap
+    * enough to call after every micro-batch from the single writer
+    * (e.g. at the end of a foreachBatch, or a scheduled maintenance
+    * loop); most calls return false without touching data. Returns
+    * whether a compaction ran. This is the streaming-table answer to
+    * small files: the sink stays append-fast per batch and the table
     * self-heals once fragmentation crosses the threshold, instead of
-    * compacting on a blind schedule.
+    * compacting on a blind schedule. The superseded rows a partly-live
+    * commit dir keeps (every read filters them out, per dir, by the
+    * buckets the manifest maps there) are not counted; their space
+    * stays until [[compactTable]] or later commits move the dir's
+    * last bucket.
     */
   def compactIfNeeded(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, maxFilesPerBucket: Int,
@@ -641,16 +660,19 @@ object StreamzOps {
     require(maxFilesPerBucket >= 1, s"maxFilesPerBucket must be >= 1")
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = currentManifest(fs, tablePath).map(_._3).getOrElse(
+    val entries = currentManifest(fs, tablePath).map(_.entries).getOrElse(
       throw new IllegalStateException(s"no committed manifest under $tablePath"))
-    val fragmented = entries.values.exists { d =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$tablePath/$d"))
-        .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".")) > maxFilesPerBucket
-    }
+    val fragmented = entries.values.toSeq.distinct
+      .exists(d => dataFileCount(fs, s"$tablePath/$d") > maxFilesPerBucket)
     if (fragmented) compactTable(spark, tablePath, retainManifests, zorderBy, zorderBits)
     fragmented
   }
+
+  /** Data files directly under `dir` (hidden `_`/`.` files excluded). */
+  private def dataFileCount(fs: org.apache.hadoop.fs.FileSystem, dir: String): Int =
+    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
 
   /** Read a [[StreamzDataFrame.sinkScd2]] history table: every stored
     * version with its validity interval. Tombstone versions (op =
@@ -675,28 +697,55 @@ object StreamzOps {
   /** Read a committed snapshot of a [[StreamzDataFrame.sinkUpsert]]
     * table: resolve the highest committed manifest (or, with
     * `snapshot = Some(n)`, a RETAINED older manifest — time travel,
-    * available when the sink runs with `retainManifests > 0`) and
-    * union its bucket dirs. Always sees a complete, committed
-    * snapshot — never a half-published batch: an in-progress commit
-    * is invisible until its manifest rename lands.
+    * available when the sink runs with `retainManifests > 0`) and read
+    * the buckets it maps ([[readBuckets]]). Always sees a complete,
+    * committed snapshot — never a half-published batch: an in-progress
+    * commit is invisible until its manifest rename lands.
     */
   def readUpsertTable(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, snapshot: Option[Long] = None): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val resolved = snapshot match {
-      case Some(n) => readManifest(fs, tablePath, n).map { case (nb, e) => (nb, n, e) }
+      case Some(n) => readManifest(fs, tablePath, n)
       case None => currentManifest(fs, tablePath)
     }
     resolved match {
-      case Some((_, _, entries)) if entries.nonEmpty =>
-        spark.read.parquet(entries.values.map(d => s"$tablePath/$d").toSeq: _*)
-          .drop(BucketCol)
+      case Some(m) if m.entries.nonEmpty =>
+        readBuckets(spark, tablePath, m.entries, m.schema).drop(BucketCol)
       case _ => throw new IllegalStateException(
         s"no committed sinkUpsert manifest${snapshot.fold("")(n => s" m$n")} " +
           s"under $tablePath/manifest")
     }
   }
+
+  /** The rows of the buckets `entries` maps (bucket -> data dir), the
+    * ONE way any code reads table data. Each distinct dir is read once
+    * with the stored `schema` (inferred once over all the dirs when the
+    * manifest predates the recorded schema), keeping only the rows of
+    * the buckets mapped to THAT dir, and the reads are unioned.
+    *
+    * Invariant: a commit dir keeps the superseded rows of every bucket
+    * a later commit rewrote, and stays live while any bucket maps to
+    * it — so reading a table dir without this filter would resurrect
+    * superseded and deleted rows.
+    */
+  private def readBuckets(spark: org.apache.spark.sql.SparkSession,
+      tablePath: String, entries: Map[Int, String],
+      schema: Option[StructType]): DataFrame = {
+    val byDir = entries.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (d, bs) => s"$tablePath/$d" -> bs.map(_._1).sorted }
+    val s = schema.getOrElse(spark.read.parquet(byDir.map(_._1): _*).schema)
+    byDir.map { case (dir, buckets) =>
+      spark.read.schema(s).parquet(dir).where(col(BucketCol).isin(buckets: _*))
+    }.reduce(_ union _)
+  }
+
+  /** A committed manifest: its number, the table's bucket count,
+    * bucket -> data dir, and the stored rows' schema (None in
+    * manifests written before the schema was recorded). */
+  private case class Manifest(n: Long, numBuckets: Int,
+      entries: Map[Int, String], schema: Option[StructType])
 
   /** Committed manifest numbers, ascending (empty if none). */
   private def committedManifests(fs: org.apache.hadoop.fs.FileSystem,
@@ -708,9 +757,11 @@ object StreamzOps {
       .sorted.toSeq
   }
 
-  /** Parse committed manifest n: (numBuckets, bucket -> data dir). */
+  /** Parse committed manifest n: `key=value` header lines (unknown keys
+    * are skipped, so later writers may add facts) and
+    * `bucket<TAB>dir` entry lines. */
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String, n: Long): Option[(Int, Map[Int, String])] = {
+      tablePath: String, n: Long): Option[Manifest] = {
     val p = new org.apache.hadoop.fs.Path(s"$tablePath/manifest/m$n")
     if (!fs.exists(p)) return None
     val lines = {
@@ -718,30 +769,29 @@ object StreamzOps {
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
       finally in.close()
     }
-    val nb = lines.head.stripPrefix("numBuckets=").toInt
-    val entries = lines.tail.map { l =>
-      val Array(b, d) = l.split("\t", 2); b.toInt -> d
-    }.toMap
-    Some((nb, entries))
+    val Entry = "(\\d+)\t(.*)".r
+    val entries = lines.collect { case Entry(b, d) => b.toInt -> d }.toMap
+    val header = lines.filterNot(Entry.matches).filter(_.contains('='))
+      .map(l => l.takeWhile(_ != '=') -> l.dropWhile(_ != '=').tail).toMap
+    Some(Manifest(n, header("numBuckets").toInt, entries,
+      header.get("schema").map(DataType.fromJson(_).asInstanceOf[StructType])))
   }
 
-  /** Highest committed manifest: (numBuckets, n, bucket -> data dir). */
+  /** Highest committed manifest. */
   private def currentManifest(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String): Option[(Int, Long, Map[Int, String])] =
-    committedManifests(fs, tablePath).lastOption.flatMap { n =>
-      readManifest(fs, tablePath, n).map { case (nb, e) => (nb, n, e) }
-    }
+      tablePath: String): Option[Manifest] =
+    committedManifests(fs, tablePath).lastOption.flatMap(readManifest(fs, tablePath, _))
 
   /** Atomic publish: write to a dot-temp name, rename to the fresh
     * final name (atomic on HDFS/local — the destination never exists,
     * so there is no delete→rename hole).
     */
   private def commitManifest(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String, n: Long, numBuckets: Int,
+      tablePath: String, n: Long, numBuckets: Int, schema: StructType,
       entries: Seq[(Int, String)]): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(s"$tablePath/manifest/.m$n.inprogress")
     val out = fs.create(tmp, true)
-    try out.write((s"numBuckets=$numBuckets\n" +
+    try out.write((s"numBuckets=$numBuckets\nschema=${schema.json}\n" +
       entries.map { case (b, d) => s"$b\t$d" }.mkString("\n"))
       .getBytes("UTF-8"))
     finally out.close()
@@ -765,8 +815,8 @@ object StreamzOps {
     val live = committedManifests(fs, tablePath)
       .filter(_ >= keepMin)
       .flatMap(j => readManifest(fs, tablePath, j).toSeq)
-      .flatMap(_._2.values)
-      .map(_.split("/")(1)).toSet // data/mJ/_bp=K -> mJ
+      .flatMap(_.entries.values)
+      .map(_.split("/")(1)).toSet // data/mJ or data/mJ/_bp=K -> mJ
     val dataDir = new org.apache.hadoop.fs.Path(s"$tablePath/data")
     if (fs.exists(dataDir))
       fs.listStatus(dataDir).map(_.getPath).foreach { p =>

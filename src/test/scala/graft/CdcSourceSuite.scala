@@ -10,6 +10,12 @@ import org.apache.spark.sql.streaming.Trigger
   */
 class CdcSourceSuite extends GraftSuite {
 
+  /** A snapshot manifest's `bucket -> data dir` entry lines. */
+  private def manifestEntries(path: String): Map[Int, String] =
+    scala.io.Source.fromFile(path).getLines().toVector
+      .filter(_.matches("\\d+\t.*")).map(_.split("\t", 2))
+      .map(a => a(0).toInt -> a(1)).toMap
+
   private def readCdc(batchSize: Int, snapshotSeq: Int) =
     spark.readStream.format("pg-cdc-sim")
       .option("path", s"$sf0001/events.parquet")
@@ -230,17 +236,18 @@ class CdcSourceSuite extends GraftSuite {
       ms.addData((1L, 1000L, 9.9))
       q.processAllAvailable()
     } finally q.stop()
-    // commit m2 (the 1-key batch) wrote exactly one bucket dir…
-    val m2buckets = new java.io.File(s"$table/data/m2").listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("_bp=")).map(_.getName)
-    assert(m2buckets.length == 1,
-      s"1-key batch must rewrite exactly 1 bucket, wrote ${m2buckets.toSeq}")
-    // …and every clean bucket's manifest entry still points into m1
-    val manifest = scala.io.Source.fromFile(s"$table/manifest/m2").getLines().toVector
-    val entries = manifest.tail.map(_.split("\t")).map(a => a(0).toInt -> a(1))
-    assert(entries.count(_._2.startsWith("data/m2/")) == 1)
-    assert(entries.count(_._2.startsWith("data/m1/")) == entries.size - 1)
+    // commit m2 (the 1-key batch) maps exactly one bucket to its dir…
+    val entries = manifestEntries(s"$table/manifest/m2")
+    val rewritten = entries.filter(_._2 == "data/m2").keys.toSeq
+    assert(rewritten.size == 1,
+      s"1-key batch must rewrite exactly 1 bucket, rewrote $rewritten")
+    // …every clean bucket's manifest entry still points into m1…
+    assert(entries.count(_._2 == "data/m1") == entries.size - 1)
     assert(entries.size > 1, "fixture must span multiple buckets")
+    // …and the dir holds the rows of that one bucket only
+    val m2Buckets = spark.read.parquet(s"$table/data/m2")
+      .select("_gb_bucket").distinct().collect().map(_.getInt(0)).toSeq
+    assert(m2Buckets == rewritten, s"data/m2 holds buckets $m2Buckets")
     // and the snapshot reads back as the correct fold
     val got = readUpsertTable(spark, table).collect()
       .map(r => r.getAs[Long]("key") -> r.getAs[Long]("seq")).toMap
@@ -270,15 +277,54 @@ class CdcSourceSuite extends GraftSuite {
       "aggMaintainBatch" -> ((df, t, id) => aggMaintainBatch(
         df.select(col("key").cast("string").as("grp"), col("dn"),
           col("seq").as("dv")), t, Seq("grp"), id)))
-    for ((name, commit) <- sinks) {
+    // the RDD operation scopes and task count of every stage of every
+    // job a commit starts, tagged with the job group
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[(Set[String], Int)])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("") ->
+        e.stageInfos.map(s => (s.rddInfos.flatMap(_.scope.map(_.name)).toSet, s.numTasks)))
+    }
+    def jobsSinceLastCall(): Seq[Seq[(Set[String], Int)]] = {
+      // the listener bus is FIFO: once the sync job's start arrives,
+      // every job the commit started has been delivered too
+      sc.setJobGroup("sink-once-sync", "listener sync")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!jobs.asScala.exists(_._1 == "sink-once-sync") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+      val seen = Iterator.continually(jobs.poll()).takeWhile(_ != null).toSeq
+      assert(seen.exists(_._1 == "sink-once-sync"), "the listener bus never delivered the sync job")
+      seen.filter(_._1 != "sink-once-sync").map(_._2)
+    }
+    sc.addSparkListener(listener)
+    try for ((name, commit) <- sinks) {
       val table = s"${base(name)}/state"
       for ((ks, id) <- batches.zipWithIndex) {
         evals.reset()
+        jobsSinceLastCall()
         commit(rows(ks, id.toLong), table, id.toLong)
         assert(evals.value == ks.size,
           s"$name batch $id: ${evals.value} row evaluations for ${ks.size} rows")
+        val stages = jobsSinceLastCall().flatten
+        // parquet schema inference is a `parallelize` job over the
+        // footers; the second commit reads its prior rows with the
+        // schema the manifest records
+        assert(!stages.exists(_._1("parallelize")),
+          s"$name batch $id ran a schema-inference job")
+        // one file per write task, not per bucket
+        val writeTasks = stages.filter(_._1("WriteFiles")).map(_._2)
+        assert(writeTasks.size == 1, s"$name batch $id: write stages $writeTasks")
+        val files = new java.io.File(s"$table/data/m${id + 1}").listFiles
+          .count(_.getName.endsWith(".parquet"))
+        assert(files >= 1 && files <= writeTasks.head,
+          s"$name batch $id wrote $files files from ${writeTasks.head} write tasks")
       }
-    }
+    } finally sc.removeSparkListener(listener)
     // the streaming sink runs the same commit from foreachBatch
     val dir = base("sink_once")
     val ms = org.apache.spark.sql.execution.streaming.runtime
@@ -534,31 +580,23 @@ class CdcSourceSuite extends GraftSuite {
 
   test("compactTable: buckets collapse to one file each; snapshot identical; manifest advances") {
     import graft.api.StreamzOps._
-    val sess = spark
-    import sess.implicits._
-    implicit val sqlCtx = sess.sqlContext
     val base = java.nio.file.Files.createTempDirectory("upsert_compact").toString
     val table = s"$base/state"
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Double)]
-    // many-files-per-bucket shape needs (a) a bucket count that does
-    // not divide the shuffle parallelism (8 buckets on 4 shuffle
-    // partitions aligns 1 task : 1 bucket) and (b) AQE coalescing off
-    // (on this tiny fixture it folds the write into one task; at real
-    // sizes it would not)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val q = ms.toDF().toDF("key", "seq", "value")
-      .sinkUpsert(table, Seq("key"), "seq", s"$base/cp", numBuckets = 3,
-        trigger = Trigger.ProcessingTime(0))
-    try {
-      ms.addData((1L to 64L).map(k => (k, k, k * 1.0)): _*)
-      q.processAllAvailable()
-      ms.addData((1L to 64L).map(k => (k, k + 1000L, k * 2.0)): _*)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    def rows(ks: Seq[Long], seqOffset: Long) =
+      spark.range(ks.head, ks.last + 1).select(col("id").as("key"),
+        (col("id") + seqOffset).as("seq"), (col("id") * 2.0).as("value"))
+    // fragmentation: a second commit over a subset of the keys moves
+    // its buckets to data/m2, and the rest stay in data/m1 beside the
+    // superseded rows of the moved buckets. Coalescing off keeps one
+    // write task per shuffle partition, so data/m1 holds several files
+    // (on this tiny fixture AQE folds the write into one task)
+    withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      upsertBatch(rows(1L to 64L, 0L), table, Seq("key"), "seq", 0L, numBuckets = 8)
+      upsertBatch(rows(1L to 4L, 1000L), table, Seq("key"), "seq", 1L, numBuckets = 8)
     }
+    val entries = manifestEntries(s"$table/manifest/m2")
+    assert(entries.values.toSet == Set("data/m1", "data/m2"),
+      s"fixture must leave buckets in both commit dirs: $entries")
     def state() = readUpsertTable(spark, table).collect()
       .map(r => r.getAs[Long]("key") -> r.getAs[Long]("seq")).toMap
     def dataFiles() = {
@@ -567,16 +605,152 @@ class CdcSourceSuite extends GraftSuite {
       walk(new java.io.File(s"$table/data"))
         .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
     }
+    def storedRows() = spark.read.parquet(dataFiles().map(_.getPath): _*).count()
     val before = state()
+    assert(before == (1L to 64L).map(k => k -> (if (k <= 4) k + 1000L else k)).toMap)
     val nFilesBefore = dataFiles().size
+    // the files a bucket's read opens: every file of the dir it maps to
+    val opensBefore = dataFiles().groupBy(_.getParentFile.getName).values.map(_.size).max
+    assert(opensBefore > 1, s"fixture must fragment: $opensBefore files per bucket read")
+    assert(storedRows() > before.size, "data/m1 keeps the superseded rows until compaction")
     val reported = graft.api.StreamzOps.compactTable(spark, table)
     assert(reported == nFilesBefore, s"reported $reported != counted $nFilesBefore")
     val after = dataFiles()
-    assert(after.size < nFilesBefore, s"compaction must shrink files ($nFilesBefore -> ${after.size})")
-    // exactly one file per surviving bucket dir
-    val perDir = after.groupBy(_.getParentFile.getName).values.map(_.size)
-    assert(perDir.forall(_ == 1), s"one file per bucket after compaction: $perDir")
+    // exactly one file per surviving bucket dir, the only dirs left
+    val perDir = after.groupBy(_.getParentFile.getName)
+    assert(perDir.keySet.forall(_.startsWith("_bp=")) && perDir.values.forall(_.size == 1),
+      s"one file per bucket after compaction: ${perDir.view.mapValues(_.size).toMap}")
+    assert(storedRows() == before.size, "compaction must drop the superseded rows")
+    assert(new java.io.File(s"$table/manifest/m3").exists, "compaction commits manifest m3")
     assert(state() == before, "compaction must not change the snapshot")
+  }
+
+  test("a commit dir shared by buckets never leaks superseded rows: read, time travel, compaction") {
+    import graft.api.StreamzOps._
+    val sess = spark
+    import sess.implicits._
+    // commit 1 writes every bucket; commit 2 updates keys 1 and 2 and
+    // deletes key 3, moving their buckets to data/m2 while data/m1
+    // keeps the superseded rows of those buckets
+    val commits: Seq[Seq[(Long, Long, String)]] = Seq((1L to 40L).map(k => (k, k, "I")),
+      Seq((1L, 101L, "U"), (2L, 102L, "U"), (3L, 103L, "D")))
+    def changes(upTo: Int) = commits.take(upTo).flatten
+    // expected folds, as rows of the sink's read
+    def latest(upTo: Int): Set[Seq[Any]] = changes(upTo).groupBy(_._1).values
+      .map(_.maxBy(_._2)).filter(_._3 != "D").map(c => Seq[Any](c._1, c._2)).toSet
+    def history(upTo: Int): Set[Seq[Any]] = changes(upTo).groupBy(_._1).values.flatMap { vs =>
+      val ordered = vs.sortBy(_._2)
+      ordered.zip(ordered.drop(1).map(v => Some(v._2)) :+ None).collect {
+        case (v, next) if v._3 != "D" =>
+          Seq[Any](v._1, v._2, next.map(Long.box).orNull, if (next.isEmpty) 1 else 0)
+      }
+    }.toSet
+    // the aggregate sink folds (group, dn, dv) deltas instead
+    val deltas: Seq[Seq[(String, Long, Long)]] = Seq((1L to 40L).map(k => (s"g$k", 1L, k)),
+      Seq(("g1", 1L, 5L), ("g2", 0L, 7L), ("g3", -1L, -3L)))
+    def totals(upTo: Int): Set[Seq[Any]] = deltas.take(upTo).flatten.groupBy(_._1)
+      .map { case (g, ds) => Seq[Any](g, ds.map(_._2).sum, ds.map(_._3).sum) }
+      .filter(_(1) != 0L).toSet
+    def rowSet(df: DataFrame, cols: String*): Set[Seq[Any]] =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val sinks: Seq[(String, (String, Int) => Unit, (String, Option[Long]) => Set[Seq[Any]],
+        Int => Set[Seq[Any]])] = Seq(
+      ("upsertBatch",
+        (t, i) => upsertBatch(commits(i).toDF("key", "seq", "op"), t, Seq("key"), "seq",
+          i.toLong, opCol = Some("op"), numBuckets = 8, retainManifests = 1),
+        (t, snap) => rowSet(readUpsertTable(spark, t, snap), "key", "seq"),
+        latest),
+      ("scd2Batch",
+        (t, i) => scd2Batch(commits(i).toDF("key", "seq", "op"), t, Seq("key"), "seq",
+          i.toLong, opCol = Some("op"), numBuckets = 8, retainManifests = 1),
+        (t, snap) => rowSet(readScd2Table(spark, t, opCol = Some("op"), snapshot = snap),
+          "key", "seq", "valid_to_ord", "is_current"),
+        history),
+      ("aggMaintainBatch",
+        (t, i) => aggMaintainBatch(deltas(i).toDF("grp", "dn", "dv"), t, Seq("grp"),
+          i.toLong, numBuckets = 8, retainManifests = 1),
+        (t, snap) => rowSet(readAggTable(spark, t, snap), "grp", "dn", "dv"),
+        totals))
+    // every sink runs every check; the mismatches are reported together
+    val mismatches = sinks.flatMap { case (name, commit, read, fold) =>
+      val table = java.nio.file.Files.createTempDirectory(s"shared_dir_$name").toString + "/state"
+      commit(table, 0)
+      commit(table, 1)
+      assert(manifestEntries(s"$table/manifest/m2").values.toSet == Set("data/m1", "data/m2"),
+        s"$name: commit 2 must leave buckets in both commit dirs")
+      val afterCommit = read(table, None)
+      val timeTravel = read(table, Some(1L))
+      compactTable(spark, table)
+      Seq(("read after commit 2", afterCommit, fold(2)),
+        ("time travel to commit 1", timeTravel, fold(1)),
+        ("read after compaction", read(table, None), fold(2)))
+        .collect { case (check, got, want) if got != want =>
+          s"$name, $check: extra ${got diff want}, missing ${want diff got}" }
+    }
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
+  }
+
+  test("an old-layout table (_bp dirs, no schema line) reads and takes new commits; unknown manifest headers parse") {
+    import graft.api.StreamzOps._
+    val sess = spark
+    import sess.implicits._
+    val table = java.nio.file.Files.createTempDirectory("old_layout").toString + "/state"
+    def state() = readUpsertTable(spark, table).collect()
+      .map(r => r.getAs[Long]("key") -> r.getAs[Long]("seq")).toMap
+    def writeManifest(n: Int, lines: Seq[String]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$table/manifest/m$n"),
+        lines.mkString("\n").getBytes("UTF-8"))
+    // the earlier layout: one data/m1/_bp=<K>/ dir per bucket (the rows
+    // keep _gb_bucket, the dir name carries _bp), and a manifest with
+    // only the numBuckets header
+    (1L to 40L).map(k => (k, k, k * 1.0)).toDF("key", "seq", "value")
+      .withColumn("_gb_bucket", pmod(hash(col("key")), lit(8)))
+      .withColumn("_bp", col("_gb_bucket"))
+      .write.partitionBy("_bp").parquet(s"$table/data/m1")
+    val buckets = new java.io.File(s"$table/data/m1").listFiles.map(_.getName)
+      .filter(_.startsWith("_bp=")).map(_.stripPrefix("_bp=").toInt).sorted.toSeq
+    new java.io.File(s"$table/manifest").mkdirs()
+    writeManifest(1, "numBuckets=8" +: buckets.map(b => s"$b\tdata/m1/_bp=$b"))
+    var want = (1L to 40L).map(k => k -> k).toMap
+    assert(state() == want, "an old-layout table reads through its manifest")
+    upsertBatch(Seq((1L, 101L, 9.9), (2L, 102L, 8.8)).toDF("key", "seq", "value"),
+      table, Seq("key"), "seq", 1L, numBuckets = 8)
+    want ++= Map(1L -> 101L, 2L -> 102L)
+    assert(state() == want, "a new commit on an old-layout table folds")
+    val m2 = manifestEntries(s"$table/manifest/m2")
+    assert(m2.values.exists(_.startsWith("data/m1/_bp=")) && m2.values.exists(_ == "data/m2"),
+      s"clean buckets keep their old-layout entries: $m2")
+    // a header line this reader does not know is skipped
+    val lines = scala.io.Source.fromFile(s"$table/manifest/m2").getLines().toVector
+    writeManifest(3, lines.head +: "rows_written=2" +: lines.tail)
+    assert(state() == want, "a manifest with an unknown header line parses")
+    upsertBatch(Seq((3L, 103L, 7.7)).toDF("key", "seq", "value"),
+      table, Seq("key"), "seq", 2L, numBuckets = 8)
+    want += 3L -> 103L
+    assert(state() == want, "a commit on top of a manifest with an unknown header folds")
+  }
+
+  test("a recorded non-nullable schema reads back nullable, and a later null folds") {
+    import graft.api.StreamzOps._
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val sess = spark
+    import sess.implicits._
+    val table = java.nio.file.Files.createTempDirectory("nonnull_schema").toString + "/state"
+    // spark.range's id and a literal are non-nullable columns
+    upsertBatch(spark.range(1, 9).select(col("id").as("key"), col("id").as("seq"),
+      lit(1.0).as("value")), table, Seq("key"), "seq", 0L, numBuckets = 4)
+    val recorded = scala.io.Source.fromFile(s"$table/manifest/m1").getLines()
+      .collectFirst { case l if l.startsWith("schema=") =>
+        DataType.fromJson(l.stripPrefix("schema=")).asInstanceOf[StructType] }
+    assert(recorded.exists(s => !s("key").nullable && !s("value").nullable),
+      s"fixture must record a non-nullable schema: $recorded")
+    // the file source reads a supplied schema as nullable, as inference would
+    assert(readUpsertTable(spark, table).schema.forall(_.nullable))
+    upsertBatch(Seq((1L, 101L, Option.empty[Double])).toDF("key", "seq", "value"),
+      table, Seq("key"), "seq", 1L, numBuckets = 4)
+    val got = readUpsertTable(spark, table).collect()
+      .map(r => r.getAs[Long]("key") -> Option(r.getAs[java.lang.Double]("value"))).toMap
+    assert(got == (1L to 8L).map(k => k -> (if (k == 1) None else Some(1.0: java.lang.Double))).toMap)
   }
 
   test("compactTable + zorderBy: OPTIMIZE ZORDER — row groups skip on both dims; snapshot identical") {
