@@ -32,13 +32,6 @@ object Bench {
       // advisoryPartitionSizeInBytes, so TB-scale caches keep their
       // parallelism; only near-empty partitions collapse.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // SPARK_GRAFT_EXTRA_SQLCONF="k=v;k=v": measurement passthrough
-      // for conf A/B probes (r19) — applied at builder time so static
-      // confs work too. Unset (the driver sets nothing) = zero effect.
-      .config(sys.env.get("SPARK_GRAFT_EXTRA_SQLCONF").toSeq
-        .flatMap(_.split(";")).map { kv =>
-          val Array(k, v) = kv.split("=", 2); k -> v
-        }.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // uniform timestamp flavor for the whole session (see Verify)

@@ -113,12 +113,6 @@ object IvfIndex {
   private def loadMetaOpt(spark: SparkSession, indexDir: String): Option[Meta] =
     Versioned.current(spark, metaPath(indexDir)).map(_ => loadMeta(spark, indexDir))
 
-  /** True when `indexDir` holds a committed meta version — the
-    * probe-tooling reuse gate (mirrors [[NeighborGraphAnn.hasIndex]]).
-    */
-  def hasIndex(spark: SparkSession, indexDir: String): Boolean =
-    Versioned.current(spark, metaPath(indexDir)).isDefined
-
   private def loadMeta(spark: SparkSession, indexDir: String): Meta = {
     val vdir = Versioned.current(spark, metaPath(indexDir)).getOrElse(
       throw new IllegalStateException(s"no committed IVF index under $indexDir"))

@@ -395,7 +395,8 @@ object NeighborGraphAnn {
     * committed version lazily, so [[topKLoaded]] probes pay parquet
     * scans of the two tables and the beam-search joins — never a
     * build. Search latency is thereby measurable separately from
-    * build cost (GraphAnnProbe tool → BASELINE.md). */
+    * build cost (recorded in SCALE_PROBE_r17_gann2m.json and
+    * GANN_ENTRY_SWEEP_r17.json). */
   def save(spark: SparkSession, indexDir: String, graph: DataFrame,
       e: DataFrame, idCol: String, vecCol: String): String =
     Versioned.publish(spark, indexDir) { vdir =>
@@ -440,8 +441,8 @@ object NeighborGraphAnn {
   }
 
   /** True when `indexDir` holds a committed index version AT THE
-    * CURRENT format. A stale-format index reads as absent so callers
-    * (GraphAnnProbe) rebuild instead of tripping [[load]]'s guard. */
+    * CURRENT format. A stale-format index reads as absent, so a caller
+    * that checks first rebuilds instead of tripping [[load]]'s guard. */
   def hasIndex(spark: SparkSession, indexDir: String): Boolean =
     Versioned.current(spark, indexDir)
       .exists(vdir => stampedFormat(spark, vdir).contains(FORMAT_VERSION))

@@ -138,8 +138,7 @@ object MinHashDf {
     // a broadcast anti-join on the (few) hot keys when enabled.
     // NOTE (ADVICE r15 #3): with maxBucket > 0 the engine output
     // INTENTIONALLY diverges from the shipped (uncapped) oracleSql —
-    // verify/digest runs against it must either unset the conf or use
-    // the capped oracle twin (cappedOracleSql below, r16).
+    // verify/digest runs against it must unset the conf.
     val maxBucket = docs.sparkSession.conf
       .getOption("spark.graft.minhash.maxBucket")
       .map(s => s.toLongOption.filter(_ >= 0L).getOrElse(throw new IllegalArgumentException(
@@ -305,17 +304,7 @@ object MinHashDf {
     * >75 GB of DuckDB temp before dying (same failure class as the
     * pagerank oracle, fixed the same way). Hint is DuckDB-dialect
     * (the only engine that runs oracle SQL). */
-  private def bandedCandidatesCte: String = bandedCandidatesCte(0L)
-
-  /** `maxBucket > 0` states the `spark.graft.minhash.maxBucket`
-    * semantics in the oracle dialect too (r16, VERDICT r15 #7): band
-    * buckets larger than the cap are dropped before the self-join —
-    * one GROUP BY ... HAVING over bands plus an anti-join, exactly
-    * the engine's broadcast-anti shape. Proves the cap is an
-    * engine-portable semantic, not a Spark-side fork; hash-compared
-    * at a scale where the cap fires (BASELINE.md r16 capped-oracle
-    * note). */
-  private def bandedCandidatesCte(maxBucket: Long): String = {
+  private def bandedCandidatesCte: String = {
     // (h >> 32) restores the historical 28-bit hash (hex digits 1-7
     // of the 60-bit key) — signature values are bit-identical to the
     // pre-r15 oracle
@@ -324,14 +313,6 @@ object MinHashDf {
     val bandSelects = (0 until NUM_BANDS).map(bi =>
       s"SELECT doc_id, $bi AS band, sig${2 * bi} AS v1, sig${2 * bi + 1} AS v2 FROM sigs")
       .mkString("\n  UNION ALL ")
-    val capCtes = if (maxBucket > 0)
-      s"""hot AS MATERIALIZED (SELECT band, v1, v2 FROM bands
-         |  GROUP BY 1, 2, 3 HAVING COUNT(*) > $maxBucket),
-         |bands_eff AS MATERIALIZED (SELECT b.* FROM bands b
-         |  ANTI JOIN hot h ON b.band = h.band AND b.v1 = h.v1 AND b.v2 = h.v2),
-         |""".stripMargin
-    else ""
-    val bandsRel = if (maxBucket > 0) "bands_eff" else "bands"
     s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
        |           WHERE LEN(string_split(text, ' ')) >= 3),
        |sh AS MATERIALIZED (SELECT DISTINCT doc_id, sh FROM (
@@ -347,9 +328,9 @@ object MinHashDf {
        |      FROM shh GROUP BY doc_id),
        |bands AS MATERIALIZED (
        |  $bandSelects),
-       |${capCtes}cand AS MATERIALIZED (
+       |cand AS MATERIALIZED (
        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       |  FROM $bandsRel x JOIN $bandsRel y
+       |  FROM bands x JOIN bands y
        |    ON x.band = y.band AND x.v1 = y.v1 AND x.v2 = y.v2
        |   AND x.doc_id < y.doc_id),
        |sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
@@ -360,12 +341,6 @@ object MinHashDf {
        |  JOIN shh b ON b.doc_id = c.doc_b AND b.h = a.h
        |  GROUP BY 1, 2)""".stripMargin
   }
-
-  /** #71's SQL with the band-bucket cap applied (oracle twin of a run
-    * with `spark.graft.minhash.maxBucket = maxBucket`). */
-  def qDedupMinhashDfCappedSql(maxBucket: Long): String =
-    qDedupMinhashDfSql.replace(bandedCandidatesCte,
-      bandedCandidatesCte(maxBucket))
 
   val qDedupMinhashDfSql: String =
     s"""$bandedCandidatesCte

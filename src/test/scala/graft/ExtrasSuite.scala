@@ -725,6 +725,29 @@ class ExtrasSuite extends GraftSuite {
     } finally spark.conf.unset(graft.plans.RangeBinJoinRule.WIDTH_CONF)
   }
 
+  test("range-join maxBins guard: a too-wide interval fails loudly at collect() in both API joins and the hint rewrite") {
+    val sess = spark; import sess.implicits._
+    // [0, 10] at width 1 spans 10 bins, over the cap of 4
+    val wide = Seq((1L, 0L, 10L)).toDF("aid", "lo", "hi")
+    val points = Seq((10L, 5L)).toDF("pid", "v")
+    val spans = Seq((20L, 3L, 4L)).toDF("bid", "b_lo", "b_hi")
+    def failsLoudly(df: org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](df.collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains("spans more than 4 bins")),
+        s"expected the maxBins error, got:\n${msgs.mkString("\n")}")
+    }
+    failsLoudly(graft.api.RangeBinJoin.intervalJoin(wide, "lo", "hi", points, "v",
+      binWidth = 1L, maxBins = 4L))
+    failsLoudly(graft.api.RangeBinJoin.overlapJoin(wide, "lo", "hi", spans, "b_lo", "b_hi",
+      binWidth = 1L, maxBins = 4L))
+    graft.plans.RangeBinJoinRule.install(spark)
+    withConfs(graft.plans.RangeBinJoinRule.MAX_BINS_CONF -> "4") {
+      failsLoudly(wide.hint("range_bin", 1L).join(points, $"v" > $"lo" && $"v" <= $"hi"))
+    }
+  }
+
   test("q_join_asof_binned (#112): row-identical to q_join_asof, including no-match lefts") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
       (r.getLong(0), r.getLong(1), Option(r.get(2)), Option(r.get(3)))).toSeq
