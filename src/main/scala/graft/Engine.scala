@@ -7,7 +7,10 @@ import graft.functions.FloatVecDot
   * dataset directory — all tables registered as views (events with
   * the ns-timestamp recipe already applied) and the engine's custom
   * functions available from SQL. After `Engine.init`, the entire
-  * capability surface is reachable through plain `spark.sql`.
+  * capability surface is reachable through plain `spark.sql`, except
+  * the `range_bin`/`skew_salt` join hints and the
+  * `spark.graft.rangeBin.width` conf: their rules are installed only
+  * by a session built with `spark.sql.extensions=graft.GraftExtensions`.
   *
   * {{{
   *   graft.Engine.init(spark, "/root/testdata/sf0.01")
@@ -33,14 +36,6 @@ object Engine {
     FloatVecDot.register(spark)
     functions.KllQuantile.register(spark) // kll_sketch_agg / kll_union_agg / kll_quantiles
     functions.ThetaSketch.register(spark) // theta_sketch_agg / theta_union_agg / set-op estimators
-    // opt-in optimizer rewrite: range-only joins → binned equi-joins
-    // (fires only when spark.graft.rangeBin.width is set — see
-    // plans/RangeBinJoinRule)
-    graft.plans.RangeBinJoinRule.install(spark)
-    // hint-gated pre-shuffle skew salting (the optimizer form of
-    // api/SkewUtils.saltedJoin; the hint marker itself still needs an
-    // extension-built session — see plans/SkewSaltRule)
-    graft.plans.SkewSaltJoinRule.install(spark)
     // Misra–Gries frequent-items sketch as a SQL aggregate; capacity
     // fixed at registration (SQL aggregates can't take constructor
     // params per call) — register another name for other capacities.

@@ -6,17 +6,18 @@ import org.apache.spark.sql.SparkSessionExtensions
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `SparkSession.builder.withExtensions(new GraftExtensions)`).
   *
-  * Injects what the runtime `Engine.init` seam structurally cannot:
-  *  - [[plans.ResolveRangeBinHint]] into the ANALYZER, so
-  *    `df.hint("range_bin", w)` survives analysis as a
-  *    [[plans.RangeBinWidthHint]] marker (unrecognized hints are
-  *    dropped before any optimizer rule runs — SURVEY §2B note on
-  *    round-9 candidate 7);
-  *  - [[plans.RangeBinJoinRule]] into the optimizer, so
-  *    extension-built sessions get the range-join rewrite without
-  *    calling `Engine.init` (which still installs the same rule via
-  *    `extraOptimizations` for conf-only sessions; the rule is
-  *    idempotent, so double installation is harmless).
+  * The one install path for the join-rewrite rules:
+  *  - [[plans.ResolveRangeBinHint]] and [[plans.ResolveSkewSaltHint]]
+  *    into the ANALYZER, so `df.hint("range_bin", w)` and
+  *    `df.hint("skew_salt", n)` survive analysis as marker nodes
+  *    (unrecognized hints are dropped before any optimizer rule runs,
+  *    so no runtime seam can add them);
+  *  - [[plans.RangeBinJoinRule]] and [[plans.SkewSaltJoinRule]] into
+  *    the optimizer, for the hint forms and the
+  *    `spark.graft.rangeBin.width` conf form.
+  *
+  * The DataFrame API forms (`api.RangeBinJoin`, `api.SkewUtils`)
+  * apply the same rewrites to their own plans and need no extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -28,7 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => plans.SkewSaltJoinRule)
     // SQL table functions for the analytics wave: graft_funnel /
     // graft_cohort_retention / graft_twap (Engine.init registers the
-    // same ones at runtime for conf-only sessions)
+    // same ones at runtime for sessions built without this extension)
     api.EventAnalytics.descriptions.foreach(ext.injectTableFunction)
   }
 }

@@ -1,7 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{And, GreaterThan, LessThanOrEqual}
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.LogicalPlanExec
+import org.apache.spark.sql.types.LongType
+
+import graft.plans.RangeBinJoinRule
 
 /** Binned rewrite of a pure interval join — the range-join pattern a
   * declarative engine needs when there is NO equi key to hash on.
@@ -48,39 +54,14 @@ object RangeBinJoin {
     */
   def intervalJoin(left: DataFrame, loCol: String, hiCol: String,
                    right: DataFrame, valCol: String,
-                   binWidth: Long, maxBins: Long = 4096L): DataFrame = {
-    require(binWidth > 0, s"binWidth must be positive, got $binWidth")
-    require(maxBins > 0, s"maxBins must be positive, got $maxBins")
-    val overlap = left.columns.toSet.intersect(right.columns.toSet)
-    require(overlap.isEmpty, s"column collision between sides: $overlap")
-    require(!left.columns.contains("_bin") && !right.columns.contains("_bin"),
-      "inputs must not already have a _bin column (it is the join's working name)")
-    // `div` is integer floor-toward-negative-infinity only for
-    // non-negative operands; intervals over epoch-anchored values are
-    // non-negative in practice. sequence() enumerates every bin the
-    // interval can touch, so correctness never depends on the width
-    // heuristic — a too-small binWidth only costs blowup rows, up to
-    // the maxBins guard: a row whose interval spans more bins fails
-    // loudly instead of exploding unbounded (pick binWidth ≈ the
-    // typical interval; raise maxBins only deliberately).
-    // backtick-quote the interpolated names (doubling embedded
-    // backticks) — a name with spaces/dots/hyphens must not break the
-    // parse or resolve as struct-field access (same escaping rule as
-    // Profiling.profile)
-    def q(name: String) = "`" + name.replace("`", "``") + "`"
-    val (lo, hi, v) = (q(loCol), q(hiCol), q(valCol))
-    val lb = left.withColumn("_bin", explode(expr(
-      s"CASE WHEN ($lo div ${binWidth}L) > ($hi div ${binWidth}L) " +
-        s"THEN CAST(ARRAY() AS ARRAY<BIGINT>) " + // empty interval → no bins
-        s"WHEN ($hi div ${binWidth}L) - ($lo div ${binWidth}L) > ${maxBins}L " +
-        s"THEN CAST(raise_error(CONCAT('RangeBinJoin: interval spans more than " +
-        s"$maxBins bins of width $binWidth at row value ', $lo, '..', $hi, " +
-        s"' — widen binWidth or raise maxBins')) AS ARRAY<BIGINT>) " +
-        s"ELSE sequence($lo div ${binWidth}L, $hi div ${binWidth}L, 1L) END")))
-    val rb = right.withColumn("_bin", expr(s"$v div ${binWidth}L"))
-    lb.join(rb, Seq("_bin"))
-      .filter(col(v) > col(lo) && col(v) <= col(hi))
-      .drop("_bin")
+                   binWidth: Long,
+                   maxBins: Long = RangeBinJoinRule.MAX_BINS_DEFAULT): DataFrame = {
+    checkArgs(left, Seq(loCol, hiCol), right, Seq(valCol), binWidth, maxBins)
+    val (lo, hi, v) = (col(q(loCol)), col(q(hiCol)), col(q(valCol)))
+    val j = analyzedJoin(left.join(right, v > lo && v <= hi))
+    val And(GreaterThan(ve, loe), LessThanOrEqual(_, hie)) = j.condition.get
+    LogicalPlanExec.ofRows(left.sparkSession,
+      RangeBinJoinRule.binnedJoin(j, ve, loe, hie, binWidth, maxBins))
   }
 
   /** Interval × interval OVERLAP join: `left` × `right` on
@@ -106,28 +87,38 @@ object RangeBinJoin {
     */
   def overlapJoin(left: DataFrame, aLoCol: String, aHiCol: String,
                   right: DataFrame, bLoCol: String, bHiCol: String,
-                  binWidth: Long, maxBins: Long = 4096L): DataFrame = {
+                  binWidth: Long,
+                  maxBins: Long = RangeBinJoinRule.MAX_BINS_DEFAULT): DataFrame = {
+    checkArgs(left, Seq(aLoCol, aHiCol), right, Seq(bLoCol, bHiCol), binWidth, maxBins)
+    val (aLo, aHi) = (col(q(aLoCol)), col(q(aHiCol)))
+    val (bLo, bHi) = (col(q(bLoCol)), col(q(bHiCol)))
+    val j = analyzedJoin(left.join(right, aLo <= bHi && bLo <= aHi))
+    val And(LessThanOrEqual(aLoe, bHie), LessThanOrEqual(bLoe, aHie)) = j.condition.get
+    LogicalPlanExec.ofRows(left.sparkSession,
+      RangeBinJoinRule.overlapBinnedJoin(j, aLoe, aHie, bLoe, bHie, binWidth, maxBins))
+  }
+
+  private def checkArgs(left: DataFrame, leftCols: Seq[String],
+                        right: DataFrame, rightCols: Seq[String],
+                        binWidth: Long, maxBins: Long): Unit = {
     require(binWidth > 0, s"binWidth must be positive, got $binWidth")
     require(maxBins > 0, s"maxBins must be positive, got $maxBins")
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty, s"column collision between sides: $overlap")
-    require(!left.columns.contains("_bin") && !right.columns.contains("_bin"),
-      "inputs must not already have a _bin column (it is the join's working name)")
-    def q(name: String) = "`" + name.replace("`", "``") + "`"
-    def binsOf(lo: String, hi: String): String =
-      s"CASE WHEN ($lo div ${binWidth}L) > ($hi div ${binWidth}L) " +
-        s"THEN CAST(ARRAY() AS ARRAY<BIGINT>) " +
-        s"WHEN ($hi div ${binWidth}L) - ($lo div ${binWidth}L) > ${maxBins}L " +
-        s"THEN CAST(raise_error(CONCAT('RangeBinJoin: interval spans more than " +
-        s"$maxBins bins of width $binWidth at row value ', $lo, '..', $hi, " +
-        s"' — widen binWidth or raise maxBins')) AS ARRAY<BIGINT>) " +
-        s"ELSE sequence($lo div ${binWidth}L, $hi div ${binWidth}L, 1L) END"
-    val (alo, ahi, blo, bhi) = (q(aLoCol), q(aHiCol), q(bLoCol), q(bHiCol))
-    val lb = left.withColumn("_bin", explode(expr(binsOf(alo, ahi))))
-    val rb = right.withColumn("_bin", explode(expr(binsOf(blo, bhi))))
-    lb.join(rb, Seq("_bin"))
-      .filter(col(aLoCol) <= col(bHiCol) && col(bLoCol) <= col(aHiCol) &&
-        expr(s"greatest($alo, $blo) div ${binWidth}L") === col("_bin"))
-      .drop("_bin")
+    for ((df, c) <- leftCols.map(left -> _) ++ rightCols.map(right -> _))
+      require(df.schema(c).dataType == LongType,
+        s"column $c must be BIGINT, got ${df.schema(c).dataType.sql}")
   }
+
+  // backtick-quote the names (doubling embedded backticks) — a name
+  // with spaces/dots/hyphens must not break the parse or resolve as
+  // struct-field access (same escaping rule as Profiling.profile)
+  private def q(name: String) = "`" + name.replace("`", "``") + "`"
+
+  /** The naive join's analyzed Join node, whose resolved condition
+    * the builders in [[RangeBinJoinRule]] rewrite; the result is
+    * wrapped back into a DataFrame with `LogicalPlanExec.ofRows`, so
+    * the API needs no session extension. */
+  private def analyzedJoin(naive: DataFrame): Join =
+    naive.queryExecution.analyzed.asInstanceOf[Join]
 }

@@ -1,7 +1,11 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
+import org.apache.spark.sql.graft.LogicalPlanExec
+
+import graft.plans.SkewSaltJoinRule
 
 /** Skew-handling utilities (SURVEY.md §4.3).
   *
@@ -23,7 +27,7 @@ import org.apache.spark.sql.functions._
   *     aggregation input, shuffled-hash paths, or a
   *     broadcast-impossible build side with a single dominating key
   *     — a null-like default, a celebrity user). The exchange hashes
-  *     on (key, _salt), so the hot key occupies nSalts reducer
+  *     on (key, _graft_salt), so the hot key occupies nSalts reducer
   *     partitions by construction rather than by runtime rescue.
   */
 object SkewUtils {
@@ -31,7 +35,9 @@ object SkewUtils {
   /** Salted equi-join: the big (skewed) side scatters each row into
     * one of `nSalts` sub-keys via a deterministic hash of
     * `saltSource` (any well-distributed column, e.g. a row id); the
-    * small side is replicated `nSalts`× . Result rows are identical
+    * small side is replicated `nSalts`×; it is [[SkewSaltJoinRule]]'s
+    * rewrite, applied to the plain join, so it needs no session
+    * extension. Result rows are identical
     * to `big.join(small, bigKey === smallKey, "inner")` — but the
     * heaviest key's work is spread over `nSalts` tasks instead of 1.
     *
@@ -43,12 +49,15 @@ object SkewUtils {
       bigKey: Column, smallKey: Column, saltSource: Column,
       nSalts: Int): DataFrame = {
     require(nSalts > 0, "nSalts must be positive")
-    val saltedBig = big.withColumn("_salt", pmod(hash(saltSource), lit(nSalts)))
-    val saltedSmall = small.withColumn("_salt",
-      explode(expr(s"sequence(0, ${nSalts - 1})")))
-    saltedBig.join(saltedSmall,
-        bigKey === smallKey && saltedBig("_salt") === saltedSmall("_salt"),
-        "inner")
-      .drop("_salt")
+    val j = big.join(small, bigKey === smallKey, "inner")
+      .queryExecution.analyzed.asInstanceOf[Join]
+    // the salt source resolved against `big` — the join's left side
+    // keeps big's attributes, so the expression binds to it unchanged
+    val salt = big.select(saltSource).queryExecution.analyzed match {
+      case Project(Seq(Alias(e, _)), _) => e
+      case Project(Seq(e), _) => e
+    }
+    LogicalPlanExec.ofRows(big.sparkSession,
+      SkewSaltJoinRule.rewrite(j, hintedIsLeft = true, nSalts, Seq(salt)))
   }
 }

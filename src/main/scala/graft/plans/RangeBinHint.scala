@@ -16,12 +16,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Why an ANALYZER rule must create it: `UnresolvedHint` only exists
   * during analysis — unrecognized hints are warned-and-dropped before
-  * the optimizer runs, so the `extraOptimizations` seam
-  * (`RangeBinJoinRule.install`) can never see one. [[ResolveRangeBinHint]]
-  * is therefore injected at session BUILD via
+  * the optimizer runs, so no optimizer rule can ever see one.
+  * [[ResolveRangeBinHint]] is therefore injected at session BUILD via
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`);
-  * conf-only sessions keep working without it.
+  * `SparkSession.builder.withExtensions(new GraftExtensions)`), the
+  * same extension that injects [[RangeBinJoinRule]].
   *
   * [[RangeBinJoinRule]] consumes the nearest marker under each join
   * side (not crossing a nested join) and ALWAYS strips every marker

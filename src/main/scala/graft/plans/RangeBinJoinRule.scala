@@ -1,15 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
-/** Optimizer rule: rewrite a range-ONLY inner join into the binned
-  * equi-join `api/RangeBinJoin` builds by hand — automatically.
+/** The binned range-join rewrite, built once: this optimizer rule
+  * applies it to naive range-only joins, and `api/RangeBinJoin`
+  * applies the same builders ([[binnedJoin]], [[overlapBinnedJoin]])
+  * to the analyzed plan of its own naive join.
   *
   * A join whose entire condition is `lo ⋚ v ⋚ hi` (value from one
   * side, bounds from the other, no equality conjunct anywhere) gives
@@ -27,30 +28,21 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   *  - fires only when a width is DECLARED, by (in priority order):
   *    a per-join `df.hint("range_bin", w)` on either join input
   *    (resolved to a [[RangeBinWidthHint]] marker by the
-  *    session-extension analyzer rule — see [[graft.GraftExtensions]]),
-  *    the session conf `spark.graft.rangeBin.width` set to a long,
-  *    or the conf set to `auto`, which derives the width per join
-  *    from the observed interval widths of the first 10 000
-  *    bounds-side rows (max(p90, max/64) — see [[sampledWidth]] for
-  *    the prefix-sample bias argument; cached per canonicalized
-  *    bounds plan). `auto` stays opt-in because it runs a small
-  *    sampling job during optimization — silently scanning user data
-  *    to plan user queries is a decision the session owner makes,
-  *    not the engine;
+  *    session-extension analyzer rule — see [[graft.GraftExtensions]])
+  *    or the session conf `spark.graft.rangeBin.width` set to a
+  *    positive long;
   *  - only INNER joins whose condition is precisely one lower and
   *    one upper bound on the same BIGINT value expression, each
   *    bound referencing only the opposite side, everything
   *    deterministic — anything else (an equi conjunct, extra
-  *    predicates, other types) is left for the normal planner;
+  *    predicates, other types, the interval-overlap shape) is left
+  *    for the normal planner;
   *  - batch plans only (`isStreaming` guard): stream-stream joins
   *    carry watermark state machinery this rewrite must not touch.
   *
-  * Runs in the optimizer's user-provided batch (installed via
-  * `spark.experimental.extraOptimizations`, see [[install]]). The
-  * batch runs to fixed point; the rule cannot refire on its own
-  * output because the rewritten join contains a bin-equality
-  * conjunct, which the matcher rejects. Registered by `Engine.init`,
-  * so any user session gets the rewrite by setting one conf — the
+  * Injected into the optimizer by [[graft.GraftExtensions]] only. The
+  * rule cannot refire on its own output because the rewritten join
+  * contains a bin-equality conjunct, which the matcher rejects. The
   * ExtrasSuite pins that the rewritten plan contains no nested-loop
   * join and returns rows identical to the naive plan's.
   */
@@ -68,13 +60,6 @@ object RangeBinJoinRule extends Rule[LogicalPlan] {
     */
   val MAX_BINS_CONF = "spark.graft.rangeBin.maxBins"
   val MAX_BINS_DEFAULT = 4096L
-
-  /** Idempotently add the rule to the session's optimizer. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(RangeBinJoinRule))
-      spark.experimental.extraOptimizations = cur :+ RangeBinJoinRule
-  }
 
   /** (value, bound) if `e` is a single comparison bounding a BIGINT
     * value from `valSide` by an expression over `boundSide`; the
@@ -103,11 +88,6 @@ object RangeBinJoinRule extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  /** Conf-declared width: Fixed(w), Auto (sample per join), or None. */
-  private sealed trait WidthSpec
-  private case class Fixed(w: Long) extends WidthSpec
-  private case object Auto extends WidthSpec
-
   /** Nearest range_bin hint marker under `p`, NOT descending into a
     * nested join (that join owns its own hints). */
   private def hintWidth(p: LogicalPlan): Option[Long] = p match {
@@ -116,91 +96,40 @@ object RangeBinJoinRule extends Rule[LogicalPlan] {
     case other => other.children.iterator.flatMap(hintWidth).nextOption()
   }
 
-  // re-entrancy guard: the Auto sampler executes a query DURING
-  // optimization; the nested optimization must not itself sample (or
-  // rewrite) — finite by construction either way, but pointless work
-  private val inSampling = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = false
+  /** The conf's per-row bin cap; a malformed or non-positive value is
+    * rejected by name rather than read as the default (or as a cap
+    * that makes every multi-bin interval raise). */
+  private def maxBinsConf(): Long = {
+    val raw = SQLConf.get.getConfString(MAX_BINS_CONF, MAX_BINS_DEFAULT.toString)
+    raw.toLongOption.filter(_ > 0L).getOrElse(throw new IllegalArgumentException(
+      s"$MAX_BINS_CONF must be a positive integer, got '$raw'"))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // the sampling fragment must not rewrite — but it MUST still shed
-    // any hint markers torn out of the outer plan with the bounds
-    // side, or the fragment's physical planning hits an unknown node
-    if (inSampling.get())
-      return plan.transformUp { case RangeBinWidthHint(c, _) => c }
     // a malformed conf value must disable the rule with a warning, not
     // throw NumberFormatException into the optimization of EVERY query
     val raw = SQLConf.get.getConfString(WIDTH_CONF, "0")
-    val confSpec: Option[WidthSpec] =
-      if (raw.equalsIgnoreCase("auto")) Some(Auto)
-      else scala.util.Try(raw.toLong).toOption match {
-        case Some(w) if w > 0 => Some(Fixed(w))
-        case Some(_) => None // 0 / negative = disabled
-        case None =>
-          logWarning(s"$WIDTH_CONF='$raw' is not a long or 'auto' — " +
-            "range-bin rewrite disabled")
-          None
-      }
+    val confWidth: Option[Long] = raw.toLongOption match {
+      case Some(w) if w > 0 => Some(w)
+      case Some(_) => None // 0 / negative = disabled
+      case None =>
+        logWarning(s"$WIDTH_CONF='$raw' is not a long — range-bin rewrite disabled")
+        None
+    }
     val anyHint = plan.exists { case _: RangeBinWidthHint => true; case _ => false }
-    if (confSpec.isEmpty && !anyHint) return plan
+    if (confWidth.isEmpty && !anyHint) return plan
     val rewritten = plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), _)
           if !j.isStreaming && j.resolved =>
-        val spec = hintWidth(left).orElse(hintWidth(right)).map(Fixed(_))
-          .orElse(confSpec)
-        spec.flatMap(s => rewrite(j, left, right, cond, s)).getOrElse(j)
+        (for {
+          width <- hintWidth(left).orElse(hintWidth(right)).orElse(confWidth)
+          (v, lo, hi) <- matchJoin(left, right, cond)
+        } yield binnedJoin(j, v, lo, hi, width, maxBinsConf())).getOrElse(j)
     }
     // hints are consumed (or ignored — e.g. on an equi-keyed join the
     // rule stays hands-off): always strip the markers so nothing
     // unknown reaches physical planning
     rewritten.transformUp { case RangeBinWidthHint(c, _) => c }
-  }
-
-  /** Auto mode: width from the first [[SAMPLE_ROWS]] bounds-side rows
-    * — a PREFIX sample (Limit short-circuits the scan; a uniform
-    * random sample would read the whole side during optimization,
-    * which auto must never do). Width = max(prefix p90, prefix
-    * max / 64): the p90 targets ≤ 2 bins for ≥ 90% of typical rows,
-    * and the max/64 floor bounds even the widest OBSERVED interval at
-    * ≤ 65 bins — two orders under MAX_BINS' kill switch — so a
-    * width-skewed prefix (narrow early intervals, wide tail) degrades
-    * toward more bins per wide row instead of toward the
-    * `raise_error` cliff. Unsampled tail rows beyond 64× the observed
-    * max can still trip MAX_BINS; that residual is why `auto` is
-    * opt-in and the hint/conf forms exist. Cached by canonicalized
-    * (plan, lo, hi) — re-optimizing the same join (AQE re-plans,
-    * repeated queries) must not re-scan. */
-  val SAMPLE_ROWS = 10000
-  private val widthCache =
-    new java.util.concurrent.ConcurrentHashMap[(LogicalPlan, Expression, Expression), java.lang.Long]()
-
-  private def sampledWidth(boundsSide: LogicalPlan, lo: Expression,
-      hi: Expression): Option[Long] = {
-    val key = (boundsSide.canonicalized, lo.canonicalized, hi.canonicalized)
-    Option(widthCache.get(key)).map(_.longValue()).orElse {
-      val spark = SparkSession.active
-      inSampling.set(true)
-      try {
-        val proj = Project(Seq(Alias(Subtract(hi, lo), "_graft_w")()), boundsSide)
-        val widths = org.apache.spark.sql.graft.LogicalPlanExec
-          .ofRows(spark, Limit(Literal(SAMPLE_ROWS), proj))
-          .collect().iterator
-          .filterNot(_.isNullAt(0)).map(_.getLong(0)).filter(_ >= 0L).toArray
-        if (widths.isEmpty) {
-          logWarning(s"$WIDTH_CONF=auto: no non-empty intervals in the sample — " +
-            "leaving the join un-rewritten")
-          None
-        } else {
-          java.util.Arrays.sort(widths)
-          val p90 = graft.util.Stats.nearestRank(widths, 0.9)
-          val w = math.max(1L, math.max(p90, widths(widths.length - 1) / 64))
-          if (widthCache.size > 256) widthCache.clear() // bounded; repopulates
-          widthCache.put(key, w)
-          Some(w)
-        }
-      } finally inSampling.set(false)
-    }
   }
 
   /** (value, lo, hi) if the two conjuncts form one lower + one upper
@@ -222,59 +151,84 @@ object RangeBinJoinRule extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def rewrite(j: Join, left: LogicalPlan, right: LogicalPlan,
-                      cond: Expression, spec: WidthSpec): Option[LogicalPlan] = {
+  /** The rule's shape matcher: (value, lo, hi) when `cond` is exactly
+    * one lower and one upper bound on a value from one join side by
+    * bounds from the other, in either orientation. */
+  private def matchJoin(left: LogicalPlan, right: LogicalPlan, cond: Expression)
+      : Option[(Expression, Expression, Expression)] = {
     val conjuncts = splitConjuncts(cond)
-    if (conjuncts.length != 2) return None
-    val (boundsSide, valSide, vx, lo, hi) =
-      matchRange(conjuncts, right, left) match {
-        case Some((v, l, h)) => (left, right, v, l, h) // explode left
-        case None => matchRange(conjuncts, left, right) match {
-          case Some((v, l, h)) => (right, left, v, l, h) // explode right
-          case None => return None
-        }
-      }
-    // width only AFTER the shape matched: Auto must never sample for a
-    // join the rule would not rewrite anyway
-    val width = spec match {
-      case Fixed(w) => w
-      case Auto => sampledWidth(boundsSide, lo, hi).getOrElse(return None)
-    }
+    if (conjuncts.length != 2) None
+    else matchRange(conjuncts, right, left).orElse(matchRange(conjuncts, left, right))
+  }
 
-    val maxBins = scala.util.Try(
-      SQLConf.get.getConfString(MAX_BINS_CONF, MAX_BINS_DEFAULT.toString).toLong)
-      .getOrElse(MAX_BINS_DEFAULT)
-    val w = Literal(width, LongType)
-    def binOf(e: Expression) = IntegralDivide(e, w)
-    val loBin = binOf(lo)
-    val hiBin = binOf(hi)
-    val emptyBins =
-      Literal.create(Array.empty[Long], ArrayType(LongType, containsNull = false))
+  private def binOf(e: Expression, width: Long) =
+    IntegralDivide(e, Literal(width, LongType))
+
+  /** The ONE guarded-bins expression: every `width`-bin the interval
+    * [lo, hi] touches. An empty interval (lo's bin past hi's) yields
+    * no bins rather than a Sequence error, and an interval spanning
+    * more than `maxBins` bins raises a loud, actionable error instead
+    * of an unbounded explode (see [[MAX_BINS_CONF]]). `div` floors
+    * only for non-negative operands; intervals over epoch-anchored
+    * values are non-negative in practice. */
+  private def guardedBins(lo: Expression, hi: Expression, width: Long,
+                          maxBins: Long): Expression = {
+    val (loBin, hiBin) = (binOf(lo, width), binOf(hi, width))
+    val binsType = ArrayType(LongType, containsNull = false)
     val seq = Sequence(loBin, hiBin, Some(Literal(1L, LongType)), None)
       .withTimeZone(SQLConf.get.sessionLocalTimeZone)
-    // empty interval (lo > hi) → zero bins, not a Sequence error; an
-    // interval spanning more than maxBins → a loud, actionable error
-    // instead of an unbounded explode (see MAX_BINS_CONF)
+    val tooWide = Cast(new RaiseError(Concat(Seq(
+      Literal(s"graft range-bin join: an interval spans more than $maxBins bins " +
+        s"of width $width at row value "),
+      Cast(lo, StringType), Literal(".."), Cast(hi, StringType),
+      Literal(s" — widen the bin width or raise maxBins ($MAX_BINS_CONF for " +
+        "the hint and conf forms)")))), binsType)
     val guarded = If(GreaterThan(Subtract(hiBin, loBin), Literal(maxBins, LongType)),
-      Cast(new RaiseError(Literal(
-        s"graft range-bin rewrite: an interval spans more than $maxBins bins of " +
-          s"width $width — raise $WIDTH_CONF or $MAX_BINS_CONF, or unset " +
-          s"$WIDTH_CONF to fall back to the nested-loop plan")),
-        ArrayType(LongType, containsNull = false)),
-      seq)
-    val bins = If(LessThanOrEqual(loBin, hiBin), guarded, emptyBins)
+      tooWide, seq)
+    If(LessThanOrEqual(loBin, hiBin), guarded, Literal.create(Array.empty[Long], binsType))
+  }
+
+  private def explodeBins(child: LogicalPlan, lo: Expression, hi: Expression,
+                          width: Long, maxBins: Long): (LogicalPlan, Attribute) = {
     val binAttr = AttributeReference("_graft_bin", LongType, nullable = false)()
-    val exploded = Generate(Explode(bins), unrequiredChildIndex = Nil,
-      outer = false, qualifier = None, generatorOutput = Seq(binAttr),
-      child = boundsSide)
+    (Generate(Explode(guardedBins(lo, hi, width, maxBins)), unrequiredChildIndex = Nil,
+      outer = false, qualifier = None, generatorOutput = Seq(binAttr), child = child),
+      binAttr)
+  }
 
-    val vbinAlias = Alias(binOf(vx), "_graft_vbin")()
-    val projected = Project(valSide.output :+ vbinAlias, valSide)
-
+  /** Point-in-interval rewrite of the inner join `j`, whose condition
+    * bounds `v` (over one side) by `lo`/`hi` (over the other): the
+    * bounds side explodes into its bins, the value side projects its
+    * one bin, the join keys on bin equality and keeps `j`'s condition
+    * as the residual. Output = `j.output`, in order. */
+  private[graft] def binnedJoin(j: Join, v: Expression, lo: Expression, hi: Expression,
+                 width: Long, maxBins: Long): LogicalPlan = {
+    val (boundsSide, valSide) =
+      if (lo.references.subsetOf(j.left.outputSet)) (j.left, j.right) else (j.right, j.left)
+    val (exploded, binAttr) = explodeBins(boundsSide, lo, hi, width, maxBins)
+    val vbin = Alias(binOf(v, width), "_graft_vbin")()
+    val projected = Project(valSide.output :+ vbin, valSide)
     // physically (exploded bounds) ⋈ (projected value side); the final
     // Project restores the ORIGINAL join's output order either way
-    val newJoin = Join(exploded, projected, Inner,
-      Some(And(EqualTo(binAttr, vbinAlias.toAttribute), cond)), JoinHint.NONE)
-    Some(Project(j.output, newJoin))
+    val cond = And(EqualTo(binAttr, vbin.toAttribute), j.condition.get)
+    Project(j.output, Join(exploded, projected, Inner, Some(cond), JoinHint.NONE))
+  }
+
+  /** Interval-overlap rewrite of the inner join `j` of [aLo, aHi]
+    * (left) with [bLo, bHi] (right): BOTH sides explode into their
+    * bins, so an overlapping pair co-occurs in every bin the two
+    * intervals share. The pair is kept only in the bin holding the
+    * overlap start, `greatest(aLo, bLo) div width` — both intervals
+    * cover that instant, so each pair is emitted exactly once with no
+    * distinct() shuffle. `j`'s condition stays as the residual.
+    * Output = `j.output`, in order. */
+  private[graft] def overlapBinnedJoin(j: Join, aLo: Expression, aHi: Expression,
+                        bLo: Expression, bHi: Expression,
+                        width: Long, maxBins: Long): LogicalPlan = {
+    val (lx, lBin) = explodeBins(j.left, aLo, aHi, width, maxBins)
+    val (rx, rBin) = explodeBins(j.right, bLo, bHi, width, maxBins)
+    val canonical = EqualTo(binOf(Greatest(Seq(aLo, bLo)), width), lBin)
+    val cond = And(And(EqualTo(lBin, rBin), j.condition.get), canonical)
+    Project(j.output, Join(lx, rx, Inner, Some(cond), JoinHint.NONE))
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -43,7 +42,9 @@ object ResolveSkewSaltHint extends Rule[LogicalPlan] {
 }
 
 /** Optimizer rule: rewrite a hinted inner join into the salted join
-  * `api/SkewUtils.saltedJoin` builds by hand — automatically.
+  * — the same [[SkewSaltJoinRule.rewrite]] `api/SkewUtils.saltedJoin`
+  * applies to its own join. Injected by [[graft.GraftExtensions]]
+  * only (the hint marker needs its analyzer rule anyway).
   *
   * `big.hint("skew_salt", n).join(small, cond)` marks `big` as the
   * SKEWED side. The rewrite projects a deterministic per-row salt
@@ -80,13 +81,6 @@ object ResolveSkewSaltHint extends Rule[LogicalPlan] {
   */
 object SkewSaltJoinRule extends Rule[LogicalPlan] {
 
-  /** Idempotently add the rule to the session's optimizer. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(SkewSaltJoinRule))
-      spark.experimental.extraOptimizations = cur :+ SkewSaltJoinRule
-  }
-
   /** Nearest skew_salt marker under `p`, NOT descending into a nested
     * join (that join owns its own hints). */
   private def hintSalts(p: LogicalPlan): Option[Int] = p match {
@@ -98,12 +92,10 @@ object SkewSaltJoinRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!plan.exists { case _: SkewSaltHint => true; case _ => false }) return plan
     val rewritten = plan.transformUp {
-      case j @ Join(left, right, Inner, cond, _) if !j.isStreaming && j.resolved =>
+      case j @ Join(left, right, Inner, _, _) if !j.isStreaming && j.resolved =>
         (hintSalts(left), hintSalts(right)) match {
-          case (Some(n), _) => rewrite(j, hinted = left, other = right,
-            hintedIsLeft = true, n, cond)
-          case (None, Some(n)) => rewrite(j, hinted = right, other = left,
-            hintedIsLeft = false, n, cond)
+          case (Some(n), _) => rewrite(j, hintedIsLeft = true, n, left.output)
+          case (None, Some(n)) => rewrite(j, hintedIsLeft = false, n, right.output)
           case _ => j
         }
       case j: Join if j.exists { case _: SkewSaltHint => true; case _ => false } =>
@@ -115,13 +107,20 @@ object SkewSaltJoinRule extends Rule[LogicalPlan] {
     rewritten.transformUp { case SkewSaltHint(c, _) => c }
   }
 
-  private def rewrite(j: Join, hinted: LogicalPlan, other: LogicalPlan,
-      hintedIsLeft: Boolean, nSalts: Int, cond: Option[Expression]): LogicalPlan = {
+  /** The salted rewrite of the inner join `j`: the hinted side (left
+    * or right) carries the row salt `pmod(hash(saltInputs), nSalts)`,
+    * the other side is replicated `nSalts`×, and `salt = replica`
+    * joins the condition. The rule salts on the hinted side's full
+    * row; `api/SkewUtils.saltedJoin` passes its caller's salt source.
+    * Output = `j.output`, in order. */
+  private[graft] def rewrite(j: Join, hintedIsLeft: Boolean, nSalts: Int,
+      saltInputs: Seq[Expression]): LogicalPlan = {
+    val (hinted, other) = if (hintedIsLeft) (j.left, j.right) else (j.right, j.left)
     // deterministic row salt: task retries recompute the same value,
     // so shuffle re-computation stays consistent (rand()-based salting
     // does not have that property)
     val salt = Alias(
-      Cast(Pmod(new Murmur3Hash(hinted.output), Literal(nSalts)), LongType),
+      Cast(Pmod(new Murmur3Hash(saltInputs), Literal(nSalts)), LongType),
       "_graft_salt")()
     val salted = Project(hinted.output :+ salt, hinted)
     val repAttr = AttributeReference("_graft_rep", LongType, nullable = false)()
@@ -132,7 +131,7 @@ object SkewSaltJoinRule extends Rule[LogicalPlan] {
       unrequiredChildIndex = Nil, outer = false, qualifier = None,
       generatorOutput = Seq(repAttr), child = other)
     val saltEq = EqualTo(salt.toAttribute, repAttr)
-    val newCond = cond.map(And(_, saltEq)).getOrElse(saltEq)
+    val newCond = j.condition.map(And(_, saltEq)).getOrElse(saltEq)
     val (l, r) = if (hintedIsLeft) (salted, replicated) else (replicated, salted)
     Project(j.output, Join(l, r, Inner, Some(newCond), JoinHint.NONE))
   }

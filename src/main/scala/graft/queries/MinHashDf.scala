@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** Pure-DataFrame MinHash + LSH banding (SURVEY.md §2B row 71) — the
@@ -30,27 +31,6 @@ import graft.Tables
   */
 object MinHashDf {
   type Q = (SparkSession, String) => DataFrame
-
-  /** Storage level for the corpus-sized shingle-postings cache —
-    * `spark.graft.minhash.postingsStorage` ∈ {DISK_ONLY (default,
-    * r16), MEMORY_AND_DISK}. Measured both at three scales (fresh
-    * JVMs; BASELINE.md r16 postings-storage note): DISK_ONLY is
-    * equal-or-faster everywhere (sf0.1 2.01 vs 2.09 s; g10 min 15.0
-    * vs 16.2 s; g100 42.6 vs 46.4 s — sequential columnar re-read
-    * beats holding 16 B/row rows on a pressured heap) and, decisive
-    * at 100 TB, keeps the ONE corpus-sized cache in this engine out
-    * of executor memory entirely. */
-  private[graft] def postingsStorage(s: SparkSession)
-      : org.apache.spark.storage.StorageLevel =
-    s.conf.getOption("spark.graft.minhash.postingsStorage")
-      .map(_.toUpperCase) match {
-      case None | Some("DISK_ONLY") =>
-        org.apache.spark.storage.StorageLevel.DISK_ONLY
-      case Some("MEMORY_AND_DISK") =>
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case Some(other) => throw new IllegalArgumentException(
-        s"spark.graft.minhash.postingsStorage must be MEMORY_AND_DISK or DISK_ONLY, got '$other'")
-    }
 
   // shared with api/NearDupStream (the streaming near-dup path must
   // hash identically or its matches diverge from this oracled row)
@@ -101,12 +81,14 @@ object MinHashDf {
         expr("CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT)").as("h"))
       // consumed 2× (signatures+sizes, intersection postings); 16 B/row
       // after the r15 integer keys — but still CORPUS-sized, the one
-      // cache here that grows with data. Storage level is configurable
-      // (r16, VERDICT r15 what's-wrong #3): the measured default is
-      // DISK_ONLY — equal-or-faster at sf0.1/g10/g100 AND it keeps
-      // the engine's one corpus-sized cache out of executor memory;
-      // see postingsStorage above for the numbers.
-      .persist(postingsStorage(docs.sparkSession))
+      // cache here that grows with data. DISK_ONLY, measured against
+      // MEMORY_AND_DISK at three scales (r16, fresh JVMs; BASELINE.md
+      // r16 postings-storage note): equal-or-faster everywhere (sf0.1
+      // 2.01 vs 2.09 s; g10 min 15.0 vs 16.2 s; g100 42.6 vs 46.4 s —
+      // sequential columnar re-read beats holding 16 B/row rows on a
+      // pressured heap) and, decisive at 100 TB, it keeps the engine's
+      // one corpus-sized cache out of executor memory entirely.
+      .persist(StorageLevel.DISK_ONLY)
     // k signatures AND the doc's shingle count in ONE aggregation pass
     // (sizes ride along — no second groupBy over the postings);
     // (h >> 32) is the historical 28-bit hash, bit-for-bit

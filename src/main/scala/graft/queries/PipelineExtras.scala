@@ -268,14 +268,15 @@ object PipelineExtras {
       tau: Double): org.apache.spark.sql.Column =
     floor((lit(1.0) - lit(tau)) * sz + lit(1e-9)).cast("long") + 1L
 
-  /** The containment scorer's intermediate stages, exposed for the
-    * r18 scale decomposition (tools/ContainDecomp): the probe must
-    * count/time the EXACT stages the query runs, so there is one copy
-    * of the pipeline and the probe consumes it here. */
-  private[graft] case class ContainStages(sh: DataFrame, prefix: DataFrame,
-      probe: DataFrame, cand: DataFrame, inter: DataFrame, result: DataFrame)
-
-  private[graft] def containmentStagesUnique(docs: DataFrame): ContainStages = {
+  /** Containment scorer over an already-UNIQUE (doc_id, text) corpus
+    * — [[ngramContainmentPairs]] wraps it with the exact-duplicate
+    * collapse and member expansion. The candidate probe side is
+    * df-capped ([[NGRAM_POSTING_DF_CAP]]); the prefix side is not
+    * (it is ≤ ⌊(1−τ)·sz⌋+1 slots per doc by construction). The
+    * stages' cardinalities at r18 scale (shingles → prefix → probe →
+    * candidates → recount → result) are recorded in
+    * SCALE_PROBE_r18_containment.json. */
+  private[graft] def containmentPairsUnique(docs: DataFrame): DataFrame = {
     // shh: the 64-bit xxhash64 key (r19) — computed ONCE here, cached with the
     // postings; the shared string shingling transform is untouched
     val sh = containShingles(docs)
@@ -328,23 +329,14 @@ object PipelineExtras {
       .join(sh.select(col("doc_id").as("doc_a"), col("shh")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("shh")), Seq("doc_b", "shh"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-    val result = inter
+    inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sa")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         round(col("inter").cast("double") / least(col("sa"), col("sb")).cast("double"), 6)
           .as("containment"))
       .filter(col("containment") >= NGRAM_CONTAIN_MIN)
-    ContainStages(sh, prefix, probe, cand, inter, result)
   }
-
-  /** Containment scorer over an already-UNIQUE (doc_id, text) corpus
-    * — [[ngramContainmentPairs]] wraps it with the exact-duplicate
-    * collapse and member expansion. The candidate probe side is
-    * df-capped ([[NGRAM_POSTING_DF_CAP]]); the prefix side is not
-    * (it is ≤ ⌊(1−τ)·sz⌋+1 slots per doc by construction). */
-  private[graft] def containmentPairsUnique(docs: DataFrame): DataFrame =
-    containmentStagesUnique(docs).result
 
   /** Driver-visible containment dedup (r13 shape): exact-duplicate
     * collapse → capped prefix-filter scoring over unique texts →

@@ -5,13 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge to the one `private[sql]` seam the optimizer-time width
-  * sampler needs: execute a LogicalPlan FRAGMENT (a Project+Limit
-  * over one join input) as a DataFrame. `Dataset.ofRows` is package-
+/** Bridge to the `private[sql]` seam the join APIs need: wrap a
+  * rewritten LogicalPlan as a DataFrame. `api/RangeBinJoin` and
+  * `api/SkewUtils.saltedJoin` apply the optimizer rules' rewrites to
+  * their own naive join's analyzed plan and return the result through
+  * here, so they work in any session. `Dataset.ofRows` is package-
   * private to `org.apache.spark.sql`, hence this shim package — the
   * standard extension-point pattern for code that composes plans the
-  * public builder API can't reach (the fragment has no DataFrame
-  * handle: it was torn out of a larger plan mid-optimization). */
+  * public builder API can't reach. */
 object LogicalPlanExec {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(

@@ -451,7 +451,7 @@ class ExtrasSuite extends GraftSuite {
     } finally spark.conf.unset("spark.graft.minhash.maxBucket")
   }
 
-  test("r16 config guards: malformed maxBucket / postingsStorage fail loudly, defaults hold") {
+  test("r16 config guards: malformed or negative maxBucket fails loudly") {
     val sess = spark; import sess.implicits._
     val docs = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
     // ADVICE r15 #3: a junk cap value must be a clear error, not an
@@ -472,21 +472,6 @@ class ExtrasSuite extends GraftSuite {
       }
       assert(e.getMessage.contains("non-negative"), s"got: ${e.getMessage}")
     } finally spark.conf.unset("spark.graft.minhash.maxBucket")
-    // r16 postings-cache storage knob: DISK_ONLY default, explicit
-    // values honored, junk rejected by name
-    import org.apache.spark.storage.StorageLevel
-    assert(graft.queries.MinHashDf.postingsStorage(spark) == StorageLevel.DISK_ONLY,
-      "default postings storage must be the measured DISK_ONLY choice")
-    spark.conf.set("spark.graft.minhash.postingsStorage", "memory_and_disk")
-    try assert(graft.queries.MinHashDf.postingsStorage(spark) == StorageLevel.MEMORY_AND_DISK)
-    finally spark.conf.unset("spark.graft.minhash.postingsStorage")
-    spark.conf.set("spark.graft.minhash.postingsStorage", "OFF_HEAP")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        graft.queries.MinHashDf.postingsStorage(spark)
-      }
-      assert(e.getMessage.contains("postingsStorage"), s"got: ${e.getMessage}")
-    } finally spark.conf.unset("spark.graft.minhash.postingsStorage")
   }
 
   test("ngramContainmentPairs: an ALL-HOT doc inside a rare-rich container is still found (prefix-filter recall)") {
@@ -562,6 +547,22 @@ class ExtrasSuite extends GraftSuite {
       "interval must be open at lo, closed at hi")
   }
 
+  test("range-bin API and range_bin hint build one plan: the API calls the rule's rewrite") {
+    val sess = spark; import sess.implicits._
+    val left = spark.range(0, 2000).select(
+      $"id".as("lid"), ($"id" * 37L % 100000L).as("lo"))
+      .withColumn("hi", $"lo" + 500L)
+    val right = spark.range(0, 3000).select(
+      $"id".as("rid"), ($"id" * 61L % 100000L).as("v"))
+    val api = graft.api.RangeBinJoin.intervalJoin(left, "lo", "hi", right, "v", 500L)
+      .queryExecution.optimizedPlan
+    val hinted = left.hint("range_bin", 500L).join(right, $"v" > $"lo" && $"v" <= $"hi")
+      .queryExecution.optimizedPlan
+    assert(api.sameResult(hinted), s"API and hint plans differ:\n$api\n--- hint:\n$hinted")
+    assert(api.toString.contains("_graft_bin") && hinted.toString.contains("_graft_bin"),
+      s"both forms must carry the rule's bin attribute:\n$api\n--- hint:\n$hinted")
+  }
+
   test("RangeBinJoinRule: range-only joins auto-rewrite to binned equi-joins when the width conf is set") {
     // The optimizer-rule version of the regimes test above: with
     // spark.graft.rangeBin.width set, a user writing the NAIVE
@@ -570,7 +571,6 @@ class ExtrasSuite extends GraftSuite {
     // plan). Also pins the rule's guard rails: off without the conf,
     // hands-off on joins with an equi conjunct, both orientations,
     // and empty intervals.
-    graft.plans.RangeBinJoinRule.install(spark)
     val sess = spark; import sess.implicits._
     val left = spark.range(0, 2000).select(
       $"id".as("lid"), ($"id" * 37L % 100000L).as("lo"))
@@ -618,8 +618,7 @@ class ExtrasSuite extends GraftSuite {
   test("range_bin hint: per-join width beats the conf; conf-only still works; no-op off the range shape") {
     // the r9 per-join seam: df.hint("range_bin", w) resolved by the
     // GraftExtensions analyzer rule (UnresolvedHint never survives to
-    // extraOptimizations — this is WHY the extension exists)
-    graft.plans.RangeBinJoinRule.install(spark)
+    // the optimizer — this is WHY the extension exists)
     val sess = spark; import sess.implicits._
     val left = spark.range(0, 2000).select(
       $"id".as("lid"), ($"id" * 37L % 100000L).as("lo"))
@@ -669,62 +668,6 @@ class ExtrasSuite extends GraftSuite {
     assert(equi.count() > 0)
   }
 
-  test("range_bin auto width: sampled p90 interval width keeps bins/row <= 2 on the range-binned workload") {
-    // conf=auto derives the width from the data: p90 of sampled
-    // (hi - lo). The q_join_range_binned workload has constant
-    // 15-minute intervals, so the sampled width must be EXACTLY
-    // 900000000 µs — and a width >= every interval width bounds the
-    // explode at floor(hi/W) - floor(lo/W) + 1 <= 2 bins per row.
-    graft.plans.RangeBinJoinRule.install(spark)
-    val sess = spark; import sess.implicits._
-    val W = 900000000L
-    val ev = Tables.events(spark, sf0001)
-      .select(col("event_id"), col("event_type"), unix_micros(col("ts")).as("us"))
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), (col("us") - W).as("lo"), col("us").as("hi"))
-    val c = ev.filter(col("event_type") === "click").select(col("us").as("v"))
-    val naive = p.join(c, $"v" > $"lo" && $"v" <= $"hi")
-      .groupBy($"event_id").agg(count(lit(1)).as("n_clicks"))
-    val truth = graft.queries.Relational3.qJoinRangeBinned(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    try {
-      spark.conf.set(graft.plans.RangeBinJoinRule.WIDTH_CONF, "auto")
-      val plan = naive.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-        s"auto mode must remove the nested loop:\n$plan")
-      assert(plan.contains(s" div $W"),
-        s"sampled p90 of constant 15-min intervals must be exactly $W (<= 2 bins/row):\n$plan")
-      val got = naive.orderBy("event_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == truth, "auto-binned rows must match the hand-binned oracle row")
-    } finally spark.conf.unset(graft.plans.RangeBinJoinRule.WIDTH_CONF)
-  }
-
-  test("range_bin auto: a stray hint marker inside the sampled bounds side must not kill the query") {
-    // regression (round-9 review): the sampler's re-entrancy guard
-    // returned the fragment UNSTRIPPED, so a RangeBinWidthHint torn
-    // out of the outer plan with the bounds side reached physical
-    // planning ("No plan for RangeBinWidthHint"). Construct exactly
-    // that: an (ignored) hint on an equi join that then becomes the
-    // bounds side of an auto-width range join — the marker is still
-    // in the tree when the outer join samples.
-    graft.plans.RangeBinJoinRule.install(spark)
-    val sess = spark; import sess.implicits._
-    val base = spark.range(0, 500).select($"id".as("bid"), ($"id" * 37L % 10000L).as("lo"))
-    val dim = spark.range(0, 500).select($"id".as("bid"))
-    val bounds = base.hint("range_bin", 500L).join(dim, "bid")
-      .withColumn("hi", $"lo" + 200L)
-    val vals = spark.range(0, 1000).select(($"id" * 61L % 10000L).as("v"))
-    try {
-      spark.conf.set(graft.plans.RangeBinJoinRule.WIDTH_CONF, "auto")
-      val joined = bounds.join(vals, $"v" > $"lo" && $"v" <= $"hi")
-      val n = joined.count() // would throw "No plan for RangeBinWidthHint" pre-fix
-      spark.conf.unset(graft.plans.RangeBinJoinRule.WIDTH_CONF)
-      val truth = bounds.join(vals, $"v" > $"lo" && $"v" <= $"hi").count()
-      assert(n == truth, "auto-sampled rewrite must keep the rows")
-    } finally spark.conf.unset(graft.plans.RangeBinJoinRule.WIDTH_CONF)
-  }
-
   test("range-join maxBins guard: a too-wide interval fails loudly at collect() in both API joins and the hint rewrite") {
     val sess = spark; import sess.implicits._
     // [0, 10] at width 1 spans 10 bins, over the cap of 4
@@ -742,9 +685,18 @@ class ExtrasSuite extends GraftSuite {
       binWidth = 1L, maxBins = 4L))
     failsLoudly(graft.api.RangeBinJoin.overlapJoin(wide, "lo", "hi", spans, "b_lo", "b_hi",
       binWidth = 1L, maxBins = 4L))
-    graft.plans.RangeBinJoinRule.install(spark)
     withConfs(graft.plans.RangeBinJoinRule.MAX_BINS_CONF -> "4") {
       failsLoudly(wide.hint("range_bin", 1L).join(points, $"v" > $"lo" && $"v" <= $"hi"))
+    }
+    // a malformed or non-positive cap is rejected by name, not read as
+    // the default or as a cap that fails every multi-bin interval
+    Seq("fifty", "0").foreach { bad =>
+      withConfs(graft.plans.RangeBinJoinRule.MAX_BINS_CONF -> bad) {
+        val e = intercept[IllegalArgumentException](
+          wide.hint("range_bin", 1L).join(points, $"v" > $"lo" && $"v" <= $"hi").collect())
+        assert(e.getMessage.contains(graft.plans.RangeBinJoinRule.MAX_BINS_CONF),
+          s"maxBins='$bad' got: ${e.getMessage}")
+      }
     }
   }
 

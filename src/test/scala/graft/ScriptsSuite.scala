@@ -3,9 +3,9 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The scripts under `scripts/` launch library mains by class name;
-  * a class deleted or renamed in `src/main` must not leave a script
-  * pointing at nothing. */
+/** The scripts under `scripts/` launch library mains by class name,
+  * and README's file map names source files; a class or file deleted
+  * or renamed must not leave either pointing at nothing. */
 class ScriptsSuite extends AnyFunSuite {
 
   test("every graft class named in scripts/*.sh and scripts/*.py loads") {
@@ -24,5 +24,19 @@ class ScriptsSuite extends AnyFunSuite {
     }
     assert(missing.isEmpty,
       s"scripts name classes that do not load:\n${missing.map { case (s, c) => s"$s: $c" }.mkString("\n")}")
+  }
+
+  test("every *.scala file named in README.md exists under src/ or perfbench/") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val named = """\b\w+\.scala\b""".r.findAllIn(readme).toSet
+    assert(named.nonEmpty, "README.md names no .scala file")
+    val present = Seq("src", "perfbench").flatMap { d =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(d)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".scala")).toSeq
+    }.toSet
+    val missing = named -- present
+    assert(missing.isEmpty,
+      s"README.md names files that do not exist: ${missing.toSeq.sorted.mkString(", ")}")
   }
 }
