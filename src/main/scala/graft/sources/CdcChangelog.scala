@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.util.SerializableConfiguration
 
 /** The CONNECTOR SEAM of the CDC source (VERDICT r11 missing-#4): the
   * three capabilities `PgCdcSimMicroBatchStream` needs from a
@@ -51,14 +53,23 @@ trait CdcChangelog {
   def planSlices(start: Long, end: Long): Array[InputPartition]
 
   /** Executor-side reader resolving one planned slice. Built on the
-    * driver at plan time (capture credentials/conf there). */
+    * driver at plan time: capture credentials/conf there, and ship
+    * anything large once per stream (a broadcast released by
+    * [[close]]), not inside each factory, which rides in every task
+    * binary. */
   def readerFactory(): PartitionReaderFactory
+
+  /** Release what the changelog holds for its stream; called when the
+    * stream stops. */
+  def close(): Unit = ()
 }
 
 /** The parquet simulator as a [[CdcChangelog]], so the stream
   * machinery consumes ONLY the trait. `pollHorizon` reuses or builds
   * the [[ChangelogSidecar]], and every slice is a seq-range read of
-  * its partition's sidecar file.
+  * its partition's sidecar file. The session's Hadoop conf is
+  * broadcast once, at the first `readerFactory`, and every reader
+  * opens on it; `close` destroys the broadcast.
   *
   * @param sidecar where the derived log lives; a stream keeps it under
   *        its checkpoint. The default, for direct callers, is a fresh
@@ -75,6 +86,13 @@ final class ParquetChangelog(path: String, numPartitions: Int,
     (0 until numPartitions).map(i =>
       SidecarSlice(sidecar.partFile(i), start, end): InputPartition).toArray
   }
-  override def readerFactory(): PartitionReaderFactory =
-    ChangelogReaderFactory.forSession()
+  private var conf: Option[Broadcast[SerializableConfiguration]] = None
+  override def readerFactory(): PartitionReaderFactory = synchronized {
+    if (conf.isEmpty) conf = Some(ChangelogReaderFactory.broadcastSessionConf())
+    new ChangelogReaderFactory(conf.get)
+  }
+  override def close(): Unit = synchronized {
+    conf.foreach(_.destroy())
+    conf = None
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.OutputFile
@@ -13,6 +13,7 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -28,7 +29,9 @@ import org.apache.spark.util.SerializableConfiguration
   * skips every group outside the slice.
   *
   * Build: one plain job with one task per partition, each running the
-  * raw reader's derivation and writing its file. A task buffers one
+  * raw reader's derivation and writing its file. The session's Hadoop
+  * conf travels to the tasks once, as a broadcast destroyed after the
+  * job, and every file is opened on it. A task buffers one
   * partition's whole history, and the n tasks run together, so the
   * build holds up to the whole log in executor memory at once (the
   * raw snapshot read it replaces held only the snapshot's rows). The
@@ -73,14 +76,16 @@ final case class ChangelogSidecar(dir: String, rowGroupRows: Int) {
     reused.getOrElse {
       fs.delete(new Path(dir), true)
       val maxDataSeq = ChangelogFiles.dataHorizon(path, conf)
-      val hconf = new SerializableConfiguration(conf)
+      val hconf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
       val sidecar = this
-      val lastSeqs = spark.sparkContext
-        .parallelize(0 until numPartitions, numPartitions)
-        .setName(BuildRddName)
-        .map(i => sidecar.writePart(
-          ChangelogSlice(path, i, numPartitions, deletes, maxDataSeq), hconf.value))
-        .collect()
+      val lastSeqs =
+        try spark.sparkContext
+          .parallelize(0 until numPartitions, numPartitions)
+          .setName(BuildRddName)
+          .map(i => sidecar.writePart(
+            ChangelogSlice(path, i, numPartitions, deletes, maxDataSeq), hconf.value.value))
+          .collect()
+        finally hconf.destroy()
       val maxAll = (maxDataSeq +: lastSeqs).max
       val tmp = new Path(s"$dir/.$Marker.tmp")
       val out = fs.create(tmp, true)
@@ -171,25 +176,25 @@ class SidecarReader(slice: SidecarSlice, hadoopConf: Configuration)
     extends PartitionReader[InternalRow] {
   private val reader = {
     val seq = FilterApi.longColumn("event_id")
-    ParquetReader
-      .builder(new ChangelogRecordReadSupport(ChangelogSidecar.schema, identity),
-        new Path(slice.file))
-      .withConf(hadoopConf)
-      .withFilter(FilterCompat.get(FilterApi.and(
+    ChangelogFiles.openRecords(new Path(slice.file), hadoopConf,
+      new ChangelogRecordReadSupport(ChangelogSidecar.schema, identity),
+      FilterCompat.get(FilterApi.and(
         FilterApi.gt(seq, Long.box(slice.start)),
         FilterApi.ltEq(seq, Long.box(slice.end)))))
-      .build()
   }
   private var r: ChangelogRecord = _
+  private var materialized = 0L
 
   override def next(): Boolean = {
     r = reader.read()
-    if (r != null) ChangelogReadMetrics.recordsMaterialized.increment()
+    if (r != null) materialized += 1
     r != null
   }
   override def get(): InternalRow =
     InternalRow(r.seq, r.key, UTF8String.fromString(r.op), r.tsUs,
       if (r.eventType == null) null else UTF8String.fromString(r.eventType),
       if (r.hasValue) r.value else null)
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    RecordsMaterialized.task(materialized)
   override def close(): Unit = reader.close()
 }

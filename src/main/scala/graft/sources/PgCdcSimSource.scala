@@ -3,16 +3,20 @@ package graft.sources
 import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
@@ -207,6 +211,8 @@ class PgCdcSimScan(path: String, batchSize: Long, snapshotSeqOpt: Long,
     backend: String = "parquet", keyField: String = "id") extends Scan {
   override def readSchema(): StructType = PgCdcSim.schema
   override def description(): String = s"PgCdcSim(path=$path, batchSize=$batchSize)"
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    if (backend == "debezium-json") Array.empty else Array(new RecordsMaterialized)
 
   override def toBatch: Batch = new Batch {
     // the parquet simulator reads the raw changelog once per
@@ -219,9 +225,10 @@ class PgCdcSimScan(path: String, batchSize: Long, snapshotSeqOpt: Long,
       if (backend == "debezium-json") debezium.planSlices(Long.MinValue, Long.MaxValue)
       else ChangelogSlice.plan(path, numPartitions, deletes, ChangelogFiles.dataHorizon(
         path, SparkSession.active.sessionState.newHadoopConf()))
+    // one conf broadcast per scan, as Spark's own ParquetScan does
     override def createReaderFactory(): PartitionReaderFactory =
       if (backend == "debezium-json") debezium.readerFactory()
-      else ChangelogReaderFactory.forSession()
+      else new ChangelogReaderFactory(ChangelogReaderFactory.broadcastSessionConf())
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
@@ -233,8 +240,8 @@ class PgCdcSimMicroBatchStream(path: String, batchSize: Long,
     snapshotSeqOpt: Long, numPartitions: Int, deletes: Boolean,
     checkpointLocation: String,
     backend: String = "parquet", keyField: String = "id")
-    extends MicroBatchStream
-    with SupportsAdmissionControl with SupportsTriggerAvailableNow {
+    extends MicroBatchStream with SupportsAdmissionControl
+    with SupportsTriggerAvailableNow with ReportsSourceMetrics {
   // ALL backend access goes through the connector seam
   // (sources/CdcChangelog) — override [[makeChangelog]] with a
   // JDBC/Debezium implementation and the offset/planning machinery
@@ -303,7 +310,17 @@ class PgCdcSimMicroBatchStream(path: String, batchSize: Long,
     changelog.readerFactory()
   override def deserializeOffset(json: String): Offset = SeqOffset(json.toLong)
   override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  override def stop(): Unit = changelog.close()
+
+  /** The replication-slot lag a real source reports: the log's horizon
+    * and how many seqs lie past the latest consumed offset (the whole
+    * log plus one before the first batch). */
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset])
+      : util.Map[String, String] = {
+    val consumed =
+      if (latestConsumedOffset.isPresent) latestConsumedOffset.get.json.toLong else -1L
+    util.Map.of("horizonSeq", maxSeq.toString, "backlogSeqs", (maxSeq - consumed).toString)
+  }
 }
 
 /** Predicate-bearing partition of the WHOLE raw changelog: one
@@ -328,33 +345,46 @@ object ChangelogSlice {
     }.toArray
 }
 
-/** Test-visible read-amplification telemetry: every record a
-  * changelog or sidecar read actually MATERIALIZES (i.e. survived
-  * parquet row-group statistics + record-level filtering).
-  * CdcSourceSuite asserts a narrow slice stays far below full-log
-  * materialization.
-  */
-object ChangelogReadMetrics {
-  val recordsMaterialized = new java.util.concurrent.atomic.LongAdder
+/** Read-amplification metric of a changelog scan: the records its
+  * sidecar and raw reads MATERIALIZE (those that survived parquet
+  * row-group statistics and record-level filtering), summed over the
+  * scan's tasks into the scan node's SQL metric. */
+final class RecordsMaterialized extends CustomSumMetric {
+  override def name(): String = RecordsMaterialized.Name
+  override def description(): String = "changelog records materialized"
+}
+
+object RecordsMaterialized {
+  val Name = "recordsMaterialized"
+
+  /** A reader's count so far, as its `currentMetricsValues`. */
+  def task(count: Long): Array[CustomTaskMetric] = Array(new CustomTaskMetric {
+    override def name(): String = Name
+    override def value(): Long = count
+  })
 }
 
 object ChangelogReaderFactory {
-  /** Built on the DRIVER at plan time: captures the session Hadoop
-    * conf (filesystem credentials, legacy-parquet flags, …) so
-    * executor-side readers resolve the changelog exactly as the
-    * session would — not via a bare `new Configuration()`.
-    */
-  def forSession(): ChangelogReaderFactory =
-    new ChangelogReaderFactory(new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf()))
+  /** The session Hadoop conf (filesystem credentials, legacy-parquet
+    * flags, …) as a broadcast, built on the DRIVER: executor-side
+    * readers resolve the changelog exactly as the session would, and
+    * fetch the conf once per executor instead of deserializing it in
+    * every task. The caller destroys it. */
+  def broadcastSessionConf(): Broadcast[SerializableConfiguration] = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+  }
 }
 
-class ChangelogReaderFactory(conf: SerializableConfiguration)
+/** Opens every slice's reader on one broadcast Hadoop conf, so the
+  * factory in each task binary carries only the broadcast's handle. */
+class ChangelogReaderFactory(val conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case s: SidecarSlice => new SidecarReader(s, conf.value)
-      case s: ChangelogSlice => new ChangelogReader(s, conf.value)
+      case s: SidecarSlice => new SidecarReader(s, conf.value.value)
+      case s: ChangelogSlice => new ChangelogReader(s, conf.value.value)
     }
 }
 
@@ -371,6 +401,16 @@ object ChangelogFiles {
       .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .sortBy(_.toString)
   }
+
+  /** A record reader over one parquet file, opened on `conf` itself:
+    * parquet's path-taking builder builds and parses a default
+    * `Configuration` on every open before it takes `conf`. */
+  private[sources] def openRecords(file: Path, conf: Configuration,
+      readSupport: ReadSupport[ChangelogRecord],
+      filter: FilterCompat.Filter = FilterCompat.NOOP): ParquetReader[ChangelogRecord] =
+    new ParquetReader.Builder[ChangelogRecord](HadoopInputFile.fromPath(file, conf)) {
+      override protected def getReadSupport(): ReadSupport[ChangelogRecord] = readSupport
+    }.withFilter(filter).build()
 
   /** Max `event_id` of the changelog (-1 when empty) from its
     * column-chunk max statistics: footers only, no data pages and no
@@ -421,8 +461,10 @@ class ChangelogReader(slice: ChangelogSlice, hadoopConf: Configuration)
     * projection that preserves the file's exact physical
     * types/annotations.
     */
+  private lazy val files: Array[Path] = ChangelogFiles.list(slice.path, hadoopConf)
+
   private lazy val changelogSchema: Option[MessageType] =
-    ChangelogFiles.list(slice.path, hadoopConf).headOption.map { f =>
+    files.headOption.map { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, hadoopConf))
       try r.getFooter.getFileMetaData.getSchema finally r.close()
     }
@@ -450,6 +492,8 @@ class ChangelogReader(slice: ChangelogSlice, hadoopConf: Configuration)
       .getOrElse((raw: Long) => raw / 1000L)
   }
 
+  private var materialized = 0L
+
   private def mineKey(key: Long): Boolean =
     math.floorMod(key, slice.numPartitions.toLong) == slice.partId
 
@@ -462,19 +506,19 @@ class ChangelogReader(slice: ChangelogSlice, hadoopConf: Configuration)
       val projection = new MessageType("graft_changelog_projection",
         Seq("event_id", "user_id", "ts", "event_type", "value")
           .map(c => schema.getType(schema.getFieldIndex(c))): _*)
-      val reader = ParquetReader
-        .builder(new ChangelogRecordReadSupport(projection, tsRawToMicros), new Path(slice.path))
-        .withConf(hadoopConf)
-        .build()
-      try {
-        var r = reader.read()
-        while (r != null) {
-          ChangelogReadMetrics.recordsMaterialized.increment()
-          if (mineKey(r.key)) mine += CdcRow(r.seq, r.key, null, r.tsUs, r.eventType,
-            if (r.hasValue) java.lang.Double.valueOf(r.value) else null)
-          r = reader.read()
-        }
-      } finally reader.close()
+      val readSupport = new ChangelogRecordReadSupport(projection, tsRawToMicros)
+      files.foreach { f =>
+        val reader = ChangelogFiles.openRecords(f, hadoopConf, readSupport)
+        try {
+          var r = reader.read()
+          while (r != null) {
+            materialized += 1
+            if (mineKey(r.key)) mine += CdcRow(r.seq, r.key, null, r.tsUs, r.eventType,
+              if (r.hasValue) java.lang.Double.valueOf(r.value) else null)
+            r = reader.read()
+          }
+        } finally reader.close()
+      }
     }
     val data = mine.toArray
     mine.clear()
@@ -510,6 +554,8 @@ class ChangelogReader(slice: ChangelogSlice, hadoopConf: Configuration)
       if (r.eventType == null) null else UTF8String.fromString(r.eventType),
       r.value)
   }
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    RecordsMaterialized.task(materialized)
   override def close(): Unit = ()
 }
 

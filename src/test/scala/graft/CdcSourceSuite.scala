@@ -342,7 +342,6 @@ class CdcSourceSuite extends GraftSuite {
   }
 
   test("predicate pushdown: a narrow slice of a multi-row-group changelog materializes far less than the log") {
-    import graft.sources.ChangelogReadMetrics
     val sess = spark; import sess.implicits._
     val base = java.nio.file.Files.createTempDirectory("cdc_push").toString + "/log"
     val n = 40000
@@ -360,7 +359,6 @@ class CdcSourceSuite extends GraftSuite {
       java.nio.file.Files.createTempDirectory("cdc_push_sc").toString + "/log_n1",
       rowGroupRows = 1000)
     assert(sidecar.open(base, numPartitions = 1, deletes = false) == ((n - 1L, n - 1L)))
-    ChangelogReadMetrics.recordsMaterialized.reset()
     val rdr = new graft.sources.SidecarReader(
       graft.sources.SidecarSlice(sidecar.partFile(0), 30000L, 30500L), hconf)
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
@@ -368,7 +366,8 @@ class CdcSourceSuite extends GraftSuite {
     rdr.close()
     assert(got.map(_._1) == (30001L to 30500L) && got.forall(_._2 == "U"),
       "every key in the slice already appeared earlier -> all U")
-    val mat = ChangelogReadMetrics.recordsMaterialized.sum()
+    val mat = rdr.currentMetricsValues()
+      .find(_.name == graft.sources.RecordsMaterialized.Name).get.value
     assert(mat == 500, s"sidecar slice must materialize only its 500 rows, got $mat")
     val sideFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(sidecar.partFile(0)), hconf)
@@ -411,7 +410,21 @@ class CdcSourceSuite extends GraftSuite {
     val inserts = collected.filter(_._3 == "I")
     assert(inserts.length == firstSeqPerKey.size)
     assert(inserts.forall { case (k, s, _) => firstSeqPerKey(k) == s })
+    // the scan's records-materialized metric: a sidecar slice
+    // materializes exactly the batch's rows
+    val scans = lastScans(q)
+    assert(scans.size == 1)
+    val lastRows = q.recentProgress.filter(_.numInputRows > 0).last.numInputRows
+    assert(lastRows > 0 &&
+      scans.head.metrics(graft.sources.RecordsMaterialized.Name).value == lastRows)
   }
+
+  /** The CDC scan nodes of the last micro-batch a query executed. */
+  private def lastScans(q: org.apache.spark.sql.streaming.StreamingQuery) =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => s
+      }
 
   test("data horizon: event_id footer statistics, or one aggregate when a chunk has none") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -446,7 +459,7 @@ class CdcSourceSuite extends GraftSuite {
     * query dies with the batch planned but not committed. */
   private def replayInto(cp: String,
       rows: scala.collection.concurrent.TrieMap[Long, Set[(Long, Long, String)]],
-      failAt: Long = -1L): Unit = {
+      failAt: Long = -1L): org.apache.spark.sql.streaming.StreamingQuery = {
     val q = readCdc(batchSize = 150, snapshotSeq = 299)
       .writeStream.option("checkpointLocation", cp).trigger(Trigger.AvailableNow())
       .foreachBatch { (df: DataFrame, id: Long) =>
@@ -457,6 +470,7 @@ class CdcSourceSuite extends GraftSuite {
       }.start()
     try q.awaitTermination(120000)
     catch { case _: org.apache.spark.sql.streaming.StreamingQueryException if failAt >= 0 => }
+    q
   }
 
   private lazy val referenceOps: Set[(Long, Long, String)] =
@@ -517,6 +531,79 @@ class CdcSourceSuite extends GraftSuite {
       if (dropCrc) java.nio.file.Files.delete(marker.resolveSibling("._HORIZON.crc"))
       assert(sidecar.open(path, 4, deletes = true) == horizon)
       assert(java.nio.file.Files.readAllLines(marker) == lines, "the rebuild rewrites the marker")
+    }
+  }
+
+  test("the source reports its horizon and backlog in query progress, across a restart") {
+    import scala.jdk.CollectionConverters._
+    val cp = java.nio.file.Files.createTempDirectory("cdc_backlog").toString
+    val rows = scala.collection.concurrent.TrieMap.empty[Long, Set[(Long, Long, String)]]
+    def reported(q: org.apache.spark.sql.streaming.StreamingQuery) =
+      q.recentProgress.filter(_.numInputRows > 0).map { p =>
+        val m = p.sources(0).metrics.asScala
+        (m("horizonSeq").toLong, m("backlogSeqs").toLong)
+      }.toSeq
+    // the snapshot (seqs 0..299) commits, the first poll dies
+    assert(reported(replayInto(cp, rows, failAt = 1L)) == Seq((999L, 700L)))
+    // the restart replays the failed poll from the offset log, then
+    // drains the log 150 seqs a poll
+    assert(reported(replayInto(cp, rows)) ==
+      (550L to 0L by -150L).map(999L -> _) :+ (999L -> 0L))
+  }
+
+  test("a stream's reader factory carries no Hadoop conf: it ships by broadcast, once per stream") {
+    assert(spark.sparkContext.isLocal) // materialize the shared session first
+    val stream = new graft.sources.PgCdcSimMicroBatchStream(s"$sf0001/events.parquet",
+      batchSize = 200L, snapshotSeqOpt = 499L, numPartitions = 4, deletes = false,
+      checkpointLocation = java.nio.file.Files.createTempDirectory("cdc_ser").toString)
+    try {
+      val factory = stream.createReaderFactory()
+      // serialized the way a task binary carries it
+      val buf = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(buf)
+      out.writeObject(factory)
+      out.close()
+      val bytes = buf.toByteArray
+      assert(bytes.length < 4096, s"reader factory serializes to ${bytes.length} bytes")
+      val text = new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
+      assert(!text.contains("org.apache.hadoop.conf.Configuration"),
+        "the factory must carry the broadcast's handle, not the conf")
+      def confId(f: org.apache.spark.sql.connector.read.PartitionReaderFactory) =
+        f.asInstanceOf[graft.sources.ChangelogReaderFactory].conf.id
+      assert(confId(stream.createReaderFactory()) == confId(factory),
+        "every batch of a stream reads on the one broadcast")
+    } finally stream.stop()
+  }
+
+  test("a stream's conf broadcast is destroyed when the stream stops") {
+    import org.apache.spark.storage.BlockId
+    val bm = org.apache.spark.SparkEnv.get.blockManager
+    def broadcastBlocks() = bm.getMatchingBlockIds(_.isBroadcast).toSet
+    def blocksOf(id: Long) = broadcastBlocks().collect {
+      case b: org.apache.spark.storage.BroadcastBlockId if b.broadcastId == id => b: BlockId
+    }
+    val before = broadcastBlocks()
+    val q = readCdc(batchSize = 200, snapshotSeq = 499)
+      .writeStream.format("memory").queryName("cdc_bcast")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("cdc_bcast_cp").toString)
+      .outputMode("append").start()
+    val confId = try {
+      q.processAllAvailable()
+      assert(spark.table("cdc_bcast").count() == 1000)
+      val id = lastScans(q).head.readerFactory
+        .asInstanceOf[graft.sources.ChangelogReaderFactory].conf.id
+      assert(blocksOf(id).nonEmpty && !before.exists(blocksOf(id)),
+        "the stream's conf is a broadcast of its own, live while the stream runs")
+      id
+    } finally q.stop()
+    // destroy() removes the blocks asynchronously, but without a GC the
+    // ContextCleaner never can: the stopped query still holds the source
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    eventually(timeout(10.seconds)) {
+      val left = blocksOf(confId)
+      assert(left.isEmpty, s"conf broadcast blocks left after stop: $left")
     }
   }
 
