@@ -5,6 +5,7 @@ import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Publish
 
 /** Persisted IVF (inverted-file) ANN index — the build-once /
   * query-many / grow-incrementally lifecycle that the inline
@@ -42,13 +43,14 @@ import org.apache.spark.sql.functions._
   * version, so they can never mix two encodings.
   *
   * Centroids, codebooks AND the cells dir they pair with publish
-  * TOGETHER as one [[Versioned]] commit: ADC against a codebook from a
-  * different build than the codes is silently wrong, and a flat probe
-  * routed by new centroids into old cells misses its neighbors, so
-  * the trio flips atomically — including across a REBUILD, which
-  * writes a fresh `cells/v<N>` and never touches the previous
-  * version's files. Centroids ride in a UDF closure (k × dim doubles —
-  * broadcast-sized by construction at any corpus scale).
+  * TOGETHER as one `meta/v<N>` version of [[Publish]]: ADC
+  * against a codebook from a different build than the codes is
+  * silently wrong, and a flat probe routed by new centroids into old
+  * cells misses its neighbors, so the trio flips atomically —
+  * including across a REBUILD, which fills the fresh slot
+  * `cells/v<N>` and never touches the previous version's files.
+  * Centroids ride in a UDF closure (k × dim doubles — broadcast-sized
+  * by construction at any corpus scale).
   */
 object IvfIndex {
 
@@ -111,10 +113,10 @@ object IvfIndex {
     math.min(math.max(16, math.round(math.sqrt(n.toDouble))), 65536L).toInt
 
   private def loadMetaOpt(spark: SparkSession, indexDir: String): Option[Meta] =
-    Versioned.current(spark, metaPath(indexDir)).map(_ => loadMeta(spark, indexDir))
+    Publish.current(spark, metaPath(indexDir)).map(_ => loadMeta(spark, indexDir))
 
   private def loadMeta(spark: SparkSession, indexDir: String): Meta = {
-    val vdir = Versioned.current(spark, metaPath(indexDir)).getOrElse(
+    val vdir = Publish.current(spark, metaPath(indexDir)).getOrElse(
       throw new IllegalStateException(s"no committed IVF index under $indexDir"))
     val props = spark.read.parquet(s"$vdir/props").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -133,24 +135,29 @@ object IvfIndex {
     * REBUILD writes a fresh `cells/v<N>` and flips to it atomically
     * with the new centroids and codebooks: a crash mid-rebuild, or a
     * reader holding the previous meta, keeps pairing the OLD
-    * quantizer with the OLD cells. In-place mutations (`add`,
-    * `splitCell`) write inside the current version's cells dir and
-    * don't bump it.
+    * quantizer with the OLD cells. `cellsDir` gets the name of the
+    * meta slot (`v<N>`) and returns the cells dir the version routes
+    * to: a fresh `cells/v<N>` it has written, or the current one for
+    * in-place mutations (`add`, `splitCell`), which don't bump it.
+    * Returns that cells dir.
     */
   private def publishMeta(spark: SparkSession, indexDir: String,
       centers: Seq[(Int, Seq[Double])], encoding: Encoding,
-      books: Seq[(Int, Int, Seq[Double])], cellsDir: String): Unit = {
+      books: Seq[(Int, Int, Seq[Double])])(cellsDir: String => String): String = {
     val sess = spark
     import sess.implicits._
-    Versioned.publish(spark, metaPath(indexDir)) { vdir =>
+    var routed = ""
+    Publish.publish(spark, metaPath(indexDir)) { vdir =>
+      routed = cellsDir(new org.apache.hadoop.fs.Path(vdir).getName)
       centers.sortBy(_._1).toDF("cell", "center")
         .repartition(1).write.mode("overwrite").parquet(s"$vdir/centroids")
       if (encoding != Flat) books.toDF("subspace", "code", "center")
         .repartition(1).write.mode("overwrite").parquet(s"$vdir/codebooks")
-      (("cellsDir" -> cellsDir) +: encodingProps(encoding))
+      (("cellsDir" -> routed) +: encodingProps(encoding))
         .toDF("key", "value")
         .repartition(1).write.mode("overwrite").parquet(s"$vdir/props")
     }
+    routed
   }
 
   /** GC superseded cells versions: everything under `cells/` except
@@ -162,7 +169,7 @@ object IvfIndex {
     */
   private def gcCellVersions(spark: SparkSession, indexDir: String,
       keep: Set[String]): Unit = {
-    val fs = Versioned.fs(spark, s"$indexDir/cells")
+    val fs = Publish.fs(spark, s"$indexDir/cells")
     val root = new org.apache.hadoop.fs.Path(s"$indexDir/cells")
     if (!fs.exists(root)) return
     fs.listStatus(root).map(_.getPath)
@@ -179,7 +186,7 @@ object IvfIndex {
     */
   private def sweepOrphanCells(spark: SparkSession, cellsPath: String,
       meta: Meta): Unit = {
-    val fs = Versioned.fs(spark, cellsPath)
+    val fs = Publish.fs(spark, cellsPath)
     val root = new org.apache.hadoop.fs.Path(cellsPath)
     if (!fs.exists(root)) return
     val live = meta.live.toSet
@@ -277,36 +284,33 @@ object IvfIndex {
           coarse.transform(train).select(encoderInput(pq, centers).as("embedding")),
           pq.m, pq.kSub, dim / pq.m, seed)
     }
-    // cells land in a FRESH version-owned dir, then the meta commit
-    // flips quantizer, codebooks and cells dir together: a rebuild
-    // over an existing index never lets any reader (or a crash) pair
-    // new cells with the old quantizer. The previous version's cells
-    // are retained for in-flight readers, older ones GC'd — mirroring
-    // Versioned's retention.
-    val fs = Versioned.fs(spark, metaPath(indexDir))
+    // cells land in `cells/v<N>`, named after the meta version about to
+    // publish, so its commit flips quantizer, codebooks and cells
+    // together: no reader (or crash) pairs new cells with the old
+    // quantizer. The previous cells are retained for in-flight readers,
+    // as Publish does.
+    val fs = Publish.fs(spark, metaPath(indexDir))
     val prevCellsDir = loadMetaOpt(spark, indexDir).map(_.cellsDir)
-    val n = Versioned.committed(fs, metaPath(indexDir)).lastOption.getOrElse(0L) + 1
-    val cellsDir = s"cells/v$n"
-    val cellsAbs = s"$indexDir/$cellsDir"
-    val stale = new org.apache.hadoop.fs.Path(cellsAbs)
-    if (fs.exists(stale)) fs.delete(stale, true) // partial from a crashed attempt
-    cellRows(coarse.transform(feat), encoding, books, centers)
-      // one file per cell, not one per (writer task × cell): without
-      // this, W tasks × k cells lays down W·k small files — measured
-      // r18 at 2M/1414 cells: 45,135 files, and EVERY probe's scan
-      // paid a flat ~16 s of listing/open overhead that swamped the
-      // pruning win (BASELINE.md r18)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(cellsAbs)
-    // probe stats are keyed by cell id; a rebuild renumbers cells, so
-    // carried-over counts would misattribute — reset the log BEFORE the
-    // meta flip: a crash in between loses only advisory stats, whereas
-    // deleting after the publish leaves a window where old traffic is
-    // pinned on unrelated new cells
-    val statsP = new org.apache.hadoop.fs.Path(statsPath(indexDir))
-    if (fs.exists(statsP)) fs.delete(statsP, true)
-    publishMeta(spark, indexDir,
-      centers.toSeq.map { case (i, c) => (i, c.toSeq) }, encoding, books, cellsDir)
+    val cellsDir = publishMeta(spark, indexDir,
+        centers.toSeq.map { case (i, c) => (i, c.toSeq) }, encoding, books) { v =>
+      cellRows(coarse.transform(feat), encoding, books, centers)
+        // one file per cell, not one per (writer task × cell): without
+        // this, W tasks × k cells lays down W·k small files — measured
+        // r18 at 2M/1414 cells: 45,135 files, and EVERY probe's scan
+        // paid a flat ~16 s of listing/open overhead that swamped the
+        // pruning win (BASELINE.md r18). The overwrite clears a failed
+        // attempt's partial at this slot.
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells/$v")
+      // probe stats are keyed by cell id; a rebuild renumbers cells, so
+      // carried-over counts would misattribute — reset the log BEFORE the
+      // meta flip: a crash in between loses only advisory stats, whereas
+      // deleting after the publish leaves a window where old traffic is
+      // pinned on unrelated new cells
+      val statsP = new org.apache.hadoop.fs.Path(statsPath(indexDir))
+      if (fs.exists(statsP)) fs.delete(statsP, true)
+      s"cells/$v"
+    }
     gcCellVersions(spark, indexDir, Set(cellsDir) ++ prevCellsDir)
   }
 
@@ -383,8 +387,8 @@ object IvfIndex {
     publishMeta(spark, indexDir,
       meta.centers.filterNot(_._1 == cell).toSeq.map { case (i, c) => (i, c.toSeq) } ++
         freshCenters.map { case (i, c) => (i, c.toSeq) },
-      meta.encoding, meta.books, meta.cellsDir)
-    val fs = Versioned.fs(spark, cells)
+      meta.encoding, meta.books)(_ => meta.cellsDir)
+    val fs = Publish.fs(spark, cells)
     val old = new org.apache.hadoop.fs.Path(s"$cells/cell=$cell")
     if (fs.exists(old)) fs.delete(old, true)
     cellRowsDf.unpersist()
@@ -402,7 +406,7 @@ object IvfIndex {
   def compact(spark: SparkSession, indexDir: String): Long = {
     val meta = loadMeta(spark, indexDir)
     val cells = meta.cellsPath(indexDir)
-    val fs = Versioned.fs(spark, cells)
+    val fs = Publish.fs(spark, cells)
     val filesBefore = {
       def walk(p: org.apache.hadoop.fs.Path): Long =
         fs.listStatus(p).map { s =>
@@ -413,18 +417,14 @@ object IvfIndex {
         }.sum
       walk(new org.apache.hadoop.fs.Path(cells))
     }
-    val n = Versioned.committed(fs, metaPath(indexDir)).last + 1
-    val freshDir = s"cells/v$n"
-    val freshAbs = s"$indexDir/$freshDir"
-    val stale = new org.apache.hadoop.fs.Path(freshAbs)
-    if (fs.exists(stale)) fs.delete(stale, true) // crashed prior attempt
-    spark.read.parquet(cells)
-      .filter(col("cell").isin(meta.live: _*)) // orphans die with the old version
-      .repartition(meta.live.size, col("cell")) // one task -> one file per cell
-      .write.mode("overwrite").partitionBy("cell").parquet(freshAbs)
-    publishMeta(spark, indexDir,
-      meta.centers.toSeq.map { case (i, c) => (i, c.toSeq) },
-      meta.encoding, meta.books, freshDir)
+    val freshDir = publishMeta(spark, indexDir,
+        meta.centers.toSeq.map { case (i, c) => (i, c.toSeq) }, meta.encoding, meta.books) { v =>
+      spark.read.parquet(cells)
+        .filter(col("cell").isin(meta.live: _*)) // orphans die with the old version
+        .repartition(meta.live.size, col("cell")) // one task -> one file per cell
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells/$v")
+      s"cells/$v"
+    }
     gcCellVersions(spark, indexDir, Set(freshDir, meta.cellsDir))
     compactStats(spark, indexDir) // bound the probe-stats log too
     filesBefore
@@ -497,7 +497,7 @@ object IvfIndex {
     */
   def probeTrafficWeighted(spark: SparkSession, indexDir: String,
       halfLifeBatches: Option[Double]): Map[Int, Double] = {
-    val fs = Versioned.fs(spark, statsPath(indexDir))
+    val fs = Publish.fs(spark, statsPath(indexDir))
     if (!fs.exists(new org.apache.hadoop.fs.Path(statsPath(indexDir)))) return Map.empty
     val live = loadMeta(spark, indexDir).live.toSet
     val df = spark.read.parquet(statsPath(indexDir))
@@ -532,7 +532,7 @@ object IvfIndex {
   def compactStats(spark: SparkSession, indexDir: String,
       keepRecent: Int = 16): Unit = {
     val sp = statsPath(indexDir)
-    val fs = Versioned.fs(spark, sp)
+    val fs = Publish.fs(spark, sp)
     if (!fs.exists(new org.apache.hadoop.fs.Path(sp))) return
     val ids = fs.listStatus(new org.apache.hadoop.fs.Path(sp))
       .filter(_.isDirectory).map(_.getPath.getName)

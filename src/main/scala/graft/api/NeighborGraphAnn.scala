@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Publish
 
 /** Graph-family ANN (the HNSW/NSG regime — VERDICT r12 "What's
   * missing #5"), re-expressed as Spark relational algebra instead of
@@ -387,24 +388,24 @@ object NeighborGraphAnn {
 
   /** Persisted lifecycle (VERDICT r13 "missing #2" / next-round #4),
     * mirroring [[IvfIndex]]'s: the index is exactly two tables —
-    * edges (id, nbr, cos_sim) and vectors (id, vec) — written under
-    * one [[Versioned]] commit, so a probe can never pair edges with
-    * vectors from a DIFFERENT build (the same atomicity argument as
-    * codes-vs-codebooks there). A re-[[save]] publishes `v<N+1>`
-    * without touching the live version; [[load]] reads the highest
-    * committed version lazily, so [[topKLoaded]] probes pay parquet
+    * edges (id, nbr, cos_sim) and vectors (id, vec), plus the format
+    * stamp — published as one [[Publish]] version, so a probe can
+    * never pair edges with vectors from a DIFFERENT build (the same
+    * atomicity argument as codes-vs-codebooks there), and a failed
+    * re-[[save]] leaves the previous version live. [[load]] reads the
+    * current version lazily, so [[topKLoaded]] probes pay parquet
     * scans of the two tables and the beam-search joins — never a
     * build. Search latency is thereby measurable separately from
     * build cost (recorded in SCALE_PROBE_r17_gann2m.json and
     * GANN_ENTRY_SWEEP_r17.json). */
   def save(spark: SparkSession, indexDir: String, graph: DataFrame,
       e: DataFrame, idCol: String, vecCol: String): String =
-    Versioned.publish(spark, indexDir) { vdir =>
+    Publish.publish(spark, indexDir) { vdir =>
       graph.write.parquet(s"$vdir/edges")
       e.select(col(idCol).as("id"), col(vecCol).as("vec"))
         .write.parquet(s"$vdir/vectors")
-      val out = Versioned.fs(spark, indexDir).create(new Path(vdir, FormatFile), true)
-      try out.write(s"$FORMAT_VERSION".getBytes("UTF-8")) finally out.close()
+      Publish.commitFile(Publish.fs(spark, vdir), new Path(vdir, FormatFile),
+        FORMAT_VERSION.toString)
     }
 
   /** Algorithm/format version stamped into every committed index
@@ -419,39 +420,22 @@ object NeighborGraphAnn {
   private val FormatFile = "_graft_gann_format"
 
   /** Stamped format of `vdir`, None when unstamped (pre-r16b). */
-  private def stampedFormat(spark: SparkSession, vdir: String): Option[Int] = {
-    val f = Versioned.fs(spark, vdir)
-    val p = new Path(vdir, FormatFile)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        // read to EOF (or buffer full): a single read() may legally
-        // return fewer bytes than available on some Hadoop
-        // filesystems, and a truncated stamp would misread a valid
-        // index as stale and trigger a spurious rebuild (ADVICE r17)
-        val buf = new Array[Byte](32)
-        var off = 0
-        var n = 0
-        while (off < buf.length &&
-          { n = in.read(buf, off, buf.length - off); n > 0 }) off += n
-        new String(buf, 0, off, "UTF-8").trim.toIntOption
-      } finally in.close()
-    }
-  }
+  private def stampedFormat(spark: SparkSession, vdir: String): Option[Int] =
+    Publish.readFile(Publish.fs(spark, vdir), new Path(vdir, FormatFile))
+      .flatMap(_.trim.toIntOption)
 
   /** True when `indexDir` holds a committed index version AT THE
     * CURRENT format. A stale-format index reads as absent, so a caller
     * that checks first rebuilds instead of tripping [[load]]'s guard. */
   def hasIndex(spark: SparkSession, indexDir: String): Boolean =
-    Versioned.current(spark, indexDir)
+    Publish.current(spark, indexDir)
       .exists(vdir => stampedFormat(spark, vdir).contains(FORMAT_VERSION))
 
   /** (edge table, vectors) of the current committed version. Refuses
     * an unstamped or other-format index: its overlay was derived by a
     * different hub algorithm than this code's [[insert]] would use. */
   def load(spark: SparkSession, indexDir: String): (DataFrame, DataFrame) = {
-    val vdir = Versioned.current(spark, indexDir).getOrElse(throw
+    val vdir = Publish.current(spark, indexDir).getOrElse(throw
       new IllegalStateException(s"no committed neighbor-graph index under $indexDir"))
     val fmt = stampedFormat(spark, vdir)
     if (!fmt.contains(FORMAT_VERSION)) throw new IllegalStateException(

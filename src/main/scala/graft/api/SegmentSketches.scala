@@ -4,6 +4,7 @@ import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{CompactSketch, SetOperation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Publish
 
 /** Persisted per-segment distinct sketches + rescan-free overlap
   * algebra — the operational form of the theta row (#126): ONE linear
@@ -15,13 +16,15 @@ import org.apache.spark.sql.functions._
   * source A and source B overlap in users/URLs/doc hashes" in
   * milliseconds instead of a shuffle.
   *
-  * Layout: one parquet table of (segment, sketch bytes, n_rows) at
-  * `dir` — segment-count-sized (thousands at most), trivially
-  * readable anywhere. [[refresh]] unions NEW data's sketches into the
-  * stored ones (theta unions are associative and idempotent-friendly:
-  * re-adding the same keys never inflates the estimate), which is the
-  * incremental-maintenance property plain `COUNT(DISTINCT)` tables do
-  * not have.
+  * Layout: one parquet table of (segment, sketch bytes, n_rows) per
+  * [[Publish]] version `dir/v<N>` — segment-count-sized (thousands at
+  * most), trivially readable anywhere. [[build]] and [[refresh]] each
+  * publish a fresh version; readers load the current one, so a failed
+  * write leaves the previous sketches live. [[refresh]] unions NEW
+  * data's sketches into the stored ones (theta unions are associative
+  * and idempotent-friendly: re-adding the same keys never inflates the
+  * estimate), which is the incremental-maintenance property plain
+  * `COUNT(DISTINCT)` tables do not have.
   */
 object SegmentSketches {
 
@@ -29,34 +32,32 @@ object SegmentSketches {
     CompactSketch.heapify(Memory.wrap(b))
 
   /** One linear pass: per-segment theta sketch of `keyCol` (+ exact
-    * row count), written to `dir`. */
+    * row count), published as a fresh version under `dir`. */
   def build(spark: SparkSession, df: DataFrame, segmentCol: String,
       keyCol: String, dir: String,
       nominalEntries: Int = graft.functions.ThetaSketch.DEFAULT_NOMINAL): Unit = {
     graft.functions.ThetaSketch.register(spark)
     df.createOrReplaceTempView("segment_sketch_in")
-    spark.sql(
+    publish(spark, dir, spark.sql(
       s"""SELECT $segmentCol AS segment,
          |       theta_sketch_agg($keyCol, $nominalEntries) AS sketch,
          |       COUNT(*) AS n_rows
-         |FROM segment_sketch_in GROUP BY $segmentCol""".stripMargin)
-      .repartition(1)
-      .write.mode("overwrite").parquet(dir)
+         |FROM segment_sketch_in GROUP BY $segmentCol""".stripMargin))
   }
 
   /** Union new data into the stored sketches (incremental refresh —
     * segments absent so far appear, existing ones grow; re-ingesting
-    * already-seen keys is harmless by construction). */
+    * already-seen keys is harmless by construction). One write job
+    * publishes the union as the next version; the current one is only
+    * read. */
   def refresh(spark: SparkSession, newData: DataFrame, segmentCol: String,
       keyCol: String, dir: String,
       nominalEntries: Int = graft.functions.ThetaSketch.DEFAULT_NOMINAL): Unit = {
     graft.functions.ThetaSketch.register(spark)
-    val tmp = dir + ".tmp"
     newData.createOrReplaceTempView("segment_sketch_new")
-    val old = spark.read.parquet(dir)
-      .select(col("segment"), col("sketch"), col("n_rows"))
-    old.createOrReplaceTempView("segment_sketch_old")
-    spark.sql(
+    stored(spark, dir).select(col("segment"), col("sketch"), col("n_rows"))
+      .createOrReplaceTempView("segment_sketch_old")
+    publish(spark, dir, spark.sql(
       s"""SELECT segment, theta_union_agg(sketch) AS sketch,
          |       CAST(SUM(n_rows) AS BIGINT) AS n_rows
          |FROM (
@@ -66,19 +67,21 @@ object SegmentSketches {
          |         theta_sketch_agg($keyCol, $nominalEntries) AS sketch,
          |         COUNT(*) AS n_rows
          |  FROM segment_sketch_new GROUP BY $segmentCol)
-         |GROUP BY segment""".stripMargin)
-      .repartition(1)
-      .write.mode("overwrite").parquet(tmp)
-    // overwrite target from tmp (small files; same-FS rename-free
-    // copy — the target cannot be read and overwritten in one job)
-    spark.read.parquet(tmp).repartition(1)
-      .write.mode("overwrite").parquet(dir)
-    Versioned.fs(spark, tmp).delete(new org.apache.hadoop.fs.Path(tmp), true)
+         |GROUP BY segment""".stripMargin))
   }
+
+  private def publish(spark: SparkSession, dir: String, sketches: DataFrame): Unit =
+    Publish.publish(spark, dir)(sketches.repartition(1).write.parquet(_))
+
+  /** The current version's table. */
+  private def stored(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(Publish.current(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed segment sketches under $dir")))
 
   /** Continuous maintenance: keep the stored sketches current from a
     * STREAMING frame — each micro-batch unions its per-segment
-    * sketches into the table ([[build]] bootstraps an absent table).
+    * sketches into the table ([[build]] bootstraps when no version is
+    * committed).
     * At-least-once delivery needs NO dedup here: a replayed batch
     * re-unions keys the table already holds, and theta union of
     * already-seen keys cannot move the estimate — the sketch is
@@ -97,16 +100,15 @@ object SegmentSketches {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val exists = Versioned.fs(spark, dir)
-          .exists(new org.apache.hadoop.fs.Path(dir))
-        if (exists) refresh(spark, batch, segmentCol, keyCol, dir, nominalEntries)
+        if (Publish.current(spark, dir).isDefined)
+          refresh(spark, batch, segmentCol, keyCol, dir, nominalEntries)
         else build(spark, batch, segmentCol, keyCol, dir, nominalEntries)
       }.start()
 
   /** The stored sketches, heapified driver-side: segment →
     * (sketch, exact ingested row count). Segment-count-sized. */
   def load(spark: SparkSession, dir: String): Map[String, (CompactSketch, Long)] =
-    spark.read.parquet(dir).collect()
+    stored(spark, dir).collect()
       .map(r => r.getAs[String]("segment") ->
         (heapify(r.getAs[Array[Byte]]("sketch")), r.getAs[Long]("n_rows")))
       .toMap

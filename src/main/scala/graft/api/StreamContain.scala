@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import graft.util.Publish
 
 /** Streaming containment dedup — the batch `q_dedup_containment`
   * scorer (PPJoin prefix filter, exact recount,
@@ -203,19 +204,14 @@ object StreamContain {
     val conf = spark.sparkContext.hadoopConfiguration
     val marker = new org.apache.hadoop.fs.Path(s"$stateDir/_threshold")
     val fs = marker.getFileSystem(conf)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val stored = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim.toDouble
-        finally in.close()
-      if (stored != threshold) throw new IllegalStateException(
+    Publish.readFile(fs, marker).map(_.trim.toDouble) match {
+      case None => Publish.commitFile(fs, marker, threshold.toString)
+      case Some(stored) if stored != threshold => throw new IllegalStateException(
         s"StreamContain state at $stateDir was built at threshold $stored; " +
           s"restarting at $threshold would silently lose recall for pairs " +
           "below the stored threshold (frozen prefixes are too short). " +
           "Use a fresh stateDir (and checkpoint) to change the threshold.")
-    } else {
-      val out = fs.create(marker, true)
-      try out.write(threshold.toString.getBytes("UTF-8")) finally out.close()
+      case _ =>
     }
   }
 

@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.util.Publish
 
 /** Streaming decontamination — gate a (doc_id, text) doc stream
   * against a benchmark/eval set CONTINUOUSLY, on ingest, instead of
@@ -216,8 +217,10 @@ object StreamDecon {
     * `_decon_epoch` marker (so replayed batches keep their exact
     * order values — idempotent); a FRESH checkpoint (no committed
     * offsets) re-bases at stored-max-order + 1 across the tables and
-    * rewrites the markers. Tables created before this scheme have no
-    * marker: resuming defaults to base 0, the historical behavior.
+    * publishes it as each marker's next [[Publish]] version (a file
+    * `base` in `_decon_epoch/v<N>`), so no marker is ever rewritten in
+    * place. Tables created before this scheme have no marker: resuming
+    * defaults to base 0, the historical behavior.
     */
   private[graft] def resolveEpochBase(spark: SparkSession,
       tables: Seq[String], checkpointDir: String): Long = {
@@ -229,18 +232,12 @@ object StreamDecon {
       val cfs = fsOf(checkpointDir)
       cfs.exists(offsets) && cfs.listStatus(offsets).nonEmpty
     }
-    def markerPath(t: String) = new org.apache.hadoop.fs.Path(s"$t/_decon_epoch")
-    def readMarker(t: String): Option[Long] = {
-      val fs = fsOf(t)
-      if (!fs.exists(markerPath(t))) None
-      else {
-        val in = fs.open(markerPath(t))
-        try Some(new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim.toLong)
-        finally in.close()
-      }
-    }
-    if (resuming) tables.flatMap(readMarker).maxOption.getOrElse(0L)
+    def markerDir(t: String) = s"$t/_decon_epoch"
+    def basePath(vdir: String) = new org.apache.hadoop.fs.Path(s"$vdir/base")
+    if (resuming)
+      tables.flatMap(t => Publish.current(spark, markerDir(t)).flatMap(v =>
+        Publish.readFile(fsOf(t), basePath(v)).map(_.trim.toLong)))
+        .maxOption.getOrElse(0L)
     else {
       // fresh lineage: out-rank everything stored in ANY of the tables
       val maxStored = tables.flatMap { t =>
@@ -250,12 +247,8 @@ object StreamDecon {
         catch { case _: Exception => None } // table not created yet
       }.maxOption
       val base = maxStored.map(_ + 1L).getOrElse(0L)
-      tables.foreach { t =>
-        val fs = fsOf(t)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(t))
-        val out = fs.create(markerPath(t), true)
-        try out.write(base.toString.getBytes("UTF-8")) finally out.close()
-      }
+      tables.foreach(t => Publish.publish(spark, markerDir(t))(v =>
+        Publish.commitFile(fsOf(t), basePath(v), base.toString)))
       base
     }
   }

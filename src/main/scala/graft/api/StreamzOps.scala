@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.util.Publish
 
 /** Operator-vocabulary facade: the reference's streamz operator names
   * (SURVEY.md §2A — public upstream API) expressed over DataFrames,
@@ -271,14 +272,15 @@ object StreamzOps {
       *     compaction, and sink commits made before commits shared
       *     one dir, map a bucket to its own `data/m<J>/_bp=<K>` dir,
       *     read the same way; a manifest without `schema` falls back
-      *     to inferring it) — via write-to-temp-name + rename-to-fresh-name,
-      *     which is atomic on HDFS and local FS. Readers resolve the
+      *     to inferring it) — as one [[Publish]] file commit of a
+      *     fresh name. Readers resolve the
       *     HIGHEST committed manifest, so a crash anywhere before the
-      *     rename leaves the previous snapshot fully intact and merely
+      *     commit leaves the previous snapshot fully intact and merely
       *     orphans in-progress data files (overwritten on replay,
       *     since the retried batch recomputes the same manifest
       *     number). GC of superseded data/manifests runs only AFTER
-      *     the new manifest is durable. This is the same
+      *     the new manifest is durable, from the manifest listing the
+      *     commit started with. This is the same
       *     snapshot-isolation design as Iceberg/Delta commits, sized
       *     down; on a real lakehouse the whole body is one atomic
       *     MERGE INTO ... WHEN MATCHED AND op = 'D' THEN DELETE.
@@ -510,7 +512,7 @@ object StreamzOps {
   /** Shared commit path of the bucketed snapshot-manifest sinks: add
     * the key-hash bucket column, read the prior state of the dirty
     * buckets, apply the sink-specific `merge` to (prior ∪ batch), and
-    * publish atomically (one fresh data dir → manifest rename → GC).
+    * publish atomically (one fresh data dir → manifest commit → GC).
     * `batchRows` is evaluated exactly once per call.
     * See [[StreamzDataFrame.sinkUpsert]] for the format's invariants.
     */
@@ -536,7 +538,8 @@ object StreamzOps {
         .mapPartitions(rows => Iterator(rows.map(_.getInt(0)).toSet))
         .collect().foldLeft(Set.empty[Int])(_ ++ _)
       if (dirty.nonEmpty) {
-        val cur = currentManifest(fs, tablePath)
+        val committed = committedManifests(fs, tablePath)
+        val cur = currentManifest(fs, tablePath, committed)
         cur.foreach(m => require(m.numBuckets == numBuckets,
           s"table was created with numBuckets=${m.numBuckets}, called with $numBuckets"))
         val priorEntries = cur.fold(Map.empty[Int, String])(_.entries.filter(e => dirty(e._1)))
@@ -562,7 +565,7 @@ object StreamzOps {
         failpoint("pre-commit", batchId)
         commitManifest(fs, tablePath, n, numBuckets, toStore.schema, entries)
         failpoint("post-commit", batchId)
-        gcSuperseded(fs, tablePath, n, retainManifests)
+        gcSuperseded(fs, tablePath, n, entries, committed, retainManifests)
       }
     } finally bucketed.unpersist()
   }
@@ -576,9 +579,9 @@ object StreamzOps {
     * rows of buckets later commits rewrote until no bucket maps to it,
     * and compaction moves every bucket out (the per-dir bucket filter
     * of [[StreamzDataFrame.sinkUpsert]] keeps those rows out of the
-    * rewrite). Runs through the same atomic manifest rename as the
+    * rewrite). Runs through the same atomic manifest commit as the
     * sinks, so it is safe against crashes and concurrent readers (who
-    * keep resolving the previous committed snapshot until the rename
+    * keep resolving the previous committed snapshot until the commit
     * lands); run it from the single writer between batches, like any
     * table OPTIMIZE. Returns the number of data files the snapshot
     * referenced before compaction (a dir shared by several buckets
@@ -600,7 +603,8 @@ object StreamzOps {
       zorderBy: Seq[String] = Nil, zorderBits: Int = 8): Long = {
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = currentManifest(fs, tablePath).getOrElse(
+    val committed = committedManifests(fs, tablePath)
+    val m = currentManifest(fs, tablePath, committed).getOrElse(
       throw new IllegalStateException(s"no committed manifest under $tablePath"))
     if (m.entries.isEmpty) return 0L // fully-tombstoned table: nothing to rewrite
     val filesBefore =
@@ -629,9 +633,9 @@ object StreamzOps {
     val written = fs.listStatus(new org.apache.hadoop.fs.Path(s"$tablePath/$dataRel"))
       .filter(_.isDirectory).map(_.getPath.getName)
       .collect { case s if s.startsWith("_bp=") => s.stripPrefix("_bp=").toInt }
-    commitManifest(fs, tablePath, next, m.numBuckets, raw.schema,
-      written.sorted.map(b => b -> s"$dataRel/_bp=$b").toSeq)
-    gcSuperseded(fs, tablePath, next, retainManifests)
+    val entries = written.sorted.map(b => b -> s"$dataRel/_bp=$b").toSeq
+    commitManifest(fs, tablePath, next, m.numBuckets, raw.schema, entries)
+    gcSuperseded(fs, tablePath, next, entries, committed, retainManifests)
     filesBefore
   }
 
@@ -660,8 +664,9 @@ object StreamzOps {
     require(maxFilesPerBucket >= 1, s"maxFilesPerBucket must be >= 1")
     val fs = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = currentManifest(fs, tablePath).map(_.entries).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $tablePath"))
+    val entries = currentManifest(fs, tablePath, committedManifests(fs, tablePath))
+      .map(_.entries)
+      .getOrElse(throw new IllegalStateException(s"no committed manifest under $tablePath"))
     val fragmented = entries.values.toSeq.distinct
       .exists(d => dataFileCount(fs, s"$tablePath/$d") > maxFilesPerBucket)
     if (fragmented) compactTable(spark, tablePath, retainManifests, zorderBy, zorderBits)
@@ -700,7 +705,7 @@ object StreamzOps {
     * available when the sink runs with `retainManifests > 0`) and read
     * the buckets it maps ([[readBuckets]]). Always sees a complete,
     * committed snapshot — never a half-published batch: an in-progress
-    * commit is invisible until its manifest rename lands.
+    * commit is invisible until its manifest commit lands.
     */
   def readUpsertTable(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, snapshot: Option[Long] = None): DataFrame = {
@@ -708,7 +713,7 @@ object StreamzOps {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val resolved = snapshot match {
       case Some(n) => readManifest(fs, tablePath, n)
-      case None => currentManifest(fs, tablePath)
+      case None => currentManifest(fs, tablePath, committedManifests(fs, tablePath))
     }
     resolved match {
       case Some(m) if m.entries.nonEmpty =>
@@ -751,84 +756,66 @@ object StreamzOps {
   private def committedManifests(fs: org.apache.hadoop.fs.FileSystem,
       tablePath: String): Seq[Long] = {
     val dir = new org.apache.hadoop.fs.Path(s"$tablePath/manifest")
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).map(_.getPath.getName)
+    val listed = try fs.listStatus(dir)
+      catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+    listed.map(_.getPath.getName)
       .collect { case s if s.matches("m\\d+") => s.stripPrefix("m").toLong }
       .sorted.toSeq
   }
 
-  /** Parse committed manifest n: `key=value` header lines (unknown keys
-    * are skipped, so later writers may add facts) and
-    * `bucket<TAB>dir` entry lines. */
+  /** Parse committed manifest n, None when it is missing:
+    * `key=value` header lines (unknown keys are skipped, so later
+    * writers may add facts) and `bucket<TAB>dir` entry lines. */
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String, n: Long): Option[Manifest] = {
-    val p = new org.apache.hadoop.fs.Path(s"$tablePath/manifest/m$n")
-    if (!fs.exists(p)) return None
-    val lines = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    }
-    val Entry = "(\\d+)\t(.*)".r
-    val entries = lines.collect { case Entry(b, d) => b.toInt -> d }.toMap
-    val header = lines.filterNot(Entry.matches).filter(_.contains('='))
-      .map(l => l.takeWhile(_ != '=') -> l.dropWhile(_ != '=').tail).toMap
-    Some(Manifest(n, header("numBuckets").toInt, entries,
-      header.get("schema").map(DataType.fromJson(_).asInstanceOf[StructType])))
-  }
+      tablePath: String, n: Long): Option[Manifest] =
+    Publish.readFile(fs, new org.apache.hadoop.fs.Path(s"$tablePath/manifest/m$n"))
+      .map { text =>
+        val lines = text.linesIterator.toVector
+        val Entry = "(\\d+)\t(.*)".r
+        val entries = lines.collect { case Entry(b, d) => b.toInt -> d }.toMap
+        val header = lines.filterNot(Entry.matches).filter(_.contains('='))
+          .map(l => l.takeWhile(_ != '=') -> l.dropWhile(_ != '=').tail).toMap
+        Manifest(n, header("numBuckets").toInt, entries,
+          header.get("schema").map(DataType.fromJson(_).asInstanceOf[StructType]))
+      }
 
-  /** Highest committed manifest. */
+  /** The highest of the `committed` manifests. */
   private def currentManifest(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String): Option[Manifest] =
-    committedManifests(fs, tablePath).lastOption.flatMap(readManifest(fs, tablePath, _))
+      tablePath: String, committed: Seq[Long]): Option[Manifest] =
+    committed.lastOption.flatMap(readManifest(fs, tablePath, _))
 
-  /** Atomic publish: write to a dot-temp name, rename to the fresh
-    * final name (atomic on HDFS/local — the destination never exists,
-    * so there is no delete→rename hole).
-    */
+  /** Publish manifest n, a fresh name, as one [[Publish]]
+    * file commit. */
   private def commitManifest(fs: org.apache.hadoop.fs.FileSystem,
       tablePath: String, n: Long, numBuckets: Int, schema: StructType,
-      entries: Seq[(Int, String)]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$tablePath/manifest/.m$n.inprogress")
-    val out = fs.create(tmp, true)
-    try out.write((s"numBuckets=$numBuckets\nschema=${schema.json}\n" +
-      entries.map { case (b, d) => s"$b\t$d" }.mkString("\n"))
-      .getBytes("UTF-8"))
-    finally out.close()
-    val fin = new org.apache.hadoop.fs.Path(s"$tablePath/manifest/m$n")
-    if (!fs.rename(tmp, fin))
-      throw new java.io.IOException(s"manifest commit rename failed: $fin")
-  }
+      entries: Seq[(Int, String)]): Unit =
+    Publish.commitFile(fs, new org.apache.hadoop.fs.Path(s"$tablePath/manifest/m$n"),
+      s"numBuckets=$numBuckets\nschema=${schema.json}\n" +
+        entries.map { case (b, d) => s"$b\t$d" }.mkString("\n"))
 
   /** Post-commit GC with a retention window: keep the newest
-    * `retain + 1` committed manifests (the fresh commit n plus
-    * `retain` superseded snapshots) and every data/m<J> dir ANY
-    * retained manifest references; drop the rest. Runs strictly after
-    * the new manifest is durable, so a crash mid-GC only leaves
-    * garbage, never breaks a committed snapshot — and with
-    * retain > 0, a reader that resolved the previous manifest just
-    * before this commit still reads a complete snapshot.
+    * `retain + 1` committed manifests (the fresh commit n, with its
+    * `entries`, plus `retain` of the `prior` ones the single writer's
+    * commit started from) and every data/m<J> dir ANY retained manifest
+    * references; drop the rest. Runs strictly after the new manifest is
+    * durable, so a crash mid-GC only leaves garbage (the next GC drops
+    * it), never breaks a committed snapshot — and with retain > 0, a
+    * reader that resolved the previous manifest just before this commit
+    * still reads a complete snapshot.
     */
   private def gcSuperseded(fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String, n: Long, retain: Int): Unit = {
+      tablePath: String, n: Long, entries: Seq[(Int, String)],
+      prior: Seq[Long], retain: Int): Unit = {
     val keepMin = n - retain
-    val live = committedManifests(fs, tablePath)
-      .filter(_ >= keepMin)
-      .flatMap(j => readManifest(fs, tablePath, j).toSeq)
-      .flatMap(_.entries.values)
+    val live = (entries.map(_._2) ++ prior.filter(_ >= keepMin)
+        .flatMap(j => readManifest(fs, tablePath, j).toSeq.flatMap(_.entries.values)))
       .map(_.split("/")(1)).toSet // data/mJ or data/mJ/_bp=K -> mJ
-    val dataDir = new org.apache.hadoop.fs.Path(s"$tablePath/data")
-    if (fs.exists(dataDir))
-      fs.listStatus(dataDir).map(_.getPath).foreach { p =>
-        if (p.getName.matches("m\\d+") && !live(p.getName))
-          fs.delete(p, true)
+    // the commit's own data dir exists, so data/ does
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$tablePath/data")).map(_.getPath)
+      .foreach { p =>
+        if (p.getName.matches("m\\d+") && !live(p.getName)) fs.delete(p, true)
       }
-    val manDir = new org.apache.hadoop.fs.Path(s"$tablePath/manifest")
-    fs.listStatus(manDir).map(_.getPath).foreach { p =>
-      val nm = p.getName
-      if ((nm.matches("m\\d+") && nm.stripPrefix("m").toLong < keepMin) ||
-          nm.endsWith(".inprogress"))
-        fs.delete(p, false)
-    }
+    prior.filter(_ < keepMin).foreach(j =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/manifest/m$j"), false))
   }
 }

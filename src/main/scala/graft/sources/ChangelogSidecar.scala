@@ -17,6 +17,7 @@ import org.apache.spark.sql.connector.metric.CustomTaskMetric
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+import graft.util.Publish
 
 /** A stream's derived changelog, written once under its checkpoint:
   * one parquet file per key-hash partition (`part=<id>.parquet`),
@@ -39,12 +40,12 @@ import org.apache.spark.util.SerializableConfiguration
   * ([[ChangelogFiles.dataHorizon]]) and the overall horizon from the
   * seqs the tasks return, so the build is the only job.
   *
-  * `_HORIZON` is written last, through a rename, and records both
-  * horizons plus the changelog path and `deletes` flag the files were
-  * built for; a directory without a complete, matching marker is
-  * rebuilt, and one with it is reused as is. Reuse assumes the
-  * changelog is immutable for the life of a checkpoint, as a replay
-  * fixture is.
+  * `_HORIZON` is written last, as one [[Publish]] file commit, and
+  * records both horizons plus the changelog path and `deletes` flag
+  * the files were built for; a directory without a readable, matching
+  * marker is rebuilt, and one with it is reused as is. Reuse assumes
+  * the changelog is immutable for the life of a checkpoint, as a
+  * replay fixture is.
   */
 final case class ChangelogSidecar(dir: String, rowGroupRows: Int) {
   import ChangelogSidecar._
@@ -61,13 +62,9 @@ final case class ChangelogSidecar(dir: String, rowGroupRows: Int) {
     val identity = Map("path" -> path, "deletes" -> deletes.toString)
     // a marker that cannot be read (e.g. a checksum mismatch) is absent
     val recorded: Map[String, String] =
-      if (!fs.exists(marker)) Map.empty
-      else scala.util.Try {
-        val in = fs.open(marker)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
-        finally in.close()
-      }.getOrElse(Map.empty)
+      scala.util.Try(Publish.readFile(fs, marker)).toOption.flatten
+        .fold(Map.empty[String, String])(_.linesIterator.map(_.split("=", 2))
+          .collect { case Array(k, v) => k -> v }.toMap)
     val reused = for {
       maxDataSeq <- recorded.get("maxDataSeq").flatMap(_.toLongOption)
       maxAll <- recorded.get("maxAll").flatMap(_.toLongOption)
@@ -87,13 +84,9 @@ final case class ChangelogSidecar(dir: String, rowGroupRows: Int) {
           .collect()
         finally hconf.destroy()
       val maxAll = (maxDataSeq +: lastSeqs).max
-      val tmp = new Path(s"$dir/.$Marker.tmp")
-      val out = fs.create(tmp, true)
-      try out.write((identity ++ Map("maxDataSeq" -> maxDataSeq.toString,
-          "maxAll" -> maxAll.toString))
-        .map { case (k, v) => s"$k=$v\n" }.mkString.getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, marker), s"could not publish the sidecar marker $marker")
+      Publish.commitFile(fs, marker,
+        (identity ++ Map("maxDataSeq" -> maxDataSeq.toString, "maxAll" -> maxAll.toString))
+          .map { case (k, v) => s"$k=$v\n" }.mkString)
       (maxDataSeq, maxAll)
     }
   }

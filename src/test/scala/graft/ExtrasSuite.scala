@@ -1259,6 +1259,79 @@ class ExtrasSuite extends GraftSuite {
     }
   }
 
+  test("SegmentSketches.refresh: cancelling any one of its jobs keeps the previous sketches, and the next sinkRefresh batch unions into them") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.api.SegmentSketches
+    val sess = spark; import sess.implicits._
+    implicit val sqlCtx = sess.sqlContext
+    val sc = spark.sparkContext
+    val base = java.nio.file.Files.createTempDirectory("seg_crash").toString
+    val dir = s"$base/t"; val cp = s"$base/cp"
+    // every segment stays below the sketches' nominal entries, so each
+    // estimate is the exact distinct count and states compare exactly
+    def rows(seg: String, from: Long, n: Int) = Seq.tabulate(n)(i => (seg, from + i))
+    def state(): Map[String, (Double, Long)] = SegmentSketches.load(spark, dir)
+      .map { case (s, (sk, n)) => s -> (sk.getEstimate, n) }
+    SegmentSketches.build(spark, rows("s0", 0L, 2000).toDF("seg", "k"), "seg", "k", dir)
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
+    val refreshGroup = "seg-sketch-refresh"
+    val syncGroup = "seg-sketch-sync"
+    val cancelAt = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val synced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`refreshGroup`) =>
+            if (started.incrementAndGet() == cancelAt.get) sc.cancelJob(e.jobId)
+          case Some(`syncGroup`) => synced.set(true)
+          case _ =>
+        }
+    }
+    // the listener bus is FIFO: once the sync job's start arrives,
+    // every job refresh started has been delivered too
+    def drainListener(): Unit = {
+      synced.set(false)
+      sc.setJobGroup(syncGroup, "listener sync")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!synced.get && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(synced.get, "the listener bus never delivered the sync job")
+    }
+    sc.addSparkListener(listener)
+    var cancelled = 0
+    try {
+      var k = 1
+      var more = true
+      while (more) {
+        val before = state()
+        started.set(0); cancelAt.set(k)
+        sc.setJobGroup(refreshGroup, s"refresh, cancel job $k")
+        val outcome = try scala.util.Try(SegmentSketches.refresh(spark,
+            rows(s"r$k", 10000L * k, 300).toDF("seg", "k"), "seg", "k", dir))
+          finally sc.clearJobGroup()
+        drainListener()
+        more = started.get >= k
+        assert(k <= 8 || !more, s"refresh kept starting jobs: ${started.get}")
+        if (outcome.isFailure) cancelled += 1
+        // a refresh whose job was cancelled publishes nothing; one whose
+        // cancelled job had already finished publishes in full
+        val expected =
+          if (outcome.isFailure) before else before + (s"r$k" -> (300.0, 300L))
+        val got = scala.util.Try(state())
+        assert(got == scala.util.Success(expected),
+          s"after cancelling refresh job $k of ${started.get} ($outcome): $got")
+        ms.addData(rows(s"b$k", 20000L * k, 200): _*)
+        val q = SegmentSketches.sinkRefresh(ms.toDF().toDF("seg", "k"), "seg", "k", dir, cp)
+        assert(q.awaitTermination(120000))
+        assert(state() == expected + (s"b$k" -> (200.0, 200L)),
+          s"the sinkRefresh batch after cancelling refresh job $k must union into the stored sketches")
+        k += 1
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(cancelled > 0, "no refresh job was cancelled before it finished")
+  }
+
   test("q_text_chunk (#127): stride windows reconstruct every document exactly; overlap is W-S") {
     val W = graft.queries.TextModel.CHUNK_W
     val S = graft.queries.TextModel.CHUNK_S

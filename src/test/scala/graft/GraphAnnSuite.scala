@@ -101,7 +101,7 @@ class GraphAnnSuite extends GraftSuite {
     assert(probed == mem,
       "probe over the persisted index must return exactly the in-memory results")
     // re-save publishes v2 without touching v1; load follows to the
-    // newest committed version (the Versioned atomicity contract)
+    // newest committed version (the Publish atomicity contract)
     val half = e.filter(col("vec_id") % 2 === 0)
     val g2 = graft.api.NeighborGraphAnn.build(spark, half, "vec_id", "embedding")
     graft.api.NeighborGraphAnn.save(spark, dir, g2, half, "vec_id", "embedding")
@@ -124,6 +124,31 @@ class GraphAnnSuite extends GraftSuite {
       graft.api.NeighborGraphAnn.load(spark, dir)
     }
     assert(ex.getMessage.contains("format"), s"got: ${ex.getMessage}")
+  }
+
+  test("a save that fails while writing leaves the previous version answering; the retry takes its slot") {
+    val dir = java.nio.file.Files.createTempDirectory("gann_fail").toString
+    val e = Tables.embeddings(spark, sf0001)
+    val g = graft.api.NeighborGraphAnn.build(spark, e, "vec_id", "embedding")
+      .localCheckpoint(true)
+    graft.api.NeighborGraphAnn.save(spark, dir, g, e, "vec_id", "embedding")
+    val q = e.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    def probed() = graft.api.NeighborGraphAnn.topKLoaded(spark, dir, q, k = 5).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val want = probed()
+    // the edges land in the new slot, then the vectors write fails
+    val poisoned = e.withColumn("embedding",
+      when(col("vec_id") === 7L, raise_error(lit("vector write failed")))
+        .otherwise(col("embedding")))
+    intercept[Exception] {
+      graft.api.NeighborGraphAnn.save(spark, dir, g, poisoned, "vec_id", "embedding")
+    }
+    assert(new java.io.File(s"$dir/v2/edges").exists, "the failed save wrote into its slot")
+    assert(graft.api.NeighborGraphAnn.hasIndex(spark, dir))
+    assert(probed() == want, "the previous version must keep answering after a failed save")
+    assert(graft.api.NeighborGraphAnn.save(spark, dir, g, e, "vec_id", "embedding") == s"$dir/v2")
+    assert(probed() == want, "the retry publishes the same index in the failed save's slot")
   }
 
   test("incremental insert: held-out vectors wired in by search are findable at full-build recall") {

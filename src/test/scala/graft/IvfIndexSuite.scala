@@ -232,6 +232,30 @@ class IvfIndexSuite extends GraftSuite {
     }
   }
 
+  test("a rebuild that fails while writing its cells leaves the previous index answering; the retry takes its slot") {
+    val dir = build(Flat, 8)
+    val want = IvfIndex.query(spark, queryBatch, dir, topK = 3).collect().toSeq
+    // a 1-dim vector outside the half the quantizer trains on: training
+    // succeeds, and assigning it a cell fails the cells write's tasks
+    // (a range, not a local relation, so planning cannot fold it early)
+    val poisonId: Long = spark.range(1000000L, 1000100L)
+      .filter(pmod(hash(col("id")), lit(2)) =!= 0).head()
+    val poisoned = emb.select("vec_id", "embedding").unionByName(
+      spark.range(poisonId, poisonId + 1)
+        .select(col("id").as("vec_id"), array(lit(1.0f)).as("embedding")))
+    val failed = intercept[Exception] {
+      IvfIndex.build(spark, poisoned, dir, kCells = 8, trainSampleMod = 2)
+    }
+    assert(failed.getMessage.contains("same length"), s"the cells write must fail: $failed")
+    assert(versions(s"$dir/meta") == Seq("v1"), "a failed rebuild publishes no meta")
+    assert(IvfIndex.query(spark, queryBatch, dir, topK = 3).collect().toSeq == want,
+      "the previous index must keep answering after a failed rebuild")
+    IvfIndex.build(spark, emb, dir, kCells = 8)
+    assert(versions(s"$dir/cells") == Seq("v1", "v2"))
+    assert(IvfIndex.query(spark, queryBatch, dir, topK = 3).collect().toSeq == want,
+      "the retry rebuilds the same index in the failed attempt's slot")
+  }
+
   test("defaultCells: ~sqrt(n) with floor 16 and cap 65536 (r18 probe-measured sizing)") {
     // the r18 IVF probe measured the fixed-16 trap at 2M (probe cost
     // ~ n/16 per query, 130 ms/q) vs sqrt(n) cells (3.7 ms/q, recall

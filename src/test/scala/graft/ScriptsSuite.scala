@@ -39,4 +39,25 @@ class ScriptsSuite extends AnyFunSuite {
     assert(missing.isEmpty,
       s"README.md names files that do not exist: ${missing.toSeq.sorted.mkString(", ")}")
   }
+
+  test("src/main commits files and versions only through util/Publish.scala") {
+    val main = java.nio.file.Paths.get("src/main")
+    val publisher = main.resolve("scala/graft/util/Publish.scala")
+    // a rename, a Hadoop FileSystem create (a lowercase receiver: `fs.create(`,
+    // not `Literal.create(`), or the primitive's temp suffix or commit marker
+    val forbidden = Seq(
+      "rename" -> """\.rename\(""".r,
+      "FileSystem create" -> """(\b[a-z]\w*|\))\s*\.create\(""".r,
+      "temp suffix" -> "\"[^\"\n]*\\.(inprogress|tmp)\\b".r,
+      "commit marker" -> "_graft_committed".r)
+    val sources = java.nio.file.Files.walk(main).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != publisher).toSeq
+    assert(sources.size > 50, s"found only ${sources.size} sources under $main")
+    val hits = for {
+      p <- sources
+      (line, i) <- java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+      (what, re) <- forbidden if re.findFirstIn(line).isDefined
+    } yield s"${main.relativize(p)}:${i + 1}: $what: ${line.trim}"
+    assert(hits.isEmpty, s"publish outside util/Publish.scala:\n${hits.mkString("\n")}")
+  }
 }
